@@ -66,12 +66,13 @@ class LinkRankConfig:
     #: write per iteration).
     checkpoint_dir: str | None = None
     #: two-phase salted message aggregation for hub-skewed graphs.
-    #: "auto" (default) probes the in-degree distribution ONCE per run
-    #: (one map-side-combined aggregate over the already-persisted edge
-    #: relation) and enables salting only when a single hot target is both
-    #: large in absolute terms (> SALT_MIN_HOT_ROWS contribution rows) and
-    #: dominates an average shuffle partition (> SALT_HOT_KEY_FACTOR x) —
-    #: see operators/linkrank._resolve_salt_buckets. None disables; an int
+    #: "auto" (default) reads the in-degree distribution ONCE per run
+    #: (max/sum of the ``indeg`` column in the fixpoint driver's one
+    #: dispatch probe over the checkpointed initial state) and enables
+    #: salting only when a single hot target is both large in absolute
+    #: terms (> SALT_MIN_HOT_ROWS contribution rows) and dominates an
+    #: average shuffle partition (> SALT_HOT_KEY_FACTOR x) — see
+    #: operators/linkrank.Fixpoint.start. None disables; an int
     #: forces that bucket count. When on, the sum becomes
     #: groupBy(dst, hash(src)%N) then groupBy(dst), spreading each hot
     #: key over N reducers (r9 skew load test: 22.3x -> 3.0x exchange

@@ -14,9 +14,10 @@ exactly ONE equi-join + ONE aggregate and nothing else.
 
 Scale posture: per step the only shuffle is the groupBy(dst) message sum
 (map-side partial agg applies); vertices with no in-edges fall back to the
-base score via left-join coalesce.  Every step is lineage-checkpointed
-(same ~3^N re-execution guard as the rank loop).  The iteration count and
-α are a shared CONTRACT with the unrolled-CTE DuckDB oracle
+base score via left-join coalesce.  The loop runs on the shared driver
+(operators/linkrank.py:Fixpoint): edge layout, join dispatch and the
+per-step checkpoint barrier live there.  The iteration count and α are a
+shared CONTRACT with the unrolled-CTE DuckDB oracle
 (queries/compq.py:_katz_sql).
 """
 
@@ -25,12 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from giranking_spark.operators.linkrank import (
-    _checkpoint,
-    _checkpoint_nrows,
-    _maybe_broadcast,
-    _should_broadcast_state,
-)
+from giranking_spark.operators.linkrank import Fixpoint, all_vertex_ids
 
 KATZ_ALPHA = 0.05
 KATZ_ITERATIONS = 4
@@ -43,65 +39,34 @@ def katz_scores(
 ) -> DataFrame:
     """(id, katz) after ``iterations`` Katz steps from x₀ = 1, rounded to 6.
 
-    Scale shape (r13): scale-adaptive join dispatch — the previous
-    checkpointed edge relation had no stats, so Catalyst sort-merged the
-    per-step edges-x-state join and re-sorted the edges EVERY step. Now:
-    state under the broadcast threshold (the fixture regime) joins as a
-    BroadcastHashJoin that streams the checkpointed edges with NO exchange
-    or sort; past the threshold (the 100 TB regime) the edges are
-    hash-partitioned by ``src`` once and persisted so the SHUFFLE_HASH
-    join exchanges only the vertex-sized state per step. The message sum
-    keeps its map-side partial aggregation and the epilogue left join is
-    vertex-sized on both sides — both a fused union-aggregate variant and
-    an unconditional repartition+persist were measured SLOWER at fixture
-    scale (interleaved A/B; guide §1.1's fresh-ideal-plan gotcha).
+    Scale shape (r13): the driver's scale-adaptive join dispatch — state
+    under the broadcast threshold (the fixture regime) joins as a
+    BroadcastHashJoin that streams the persisted edges with NO exchange or
+    sort; past it (the 100 TB regime) the loop reads a hash(src) copy so
+    the SHUFFLE_HASH join exchanges only the vertex-sized state per step.
+    The message sum keeps its map-side partial aggregation and the
+    epilogue left join is vertex-sized on both sides — both a fused
+    union-aggregate variant and an unconditional repartition+persist were
+    measured SLOWER at fixture scale (interleaved A/B; guide §1.1's
+    fresh-ideal-plan gotcha).
     """
-    # persist (columnar, compressed), not _checkpoint (raw UnsafeRow
-    # blocks): at sf100 the row-block copy of the 600M-edge relation blew
-    # task memory during materialization where the columnar cache fits
-    # (r14 decade sweep). persist also lets BOTH copies be released
-    # explicitly — the r13 double-cache (ADVICE) came from the
-    # un-unpersistable initial checkpoint staying alive as the lineage
-    # parent of the repartitioned copy.
-    e = edges.select("src", "dst").persist()
-    # materialize the cache BEFORE the union-distinct below: its two
-    # branches would otherwise both compute the (expensive) edge
-    # derivation inside one job, racing the cache fill
-    e.count()
-    state, n = _checkpoint_nrows(
-        e.select(F.col("src").alias("id"))
-        .unionByName(e.select(F.col("dst").alias("id")))
-        .distinct()
-        .select("id", F.lit(1.0).alias("katz"))
+    fx = Fixpoint(edges.select("src", "dst"))
+    state = fx.start(
+        all_vertex_ids(None, fx.edges).select("id", F.lit(1.0).alias("katz"))
     )
-    bcast = _should_broadcast_state(e, n, state)
-    if not bcast:
-        width = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-        # swap to the hash(src) loop layout: materialize the partitioned
-        # copy from the cache, then free the unpartitioned one — steady
-        # state holds ONE columnar copy in the loop's layout
-        e2 = e.repartition(width, "src").persist()
-        e2.count()
-        e.unpersist()
-        e = e2
-    for _ in range(iterations):
-        sj = state.select(F.col("id").alias("src"), "katz")
-        s = _maybe_broadcast(sj, bcast) if bcast else sj.hint("shuffle_hash")
+
+    def step(state: DataFrame) -> DataFrame:
         sums = (
-            e.join(s, "src")
+            fx.join(state.select("id", "katz"))
             .groupBy(F.col("dst").alias("_tid"))
             .agg(F.sum("katz").alias("_msg"))
         )
-        state = _checkpoint(
-            state.join(sums, state["id"] == F.col("_tid"), "left").select(
-                "id",
-                (
-                    F.lit(1.0)
-                    + F.lit(alpha) * F.coalesce(F.col("_msg"), F.lit(0.0))
-                ).alias("katz"),
-            )
+        return state.join(sums, state["id"] == F.col("_tid"), "left").select(
+            "id",
+            (
+                F.lit(1.0) + F.lit(alpha) * F.coalesce(F.col("_msg"), F.lit(0.0))
+            ).alias("katz"),
         )
-    # state is checkpointed per iteration, so the returned plan never
-    # re-reads e — release it (r14 unpersist discipline)
-    e.unpersist()
+
+    state = fx.run(state, step, iterations)
     return state.select("id", F.round("katz", 6).alias("katz"))

@@ -8,11 +8,12 @@ deterministic, hence oracle-checkable (the classic async LPA is
 order-dependent; the sync+min-tiebreak variant is the reproducible form).
 
 Per round: one edges-x-state join on the persisted src-partitioned edge
-relation (broadcast / shuffle-hash dispatch, components-loop discipline)
-+ one groupBy(v, label) count + one per-vertex min(struct) top-1 — no
-window sort, no driver state, lineage checkpoint-truncated per round like
-every other fixpoint here. The FIXED round count is the contract with the
-unrolled-CTE oracle (queries/compq.py).
+relation (the shared driver's broadcast / shuffle-hash dispatch,
+operators/linkrank.py:Fixpoint) + one groupBy(v, label) count + one
+per-vertex min(struct) top-1 — no window sort, no driver state, lineage
+checkpoint-truncated per round like every other fixpoint here. The FIXED
+round count is the contract with the unrolled-CTE oracle
+(queries/compq.py).
 """
 
 from __future__ import annotations
@@ -20,31 +21,25 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from giranking_spark.operators.components import _join_state, undirected_edges
-from giranking_spark.operators.linkrank import (
-    _checkpoint,
-    _checkpoint_nrows,
-    _gc_nudge,
-    _should_broadcast_state,
-)
+from giranking_spark.operators.components import undirected_edges
+from giranking_spark.operators.linkrank import Fixpoint
 
 LPA_ROUNDS = 3
 
 
 def lpa_substrate(edges: DataFrame) -> DataFrame:
-    """The persisted hash(src)-partitioned deduped symmetrized relation the
-    LPA loop joins every round. Exposed so consumers that ALSO need the
-    undirected edge relation (graph_modularity's canon/degree epilogue) can
-    share the one exchange + persist instead of re-deriving and
-    re-shuffling the edges per reference (guide §2.4 — two operations keyed
-    the same way share one exchange). Caller owns the unpersist when passing
-    it into :func:`label_propagation`."""
+    """The hash(src)-partitioned deduped symmetrized relation the LPA loop
+    joins every round. Exposed so consumers that ALSO need the undirected
+    edge relation (graph_modularity's canon/degree epilogue) can persist it
+    once and share the one exchange instead of re-deriving and re-shuffling
+    the edges per reference (guide §2.4 — two operations keyed the same way
+    share one exchange). A caller that persists it and passes it into
+    :func:`label_propagation` keeps ownership of the unpersist."""
     width = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     return (
         undirected_edges(edges, dedup=False)
         .repartition(width, "src")
         .dropDuplicates(["src", "dst"])
-        .persist()
     )
 
 
@@ -59,7 +54,7 @@ def label_propagation(
 
     Scale shape (r13): the deduped symmetrized relation is hash-partitioned
     by ``src`` once and persisted, and the per-round edges-x-state join uses
-    the components-loop dispatch (broadcast the state when it fits, else
+    the fixpoint driver's dispatch (broadcast the state when it fits, else
     SHUFFLE_HASH with the state as build side) — the previous checkpointed
     relation had no stats, so Catalyst sort-merged the join and re-sorted
     the edge relation EVERY round. Layout and dedup share ONE exchange:
@@ -74,28 +69,26 @@ def label_propagation(
     full sort of the (v, label) relation and with map-side partial
     aggregation shrinking the second exchange.
 
-    ``substrate`` — a prebuilt :func:`lpa_substrate` relation; the caller
-    keeps ownership (no unpersist here) so its other consumers can keep
-    reading the cache after the loop returns."""
-    und = substrate if substrate is not None else lpa_substrate(edges)
-    state = und.select(F.col("src").alias("id")).distinct().select(
-        "id", F.col("id").alias("label")
+    ``substrate`` — a prebuilt, persisted :func:`lpa_substrate` relation;
+    the caller keeps ownership (no unpersist here) so its other consumers
+    can keep reading the cache after the loop returns."""
+    fx = Fixpoint(
+        substrate if substrate is not None else lpa_substrate(edges),
+        layout=None,
+        caller_owned=substrate is not None,
     )
-    state, n = _checkpoint_nrows(state)  # fused job; n gates GC nudge
-    bcast = _should_broadcast_state(und, n, state)
-    for _ in range(rounds):
-        nb = _join_state(und, state, bcast).select(
-            F.col("dst").alias("v"), "label"
-        )
+    state = fx.start(
+        fx.edges.select(F.col("src").alias("id"))
+        .distinct()
+        .select("id", F.col("id").alias("label"))
+    )
+
+    def step(state: DataFrame) -> DataFrame:
+        nb = fx.join(state).select(F.col("dst").alias("v"), "label")
         cnt = nb.groupBy("v", "label").agg(F.count(F.lit(1)).alias("c"))
         top = cnt.groupBy("v").agg(
             F.min(F.struct((-F.col("c")).alias("nc"), F.col("label"))).alias("t")
         )
-        state = _checkpoint(
-            top.select(F.col("v").alias("id"), F.col("t.label").alias("label"))
-        )
-        # same dead-shuffle lifecycle as linkrank_raw — see _gc_nudge
-        _gc_nudge(state, n)
-    if substrate is None:
-        und.unpersist()
-    return state
+        return top.select(F.col("v").alias("id"), F.col("t.label").alias("label"))
+
+    return fx.run(state, step, rounds)

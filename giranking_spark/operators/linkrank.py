@@ -9,7 +9,9 @@ The reference runs these as Giraph BSP vertex programs
 * aggregators      -> single-row aggregate DataFrames broadcast back into the
   plan (no driver-side collect inside the loop)
 * superstep loop   -> bounded Python loop, localCheckpoint() to truncate
-  lineage each iteration (SURVEY.md §4.2 #1)
+  lineage each iteration (SURVEY.md §4.2 #1); :class:`Fixpoint` is that loop
+  for the whole rank family (HITS, SALSA, PPR, Katz, OPIC, weighted
+  PageRank and label propagation run on it too)
 * normalization    -> one statement: avg/stddev_pop of log-scores + Normal-CDF
   squash (LinkRankComputation.java:216-255 spread over 3 supersteps collapses
   to a single Spark stage)
@@ -141,9 +143,10 @@ def _conf_int(spark, key: str, default: int) -> int:
 
 
 def _broadcast_rule(n: int, avg_id_width: float | None, thr: int) -> bool:
-    """The ONE broadcast-dispatch rule (r14, shared by the per-operator
-    probe and the fused rank probe so the two paths cannot diverge):
-    state broadcasts iff n·max(64, avg_id_width + overhead) ≤ thr."""
+    """The ONE broadcast-dispatch rule (shared by
+    :func:`_should_broadcast_state` and the :class:`Fixpoint` probe so the
+    two paths cannot diverge): state broadcasts iff
+    n·max(64, avg_id_width + overhead) ≤ thr."""
     if thr <= 0 or n <= 0:
         return False
     width = 64.0
@@ -203,73 +206,6 @@ SALT_HOT_KEY_FACTOR = 4.0
 SALT_MIN_HOT_ROWS = 100_000
 
 
-def _resolve_salt_buckets(
-    edges_x: DataFrame,
-    salt: int | str | None,
-    min_hot_rows: int | None = None,
-) -> int | None:
-    """Resolve cfg.salt_buckets: pass ints/None through; "auto" decides
-    from the measured in-degree skew. The probe is ONE map-side-combined
-    aggregate over the persisted edge relation per RUN (never per
-    iteration) — a <1% cost that avoids the 10x reducer-skew cliff a
-    spam-hub target causes at scale. Decision rule: salt iff the hottest
-    dst's contribution rows exceed both an absolute floor and
-    SALT_HOT_KEY_FACTOR x the average shuffle partition's rows."""
-    if salt != "auto":
-        return salt  # type: ignore[return-value]
-    if min_hot_rows is None:
-        min_hot_rows = SALT_MIN_HOT_ROWS  # read at call time (testable)
-    row = (
-        edges_x.groupBy("dst")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .agg(F.max("c").alias("mx"), F.sum("c").alias("tot"))
-        .first()
-    )
-    mx = int(row["mx"] or 0)
-    tot = int(row["tot"] or 0)
-    parts = _conf_int(edges_x.sparkSession, "spark.sql.shuffle.partitions", 200)
-    return _salt_rule(mx, tot, parts, min_hot_rows)
-
-
-def _probe_checkpointed_state(
-    state: DataFrame,
-    salt_cfg: int | str | None,
-    extras: list | None = None,
-):
-    """(n, bcast, salt, row) — ALL per-run loop-dispatch scalars from ONE
-    1-row aggregate over the checkpointed extended state (must carry
-    ``indeg``, see :func:`initial_state_ext`).
-
-    Replaces three separate probe jobs per rank run: the vertex count
-    (``state.count()``), the avg-id-width broadcast probe
-    (:func:`_should_broadcast_state`'s octet-length aggregate) and the
-    in-degree skew probe (:func:`_resolve_salt_buckets`'s |E|-shuffle
-    groupBy) — both decisions evaluate the SAME shared pure rules
-    (:func:`_broadcast_rule`, :func:`_salt_rule`) those helpers use, so
-    the resolved plan (and therefore every score) cannot diverge from the
-    per-helper path (r14, closing the copied-rule drift risk); only the
-    probe cost changes (|V| cached rows, one driver roundtrip).
-    ``extras`` appends caller aggregates (e.g. the trusted count) to the
-    same job; read them from the returned row."""
-    spark = state.sparkSession
-    row = state.agg(
-        F.count(F.lit(1)).alias("_n"),
-        F.avg(F.octet_length(F.col("id").cast("string"))).alias("_aw"),
-        F.max("indeg").alias("_mx"),
-        F.sum("indeg").alias("_tot"),
-        *(extras or []),
-    ).first()
-    n = int(row["_n"] or 0)
-    thr = _conf_int(spark, "spark.sql.autoBroadcastJoinThreshold", -1)
-    bcast = _broadcast_rule(n, row["_aw"], thr)
-    if salt_cfg != "auto":
-        return n, bcast, salt_cfg, row
-    mx, tot = int(row["_mx"] or 0), int(row["_tot"] or 0)
-    parts = _conf_int(spark, "spark.sql.shuffle.partitions", 200)
-    salt = _salt_rule(mx, tot, parts, SALT_MIN_HOT_ROWS)
-    return n, bcast, salt, row
-
-
 def _maybe_broadcast(df: DataFrame, do_broadcast: bool) -> DataFrame:
     return F.broadcast(df) if do_broadcast else df
 
@@ -284,16 +220,41 @@ def _state_side(df: DataFrame, do_broadcast: bool) -> DataFrame:
     return F.broadcast(df) if do_broadcast else df.hint("shuffle_hash")
 
 
+def _contribution_rows(
+    edges_x: DataFrame,
+    state: DataFrame,
+    salt_buckets: int | None = None,
+    broadcast_state: bool = False,
+) -> DataFrame:
+    """(dst, contrib) message rows: each src sends score/outdeg along every
+    out-edge (LinkRankComputation.java:266-283). With ``salt_buckets`` > 1
+    the rows are first pre-summed on (dst, hash(src) % N), so a spam-hub
+    target's mass is reduced across N reducers before the caller's final
+    per-target sum (SURVEY.md §4.2 #5)."""
+    s = _state_side(state.select(F.col("id"), F.col("score")), broadcast_state)
+    joined = edges_x.join(s, edges_x.src == F.col("id"))
+    contrib = (F.col("score") / F.col("outdeg")).alias("contrib")
+    if salt_buckets is None or salt_buckets <= 1:
+        return joined.select(F.col("dst"), contrib)
+    return (
+        joined.select(
+            F.col("dst"),
+            contrib,
+            F.pmod(F.xxhash64(edges_x.src), F.lit(salt_buckets)).alias("_salt"),
+        )
+        .groupBy("dst", "_salt")
+        .agg(F.sum("contrib").alias("contrib"))
+        .select("dst", "contrib")
+    )
+
+
 def contributions(
     edges_x: DataFrame, state: DataFrame, broadcast_state: bool = False
 ) -> DataFrame:
-    """Message generation: each src sends score/outdeg along every out-edge
-    (LinkRankComputation.java:266-283). With ``broadcast_state`` the edge
-    side is never shuffled or sorted — see :func:`_should_broadcast_state`."""
-    s = _state_side(state.select(F.col("id"), F.col("score")), broadcast_state)
-    return edges_x.join(s, edges_x.src == F.col("id")).select(
-        F.col("dst"), (F.col("score") / F.col("outdeg")).alias("contrib")
-    )
+    """Message generation: (dst, contrib) per out-edge. With
+    ``broadcast_state`` the edge side is never shuffled or sorted — see
+    :func:`_state_side`."""
+    return _contribution_rows(edges_x, state, None, broadcast_state)
 
 
 def message_sums(
@@ -305,22 +266,12 @@ def message_sums(
     """Per-target sum of incoming contributions (LinkRankComputation.java:193-196).
 
     ``salt_buckets``: two-phase salted aggregation for hub-skewed graphs —
-    partial sums on (dst, hash(src) % N), then the final sum on dst, so a
-    spam-hub target's mass is reduced across N reducers instead of one
-    (SURVEY.md §4.2 #5). Default single-phase relies on map-side partial
-    aggregation, which already caps a hot dst at one row per map task."""
-    if salt_buckets is None or salt_buckets <= 1:
-        return contributions(edges_x, state, broadcast_state).groupBy("dst").agg(
-            F.sum("contrib").alias("msg")
-        )
-    s = _state_side(state.select(F.col("id"), F.col("score")), broadcast_state)
-    salted = edges_x.join(s, edges_x.src == F.col("id")).select(
-        F.col("dst"),
-        (F.col("score") / F.col("outdeg")).alias("contrib"),
-        F.pmod(F.xxhash64(edges_x.src), F.lit(salt_buckets)).alias("_salt"),
-    )
-    partial = salted.groupBy("dst", "_salt").agg(F.sum("contrib").alias("_psum"))
-    return partial.groupBy("dst").agg(F.sum("_psum").alias("msg"))
+    partial sums on (dst, hash(src) % N), then the final sum on dst. Default
+    single-phase relies on map-side partial aggregation, which already caps
+    a hot dst at one row per map task."""
+    return _contribution_rows(
+        edges_x, state, salt_buckets, broadcast_state
+    ).groupBy("dst").agg(F.sum("contrib").alias("msg"))
 
 
 def fused_message_state(
@@ -348,22 +299,9 @@ def fused_message_state(
     whenever the aggregation tree happens to coincide and to 1 ulp
     otherwise (the oracles round to 6 decimals far above that).
     """
-    if salt_buckets is None or salt_buckets <= 1:
-        msg_rows = contributions(edges_x, state, broadcast_state).select(
-            F.col("dst").alias("id"), F.col("contrib")
-        )
-    else:
-        s = _state_side(state.select(F.col("id"), F.col("score")), broadcast_state)
-        salted = edges_x.join(s, edges_x.src == F.col("id")).select(
-            F.col("dst"),
-            (F.col("score") / F.col("outdeg")).alias("contrib"),
-            F.pmod(F.xxhash64(edges_x.src), F.lit(salt_buckets)).alias("_salt"),
-        )
-        msg_rows = (
-            salted.groupBy("dst", "_salt")
-            .agg(F.sum("contrib").alias("contrib"))
-            .select(F.col("dst").alias("id"), "contrib")
-        )
+    msg_rows = _contribution_rows(
+        edges_x, state, salt_buckets, broadcast_state
+    ).select(F.col("dst").alias("id"), "contrib")
     types = {f.name: f.dataType for f in state.schema.fields}
     for c in carry:
         msg_rows = msg_rows.withColumn(c, F.lit(None).cast(types[c]))
@@ -474,6 +412,128 @@ def _checkpoint_nrows(
     return ck, ck.count()
 
 
+class Fixpoint:
+    """The one driver of the rank-loop family: a bounded vertex program
+    over a static edge relation.
+
+    Pregelix (VLDB 2014) writes a Pregel superstep as a join of the vertex
+    state with the edge relation followed by a group-by. Every ranking loop
+    here has that shape and differs only in its initial state and its step
+    expression, which the operator supplies; the driver owns the rest:
+
+    * **edge layout** — the edge relation is persisted columnar (never a
+      localCheckpoint: raw row blocks of a 600M-edge relation blew task
+      memory at sf100). With ``layout="src"`` and a state too big to
+      broadcast, the loop reads a hash(src)-partitioned copy, so the
+      shuffle-hash join exchanges only the state; the input copy is
+      released after the first in-loop barrier has filled it, leaving ONE
+      copy at steady state. ``layout=None`` keeps the relation as given
+      (already src-laid-out, or read on both orientations).
+    * **dispatch probe** (:meth:`start`) — ONE 1-row aggregate over state0,
+      whose full scan also completes state0's lazy checkpoint, yields the
+      vertex count ``n``, the broadcast decision (:func:`_broadcast_rule`
+      on the measured id width), the salt decision (:func:`_salt_rule`;
+      only ``salt="auto"`` reads the ``indeg`` column) and the caller's
+      ``extras`` (``row``).
+    * **state side** (:meth:`join`) — broadcast when the state fits, else
+      shuffle-hash with the state as build side (:func:`_state_side`).
+    * **checkpointing** (:meth:`checkpoint`) — local, or reliable when a
+      ``checkpoint_dir`` is given; :meth:`run` places one after every
+      ``checkpoint_interval``-th superstep (0: the step places its own).
+    * **hygiene** — one :func:`_gc_nudge` per superstep, and every cache
+      the driver persisted is released when :meth:`run` returns. A
+      ``caller_owned`` relation is neither persisted nor released.
+    """
+
+    def __init__(
+        self,
+        edges: DataFrame,
+        layout: str | None = "src",
+        checkpoint_dir: str | None = None,
+        checkpoint_interval: int = 1,
+        caller_owned: bool = False,
+    ):
+        self.reliable = _set_checkpoint_dir_once(edges, checkpoint_dir)
+        self.interval = checkpoint_interval
+        self._layout = layout
+        if not caller_owned:
+            edges = edges.persist()
+        self.edges = edges
+        self._held = [] if caller_owned else [edges]  # released on return
+        self._stale: DataFrame | None = None  # input copy of a layout swap
+
+    def checkpoint(self, df: DataFrame) -> DataFrame:
+        """A superstep barrier in the run's checkpoint mode. Its full scan
+        of the edge relation fills a swapped layout copy, so the input copy
+        is released after the first one."""
+        df = _checkpoint(df, self.reliable)
+        if self._stale is not None:
+            self._stale.unpersist()
+            self._stale = None
+        return df
+
+    def start(
+        self, state: DataFrame, salt: int | str | None = None, extras=()
+    ) -> DataFrame:
+        """Checkpoint state0 (must carry ``id``, and ``indeg`` when
+        ``salt == "auto"``) and run the dispatch probe; returns the
+        checkpointed state and sets ``n``, ``bcast``, ``salt``, ``row``."""
+        # lazy: the probe's full scan fills the checkpoint in the same job
+        state = _checkpoint_lazy(state, self.reliable)
+        spark = state.sparkSession
+        probes = [
+            F.count(F.lit(1)).alias("_n"),
+            F.avg(F.octet_length(F.col("id").cast("string"))).alias("_aw"),
+        ]
+        if salt == "auto":
+            probes += [F.max("indeg").alias("_mx"), F.sum("indeg").alias("_tot")]
+        self.row = row = state.agg(*probes, *extras).first()
+        self.n = int(row["_n"] or 0)
+        thr = _conf_int(spark, "spark.sql.autoBroadcastJoinThreshold", -1)
+        self.bcast = _broadcast_rule(self.n, row["_aw"], thr)
+        parts = _conf_int(spark, "spark.sql.shuffle.partitions", 200)
+        self.salt = (
+            _salt_rule(
+                int(row["_mx"] or 0), int(row["_tot"] or 0), parts,
+                SALT_MIN_HOT_ROWS,  # read at call time (testable)
+            )
+            if salt == "auto"
+            else salt
+        )
+        if self._layout == "src" and self._held and self.n and not self.bcast:
+            self._stale = self.edges
+            self.edges = self.edges.repartition(parts, "src").persist()
+            self._held.append(self.edges)
+        return state
+
+    def join(self, state: DataFrame, on: str = "src") -> DataFrame:
+        """edges ⋈ state on edges[on] = state.id, state side dispatched."""
+        s = _state_side(state, self.bcast)
+        return self.edges.join(s, self.edges[on] == s["id"])
+
+    def run(self, state: DataFrame, step, iterations: int, observe=None):
+        """``iterations`` supersteps ``state = step(state)`` (none on an
+        empty graph); ``observe(k, state)`` sees each superstep's result.
+        Releases the driver's caches before returning the final state."""
+        try:
+            for k in range(1, (iterations if self.n else 0) + 1):
+                state = step(state)
+                if self.interval and k % self.interval == 0:
+                    state = self.checkpoint(state)
+                # each barrier leaves the previous superstep's shuffle dead
+                _gc_nudge(state, self.n)
+                if observe is not None:
+                    observe(k, state)
+        finally:
+            self.release()
+        return state
+
+    def release(self) -> None:
+        """Unpersist every cache the driver created."""
+        for df in self._held:
+            df.unpersist()
+
+
 def linkrank_raw(
     vertices: DataFrame | None,
     edges: DataFrame,
@@ -485,41 +545,24 @@ def linkrank_raw(
     and as the core of :func:`run_linkrank`."""
     if cfg.remove_duplicates:
         edges = dedup_edges(edges)
-
-    # persist the input edge relation for the run: the vertex union, the
-    # out-degree aggregate and the per-iteration join all consume it — without
-    # the cache the upstream derivation (at scale: the raw table scan) runs
-    # 3-4x before the first checkpoint lands
-    edges = edges.persist()
-    # the window formulation leaves edges_x hashpartitioned by src already
-    edges_x = edges_with_outdeg(edges).persist()
-    # initial_state consumes `vertices` twice (id union + score join); when the
-    # caller derives it from a relation scan, persist so the derivation runs once
-    if vertices is not None:
-        vertices = vertices.persist()
-
-    reliable = _set_checkpoint_dir_once(edges, cfg.checkpoint_dir)
-    state = _checkpoint(
-        initial_state_ext(vertices, edges, cfg.default_score), reliable
+    # the out-degree window leaves edges_x hash-partitioned by src: it is
+    # already the loop layout, and the only edge copy the run persists
+    fx = Fixpoint(
+        edges_with_outdeg(edges),
+        layout=None,
+        checkpoint_dir=cfg.checkpoint_dir,
+        checkpoint_interval=cfg.checkpoint_interval,
     )
-    # n (getTotalNumVertices, counted after implicit vertex creation),
-    # the broadcast decision and the salt decision all come from ONE 1-row
-    # aggregate over the checkpointed state — see _probe_checkpointed_state
-    n, bcast, salt, _ = _probe_checkpointed_state(state, cfg.salt_buckets)
-    state = state.drop("indeg")
-    if vertices is not None:
-        vertices.unpersist()
-    if n == 0:
-        edges_x.unpersist()
-        edges.unpersist()
-        return state
+    # n is getTotalNumVertices, counted after implicit vertex creation
+    state = fx.start(
+        initial_state_ext(vertices, fx.edges, cfg.default_score),
+        cfg.salt_buckets,
+    ).drop("indeg")
+    n, d, teleport = fx.n, cfg.damping, cfg.teleport
 
-    d, teleport = cfg.damping, cfg.teleport
-    updates = cfg.num_updates if num_updates is None else num_updates
-    for it in range(updates):
-        msgs = fused_message_state(edges_x, state, ["outdeg"], salt, bcast)
-        dang = dangling_mass(state)
-        new_state = msgs.crossJoin(F.broadcast(dang)).select(
+    def step(state: DataFrame) -> DataFrame:
+        msgs = fused_message_state(fx.edges, state, ["outdeg"], fx.salt, fx.bcast)
+        return msgs.crossJoin(F.broadcast(dangling_mass(state))).select(
             "id",
             (
                 F.lit(teleport / n)
@@ -527,18 +570,9 @@ def linkrank_raw(
             ).alias("score"),
             "outdeg",
         )
-        state = (
-            _checkpoint(new_state, reliable)
-            if (it + 1) % cfg.checkpoint_interval == 0
-            else new_state
-        )
-        # r12: at the third decade each superstep's fused groupBy(id)
-        # exchange writes ~10+ GB of map-side partials (contrib rows are
-        # dst-scattered across the src-partitioned layout) — see _gc_nudge
-        _gc_nudge(state, n)
-    edges_x.unpersist()
-    edges.unpersist()
-    return state
+
+    updates = cfg.num_updates if num_updates is None else num_updates
+    return fx.run(state, step, updates)
 
 
 def run_linkrank(
@@ -578,68 +612,53 @@ def trustrank_raw(
     (tests/test_scale_plans.py locks this)."""
     if cfg.remove_duplicates:
         edges = dedup_edges(edges)
-
-    edges = edges.persist()  # same scan-amplification guard as linkrank_raw
-    edges_x = edges_with_outdeg(edges).persist()  # window: partitioned by src
-    if vertices is not None:
-        vertices = vertices.persist()
-
-    reliable = _set_checkpoint_dir_once(edges, cfg.checkpoint_dir)
-    state = initial_state_ext(vertices, edges, cfg.default_score)
-    # trusted detection at superstep 0 (TrustRankComputation.java:203-211):
-    # initial score within epsilon of 1.0
-    state = _checkpoint(
-        state.withColumn("trusted", (F.abs(F.col("score") - 1.0) < cfg.trusted_epsilon)),
-        reliable,
+    fx = Fixpoint(
+        edges_with_outdeg(edges),
+        layout=None,
+        checkpoint_dir=cfg.checkpoint_dir,
+        checkpoint_interval=cfg.checkpoint_interval,
     )
-    # n, num_trusted (IntSumAggregator NUM_TRUSTED), broadcast and salt
-    # decisions: ONE 1-row aggregate (see _probe_checkpointed_state)
-    n, bcast, salt, row = _probe_checkpointed_state(
-        state,
+    state = initial_state_ext(vertices, fx.edges, cfg.default_score)
+    # trusted detection at superstep 0 (TrustRankComputation.java:203-211):
+    # initial score within epsilon of 1.0; num_trusted (IntSumAggregator
+    # NUM_TRUSTED) rides the dispatch probe
+    state = fx.start(
+        state.withColumn("trusted", F.abs(F.col("score") - 1.0) < cfg.trusted_epsilon),
         cfg.salt_buckets,
         extras=[F.sum(F.col("trusted").cast("long")).alias("_nt")],
-    )
-    num_trusted = int(row["_nt"] or 0)
-    state = state.drop("indeg")
-    if vertices is not None:
-        vertices.unpersist()
-    if n == 0:
-        edges_x.unpersist()
-        edges.unpersist()
-        return state
+    ).drop("indeg")
+    num_trusted = int(fx.row["_nt"] or 0)
 
     # trusted-SET membership (the `trusteds.contains(...)` test, :220-224) —
     # distinct from the trusted FLAG: bug #2 makes "" a permanent member
     member = F.col("trusted")
     if cfg.bug_compat_empty_member:
         member = member | (F.col("id") == "")
-
-    d, teleport = cfg.damping, cfg.teleport
-    updates = cfg.num_updates if num_updates is None else num_updates
-    for it in range(updates):
-        msgs = fused_message_state(
-            edges_x, state, ["outdeg", "trusted"], salt, bcast
-        )
-        dang = dangling_mass(state)
-        if cfg.bug_compat:
-            dangling_term = F.lit(0.0)
-        elif num_trusted == 0:
-            if cfg.bug_compat_nan_dangling:
-                # Java: danglingSum / 0.0 (:321-329). Spark's Divide returns
-                # NULL on a zero divisor, so the IEEE result is spelled out.
-                java_div0 = (
-                    F.when(F.col("dangling") > 0, F.lit(float("inf")))
-                    .when(F.col("dangling") < 0, F.lit(float("-inf")))
-                    .otherwise(F.lit(float("nan")))
-                )
-                dangling_term = F.when(member, java_div0).otherwise(F.lit(0.0))
-            else:
-                dangling_term = F.lit(0.0)
+    if cfg.bug_compat:
+        dangling_term = F.lit(0.0)
+    elif num_trusted == 0:
+        if cfg.bug_compat_nan_dangling:
+            # Java: danglingSum / 0.0 (:321-329). Spark's Divide returns
+            # NULL on a zero divisor, so the IEEE result is spelled out.
+            java_div0 = (
+                F.when(F.col("dangling") > 0, F.lit(float("inf")))
+                .when(F.col("dangling") < 0, F.lit(float("-inf")))
+                .otherwise(F.lit(float("nan")))
+            )
+            dangling_term = F.when(member, java_div0).otherwise(F.lit(0.0))
         else:
-            dangling_term = F.when(
-                member, F.col("dangling") / num_trusted
-            ).otherwise(F.lit(0.0))
-        new_state = msgs.crossJoin(F.broadcast(dang)).select(
+            dangling_term = F.lit(0.0)
+    else:
+        dangling_term = F.when(
+            member, F.col("dangling") / num_trusted
+        ).otherwise(F.lit(0.0))
+    n, d, teleport = fx.n, cfg.damping, cfg.teleport
+
+    def step(state: DataFrame) -> DataFrame:
+        msgs = fused_message_state(
+            fx.edges, state, ["outdeg", "trusted"], fx.salt, fx.bcast
+        )
+        return msgs.crossJoin(F.broadcast(dangling_mass(state))).select(
             "id",
             (
                 F.lit(teleport / n)
@@ -648,16 +667,9 @@ def trustrank_raw(
             "outdeg",
             "trusted",
         )
-        state = (
-            _checkpoint(new_state, reliable)
-            if (it + 1) % cfg.checkpoint_interval == 0
-            else new_state
-        )
-        # same dead-shuffle lifecycle as linkrank_raw — see _gc_nudge
-        _gc_nudge(state, n)
-    edges_x.unpersist()
-    edges.unpersist()
-    return state
+
+    updates = cfg.num_updates if num_updates is None else num_updates
+    return fx.run(state, step, updates)
 
 
 def run_trustrank(

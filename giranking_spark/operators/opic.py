@@ -15,11 +15,12 @@ Synchronous batch formulation over a graph with N vertices:
                 hist += cash;  cash := incoming mass
     importance(v) = hist(v) + cash(v)   (cash-invariant: Σ cash ≡ 1)
 
-Scale posture: outdeg is attached once and checkpointed; each superstep is
-ONE equi-join + ONE aggregate, with the dangling total riding back as a
-broadcast single-row cross join (the sanctioned scalar-attach pattern,
-identical to agg_dangling_sum in operators/linkrank.py).  Iteration count
-is a shared CONTRACT with the unrolled-CTE DuckDB oracle
+Scale posture: outdeg is attached once in the checkpointed state; each
+superstep is ONE equi-join + ONE aggregate, with the dangling total riding
+back as a broadcast single-row cross join (the sanctioned scalar-attach
+pattern, identical to agg_dangling_sum in operators/linkrank.py) and N the
+shared driver's probed vertex count (operators/linkrank.py:Fixpoint).
+Iteration count is a shared CONTRACT with the unrolled-CTE DuckDB oracle
 (queries/crawlq.py:_opic_sql).
 """
 
@@ -28,11 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from giranking_spark.operators.linkrank import (
-    _checkpoint,
-    _maybe_broadcast,
-    _should_broadcast_state,
-)
+from giranking_spark.operators.linkrank import Fixpoint
 
 OPIC_ITERATIONS = 4
 
@@ -43,69 +40,39 @@ def opic_scores(edges: DataFrame, iterations: int = OPIC_ITERATIONS) -> DataFram
     Scale shape (r13): the state init builds (id, outdeg) for every
     vertex (incl. implicit/dangling) from ONE union-groupBy instead of
     distinct + degree aggregate + left join (three exchanges → one, the
-    initial_state_ext pattern). Per step the cash-share join dispatches
-    scale-adaptively (katz_scores discipline): broadcast while the state
-    fits — the checkpointed edges stream with NO exchange or sort — and
-    SHUFFLE_HASH on a hash(src)-persisted layout past the threshold, so
-    the 100 TB regime exchanges only vertex-sized state per step. The
+    initial_state_ext pattern). Per step the cash-share join uses the
+    driver's scale-adaptive dispatch (see katz_scores). The
     incoming-mass aggregate keeps its map-side partial aggregation and
     the epilogue left join is vertex-sized on both sides (a fused
     union-aggregate variant was measured SLOWER at fixture scale —
     interleaved A/B 4.89 vs 6.10 s — it ships every message row through a
     5-function aggregate; guide §1.1's fresh-ideal-plan gotcha)."""
-    # persist (columnar), not _checkpoint (raw row blocks) — see katz.py:
-    # both copies become releasable and the sf100 materialization fits;
-    # the eager count fills the cache before the union below fans out
-    e = edges.select("src", "dst").persist()
-    e.count()
-    st0 = (
-        e.select(F.col("src").alias("id"), F.lit(1).alias("_out"))
-        .unionByName(e.select(F.col("dst").alias("id"), F.lit(0).alias("_out")))
+    fx = Fixpoint(edges.select("src", "dst"))
+    base = fx.start(
+        fx.edges.select(F.col("src").alias("id"), F.lit(1).alias("_out"))
+        .unionByName(fx.edges.select(F.col("dst").alias("id"), F.lit(0).alias("_out")))
         .groupBy("id")
         .agg(F.sum("_out").cast("long").alias("outdeg"))
     )
-    # graph size N rides as a broadcast 1-row scalar (the sanctioned
-    # scalar-attach pattern — no driver-side action) and is carried through
-    # the state so every step's dangling redistribution divides by it
-    nn = st0.agg(F.count(F.lit(1)).cast("double").alias("_n"))
-    state = _checkpoint(
-        st0.crossJoin(F.broadcast(nn)).select(
-            "id",
-            "outdeg",
-            (F.lit(1.0) / F.col("_n")).alias("cash"),
-            F.lit(0.0).alias("hist"),
-            "_n",
-        )
-    )
-    n_verts = state.count()  # cached blocks — cheap; decides the dispatch
-    bcast = _should_broadcast_state(e, n_verts, state)
-    if not bcast:
-        width = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-        # swap to the hash(src) loop layout and free the unpartitioned
-        # copy — ONE columnar copy in steady state (see katz.py)
-        e2 = e.repartition(width, "src").persist()
-        e2.count()
-        e.unpersist()
-        e = e2
-    for _ in range(iterations):
+    n = float(fx.n)
+
+    def step(state: DataFrame) -> DataFrame:
         # outdeg > 0 filter BEFORE the share division: ANSI mode
         # evaluates the projection on dangling rows even though the
         # inner join would prune them (same class as the r3
         # trust-flag cast fix).
-        sj = state.filter(F.col("outdeg") > 0).select(
-            F.col("id").alias("src"),
-            (F.col("cash") / F.col("outdeg")).alias("_share"),
+        shares = state.filter(F.col("outdeg") > 0).select(
+            "id", (F.col("cash") / F.col("outdeg")).alias("_share")
         )
-        s = _maybe_broadcast(sj, bcast) if bcast else sj.hint("shuffle_hash")
         inc = (
-            e.join(s, "src")
+            fx.join(shares)
             .groupBy(F.col("dst").alias("_tid"))
             .agg(F.sum("_share").alias("_in"))
         )
         dang = state.filter(F.col("outdeg") == 0).agg(
             F.coalesce(F.sum("cash"), F.lit(0.0)).alias("_dang")
         )
-        state = _checkpoint(
+        return (
             state.join(inc, state["id"] == F.col("_tid"), "left")
             .crossJoin(F.broadcast(dang))
             .select(
@@ -113,12 +80,15 @@ def opic_scores(edges: DataFrame, iterations: int = OPIC_ITERATIONS) -> DataFram
                 "outdeg",
                 (
                     F.coalesce(F.col("_in"), F.lit(0.0))
-                    + F.col("_dang") / F.col("_n")
+                    + F.col("_dang") / F.lit(n)
                 ).alias("cash"),
                 (F.col("hist") + F.col("cash")).alias("hist"),
-                "_n",
             )
         )
-    # state is checkpointed per iteration — release the edge cache
-    e.unpersist()
+
+    # an empty graph runs no step, so its (absent) rows need no 1/N
+    state = base.select(
+        "id", "outdeg", F.lit(1.0 / max(n, 1.0)).alias("cash"), F.lit(0.0).alias("hist")
+    )
+    state = fx.run(state, step, iterations)
     return state.select("id", F.round(F.col("hist") + F.col("cash"), 6).alias("opic"))

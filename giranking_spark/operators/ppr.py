@@ -12,9 +12,10 @@ Per iteration (d = damping, S = seed set, D = dangling mass):
 
     r'(v) = (1-d)·1_S(v)/|S| + d·( Σ_{u→v} r(u)/outdeg(u) + D·1_S(v)/|S| )
 
-Scale shape is the rank loop's: one fused union-aggregate shuffle per
-iteration (fused_message_state), dangling mass and |S| ride as broadcast
-single-row cross joins, lineage checkpoint-truncated per iteration. The
+Scale shape is the rank loop's, on the shared driver
+(operators/linkrank.py:Fixpoint): one fused union-aggregate shuffle per
+iteration (fused_message_state), the dangling mass rides as a broadcast
+single-row cross join, |S| rides the driver's dispatch probe. The
 iteration count is a contract with the unrolled-CTE oracle in
 queries/compq.py.
 """
@@ -25,11 +26,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from giranking_spark.operators.linkrank import (
-    _checkpoint,
-    _gc_nudge,
-    _probe_checkpointed_state,
+    Fixpoint,
     dangling_mass,
     edges_with_outdeg,
+    fused_message_state,
     initial_state_ext,
 )
 
@@ -51,50 +51,35 @@ def ppr_scores(
     vector is uniform over vertices matching ``seed_pred`` (a SQL boolean
     expression over ``id``, evaluated identically by the oracle)."""
     teleport = 1.0 - damping  # float64, embedded verbatim in the oracle SQL
-    e = edges.select("src", "dst").persist()
+    fx = Fixpoint(edges_with_outdeg(edges.select("src", "dst")), layout=None)
     seed = F.when(F.expr(seed_pred), 1.0).otherwise(0.0)
-    # vertex set + out-degrees in ONE shuffle (initial_state_ext) instead of
-    # the union-distinct + degree-aggregate + join chain; the seed flag is a
-    # projection over the result. The checkpointed base is the run's only
-    # |V| materialization — the previous shape executed the base relation
-    # twice (once for the seed-count aggregate, once for state0).
-    base = _checkpoint(
-        initial_state_ext(None, e).select(
-            "id", "outdeg", "indeg", seed.alias("seed")
-        )
+    # vertex set + out-degrees in ONE shuffle (initial_state_ext); the seed
+    # flag is a projection over it, and the seed count rides the probe
+    base = fx.start(
+        initial_state_ext(None, fx.edges).select("id", "outdeg", seed.alias("seed")),
+        extras=[F.sum("seed").alias("_sns")],
     )
-    # n, the broadcast decision and the seed count ride ONE 1-row aggregate
-    n, bcast, _, row = _probe_checkpointed_state(
-        base, None, extras=[F.sum("seed").alias("_sns")]
-    )
-    ns = float(row["_sns"] or 0.0)
+    ns = float(fx.row["_sns"] or 0.0)
     # seed mass share, 0/0-safe: on a seedless graph every seed is 0, the
     # when() never evaluates the division, and the share is exactly 0.0
     # (mirrored in the oracle). ns is an exact small-integer-valued double,
     # so the literal divides bit-identically to the former column.
     share = F.when(F.col("seed") > 0, F.col("seed") / F.lit(ns)).otherwise(0.0)
-    state = base.select("id", share.alias("score"), "outdeg", "seed")
-    ex = edges_with_outdeg(e).persist()
-    from giranking_spark.operators.linkrank import fused_message_state
 
-    for _ in range(iterations):
+    def step(state: DataFrame) -> DataFrame:
         msgst = fused_message_state(
-            ex, state, carry=["outdeg", "seed"], broadcast_state=bcast
+            fx.edges, state, ["outdeg", "seed"], None, fx.bcast
         )
-        d_mass = dangling_mass(state)
-        state = _checkpoint(
-            msgst.crossJoin(F.broadcast(d_mass)).select(
-                "id",
-                (
-                    F.lit(teleport) * share
-                    + F.lit(damping) * (F.col("msg") + F.col("dangling") * share)
-                ).alias("score"),
-                "outdeg",
-                "seed",
-            )
+        return msgst.crossJoin(F.broadcast(dangling_mass(state))).select(
+            "id",
+            (
+                F.lit(teleport) * share
+                + F.lit(damping) * (F.col("msg") + F.col("dangling") * share)
+            ).alias("score"),
+            "outdeg",
+            "seed",
         )
-        # same dead-shuffle lifecycle as linkrank_raw — see _gc_nudge
-        _gc_nudge(state, n)
-    e.unpersist()
-    ex.unpersist()
+
+    state = base.select("id", share.alias("score"), "outdeg", "seed")
+    state = fx.run(state, step, iterations)
     return state.select("id", F.round("score", 6).alias("score"))

@@ -11,11 +11,13 @@ walk instead of raw sums.  Third iterative ranking family next to LinkRank
     hub(u)  = Σ auth(v) / indeg(v)   over edges u→v,  then L1-normalize
 
 Scale posture: the weighted edge relation (1/outdeg, 1/indeg attached) is
-built once with two partial-agg shuffles and checkpointed; each half-step
-is then ONE equi-join + ONE aggregate, with the L1 total riding back as a
-broadcast single-row cross join (the sanctioned scalar-attach pattern).
-Every half-step is lineage-checkpointed — same ~3^N re-execution guard as
-the rank loop (operators/linkrank.py:fused_message_state rationale).
+built once with two partial-agg shuffles and persisted by the shared
+driver (operators/linkrank.py:Fixpoint), which also dispatches the state
+join; each half-step is then ONE equi-join + ONE aggregate, with the L1
+total riding back as a broadcast single-row cross join (the sanctioned
+scalar-attach pattern). Every half-step is lineage-checkpointed — same
+~3^N re-execution guard as the rank loop
+(operators/linkrank.py:fused_message_state rationale).
 
 The iteration count is a shared CONTRACT with the unrolled-CTE DuckDB
 oracle (queries/compq.py:_salsa_sql), like HITS and LinkRank.
@@ -26,7 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from giranking_spark.operators.linkrank import _checkpoint
+from giranking_spark.operators.hits import _l1_normalized
+from giranking_spark.operators.linkrank import Fixpoint, all_vertex_ids
 
 SALSA_ITERATIONS = 2
 
@@ -46,45 +49,38 @@ def _weighted_edges(edges: DataFrame) -> DataFrame:
 
 
 def _half_step(
-    ew: DataFrame, state: DataFrame, src_col: str, dst_col: str,
+    fx: Fixpoint, state: DataFrame, src_col: str, dst_col: str,
     weight: str, from_score: str, to_score: str,
 ) -> DataFrame:
     """to_score(x) = Σ from_score(y)·weight over src_col→dst_col edges,
     L1-normalized; the other score column carries through unchanged."""
     sums = (
-        ew.join(
-            state.select(F.col("id"), F.col(from_score)),
-            ew[src_col] == F.col("id"),
-        )
-        .groupBy(ew[dst_col].alias("_tid"))
+        fx.join(state.select("id", from_score), on=src_col)
+        .groupBy(F.col(dst_col).alias("_tid"))
         .agg(F.sum(F.col(from_score) * F.col(weight)).alias("_raw"))
     )
-    raw = _checkpoint(
-        state.join(sums, state["id"] == F.col("_tid"), "left").select(
-            "id", from_score,
-            F.coalesce(F.col("_raw"), F.lit(0.0)).alias("_raw"),
-        )
+    raw = state.join(sums, state["id"] == F.col("_tid"), "left").select(
+        "id", from_score, F.coalesce(F.col("_raw"), F.lit(0.0)).alias("_raw")
     )
-    total = raw.agg(F.sum("_raw").alias("_l1"))
-    return raw.crossJoin(F.broadcast(total)).select(
-        "id", from_score,
-        (F.col("_raw") / F.col("_l1")).alias(to_score),
-    )
+    return _l1_normalized(fx, raw, from_score, to_score)
 
 
 def salsa_scores(edges: DataFrame, iterations: int = SALSA_ITERATIONS) -> DataFrame:
     """(id, hub, auth) after ``iterations`` SALSA rounds, rounded to 6."""
-    ew = _checkpoint(_weighted_edges(edges))
-    state = _checkpoint(
-        ew.select(F.col("src").alias("id"))
-        .unionByName(ew.select(F.col("dst").alias("id")))
-        .distinct()
-        .select("id", F.lit(1.0).alias("hub"), F.lit(1.0).alias("auth"))
+    # the half-steps place their own barriers (checkpoint_interval=0)
+    fx = Fixpoint(_weighted_edges(edges), checkpoint_interval=0)
+    state = fx.start(
+        all_vertex_ids(None, fx.edges).select(
+            "id", F.lit(1.0).alias("hub"), F.lit(1.0).alias("auth")
+        )
     )
-    for _ in range(iterations):
+
+    def step(state: DataFrame) -> DataFrame:
         # auth half-step reads hub over u→v, hub half-step reads NEW auth
-        state = _half_step(ew, state, "src", "dst", "wout", "hub", "auth")
-        state = _half_step(ew, state, "dst", "src", "win", "auth", "hub")
+        state = _half_step(fx, state, "src", "dst", "wout", "hub", "auth")
+        return _half_step(fx, state, "dst", "src", "win", "auth", "hub")
+
+    state = fx.run(state, step, iterations)
     return state.select(
         "id", F.round("hub", 6).alias("hub"), F.round("auth", 6).alias("auth")
     )

@@ -253,7 +253,7 @@ def q_graph_modularity(
     # construction — 'c' vs 's' prefixes), and the degree groupBy runs
     # exchange-free on the persisted layout. Previously canon and deg each
     # re-derived the edges and paid their own full-edge distinct shuffle.
-    und = lpa_substrate(e)
+    und = lpa_substrate(e).persist()
     labels = label_propagation(e, substrate=und).persist()
     canon = und.filter(F.col("src") <= F.col("dst")).select(
         F.col("src").alias("u"), F.col("dst").alias("v")

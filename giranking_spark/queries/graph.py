@@ -13,6 +13,8 @@ both sides.
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -395,42 +397,38 @@ def q_rank_residuals(spark: SparkSession, sf_dir: str) -> DataFrame:
     costs ZERO extra joins — one 1-row aggregate off the already-built
     state."""
     cfg = LinkRankConfig()
-    edges = derive_edges(spark, sf_dir)
-    edges_x = lr.edges_with_outdeg(edges).persist()
-    state = lr._checkpoint(lr.initial_state(None, edges, cfg.default_score))
-    n = state.count()
-    d, teleport = cfg.damping, cfg.teleport
-    residuals = []
-    for it in range(1, RESID_UPDATES + 1):
-        fused = lr.fused_message_state(edges_x, state, ["outdeg", "score"])
-        dang = lr.dangling_mass(state)
-        stepped = lr._checkpoint(
-            fused.crossJoin(F.broadcast(dang)).select(
-                "id",
-                (
-                    F.lit(teleport / n)
-                    + F.lit(d) * (F.col("msg") + F.col("dangling") / n)
-                ).alias("new_score"),
-                "outdeg",
-                F.col("score").alias("prev_score"),
-            )
+    fx = lr.Fixpoint(lr.edges_with_outdeg(derive_edges(spark, sf_dir)), layout=None)
+    state = fx.start(lr.initial_state(None, fx.edges, cfg.default_score))
+    n, d, teleport = fx.n, cfg.damping, cfg.teleport
+
+    def step(state: DataFrame) -> DataFrame:
+        fused = lr.fused_message_state(
+            fx.edges, state, ["outdeg", "score"], None, fx.bcast
         )
+        return fused.crossJoin(F.broadcast(lr.dangling_mass(state))).select(
+            "id",
+            (
+                F.lit(teleport / n)
+                + F.lit(d) * (F.col("msg") + F.col("dangling") / n)
+            ).alias("score"),
+            "outdeg",
+            F.col("score").alias("prev_score"),
+        )
+
+    residuals = []
+
+    def residual(k: int, stepped: DataFrame) -> None:
         residuals.append(
             stepped.agg(
-                F.lit(it).alias("k"),
+                F.lit(k).alias("k"),
                 F.round(
-                    F.sum(F.abs(F.col("new_score") - F.col("prev_score"))), 6
+                    F.sum(F.abs(F.col("score") - F.col("prev_score"))), 6
                 ).alias("l1_residual"),
             )
         )
-        state = stepped.select(
-            "id", F.col("new_score").alias("score"), "outdeg"
-        )
-    out = residuals[0]
-    for r in residuals[1:]:
-        out = out.unionByName(r)
-    edges_x.unpersist()
-    return out
+
+    fx.run(state, step, RESID_UPDATES, observe=residual)
+    return functools.reduce(DataFrame.unionByName, residuals)
 
 
 def _residuals_sql(updates: int) -> str:

@@ -62,6 +62,18 @@ QUERY_KEYS = [
     "text_quality_deciles",
     "search_hybrid_rrf",
     "graph_transitivity",
+    # the rank-loop family: every cache the fixpoint driver
+    # (operators/linkrank.py:Fixpoint) persists is released on return
+    "linkrank_scores",
+    "trustrank_scores",
+    "rank_residuals",
+    "graph_ppr",
+    "graph_weighted_rank",
+    "graph_katz",
+    "crawl_opic_scores",
+    "graph_hits",
+    "graph_salsa",
+    "graph_label_prop",
 ]
 
 

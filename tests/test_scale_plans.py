@@ -350,6 +350,47 @@ def test_fused_rank_step_single_shuffle(spark):
     assert "BatchEvalPython" not in plan
 
 
+#: Spark jobs each rank-loop query launched (build + noop write at
+#: SF_SMALL) at the commit before its loop moved onto the shared fixpoint
+#: driver (operators/linkrank.py:Fixpoint); the driver must add none.
+FIXPOINT_JOBS_BEFORE = {
+    "linkrank_scores": 60,
+    "trustrank_scores": 29,
+    "rank_residuals": 37,
+    "graph_ppr": 38,
+    "graph_weighted_rank": 32,
+    "graph_katz": 33,
+    "crawl_opic_scores": 45,
+    "graph_hits": 32,
+    "graph_salsa": 47,
+    "graph_label_prop": 23,
+}
+
+
+@pytest.mark.parametrize("key", sorted(FIXPOINT_JOBS_BEFORE))
+def test_fixpoint_job_count_not_above_before(spark, key):
+    """Per-run job count of every ported rank loop, read from its job
+    group. Counted under the engine session's broadcast threshold
+    (session.get_spark sets it as a plain byte count; the dispatch probe
+    cannot read Spark's default '10485760b' string and then never
+    broadcasts)."""
+    from giranking_spark.queries import QUERIES
+
+    sc = spark.sparkContext
+    old_thr = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+    group = f"fixpoint-jobs-{key}"
+    sc.setJobGroup(group, key)
+    try:
+        QUERIES[key](spark, SF_SMALL).write.format("noop").mode("overwrite").save()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thr)
+    n = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert n <= FIXPOINT_JOBS_BEFORE[key], (key, n)
+
+
 def test_neardup_cluster_edges_never_cartesian(spark):
     """The cluster-dedup candidate stage must stay a banded equi-join:
     no CartesianProduct / BroadcastNestedLoopJoin anywhere in the pair
@@ -955,16 +996,10 @@ def test_wave13_plan_shapes(spark):
     # the half-step checkpoints truncate lineage, so disable them to see
     # the INNER join shape: the state join must be an equi-join
     # (hashed/merged), never a cartesian
-    import giranking_spark.operators.salsa as salsa_mod
-
-    orig = salsa_mod._checkpoint
-    salsa_mod._checkpoint = lambda df, reliable=False: df
-    try:
+    with lazy_checkpoints():
         inner = plan_of(
             salsa_scores(derive_edges(spark, SF_SMALL), iterations=1)
         )
-    finally:
-        salsa_mod._checkpoint = orig
     assert "CartesianProduct" not in inner
     assert (
         "SortMergeJoin" in inner

@@ -114,36 +114,45 @@ def test_salted_message_sum_partial_rows_bounded(spark, hub_edges):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thr)
 
 
+def _probed_salt(edges, salt="auto"):
+    """The rank loops' salt decision from the fixpoint driver's one
+    dispatch probe (no superstep runs)."""
+    from giranking_spark.operators.linkrank import (
+        Fixpoint,
+        edges_with_outdeg,
+        initial_state_ext,
+    )
+
+    fx = Fixpoint(edges_with_outdeg(edges), layout=None)
+    fx.start(initial_state_ext(None, fx.edges), salt)
+    fx.release()
+    return fx.salt
+
+
 def test_auto_salt_decision_flips_on_hub_off_on_uniform(spark, hub_edges):
     """The "auto" default probes in-degree skew once per run: ON for the
     in-hub fixture (hot dst dominates), OFF for a uniform graph, and ints/
     None pass through untouched. The absolute floor is lowered to test
-    scale — a separate test pins that the production floor keeps the
-    shipped fixtures unsalted."""
-    from giranking_spark.operators.linkrank import (
-        SALT_AUTO_BUCKETS,
-        _resolve_salt_buckets,
-        edges_with_outdeg,
-    )
+    scale through the module constant — a separate test pins that the
+    production floor keeps the shipped fixtures unsalted."""
+    import giranking_spark.operators.linkrank as lr
 
-    ex = edges_with_outdeg(hub_edges)
+    old_floor = lr.SALT_MIN_HOT_ROWS
     old_parts = spark.conf.get("spark.sql.shuffle.partitions")
+    lr.SALT_MIN_HOT_ROWS = 1000
     spark.conf.set("spark.sql.shuffle.partitions", "64")  # cluster-like
     try:
-        assert (
-            _resolve_salt_buckets(ex, "auto", min_hot_rows=1000)
-            == SALT_AUTO_BUCKETS
-        )
+        assert _probed_salt(hub_edges) == lr.SALT_AUTO_BUCKETS
         uniform = spark.range(5000).select(
             F.concat(F.lit("a"), F.pmod(F.xxhash64("id"), F.lit(500))).alias("src"),
             F.concat(F.lit("b"), F.pmod(F.xxhash64("id", F.lit(3)), F.lit(500))).alias("dst"),
         )
-        assert _resolve_salt_buckets(edges_with_outdeg(uniform), "auto",
-                                     min_hot_rows=1000) is None
-        # pass-throughs never probe
-        assert _resolve_salt_buckets(ex, None) is None
-        assert _resolve_salt_buckets(ex, 8) == 8
+        assert _probed_salt(uniform) is None
+        # pass-throughs are not decided by the probe
+        assert _probed_salt(hub_edges, None) is None
+        assert _probed_salt(hub_edges, 8) == 8
     finally:
+        lr.SALT_MIN_HOT_ROWS = old_floor
         spark.conf.set("spark.sql.shuffle.partitions", old_parts)
 
 
@@ -152,15 +161,10 @@ def test_auto_salt_production_floor_keeps_fixtures_unsalted(spark):
     (and by extension every shipped fixture, whose hottest in-degree is
     orders of magnitude below 100k) resolves to the single-phase plan —
     prior rounds' driver value hashes stay bit-identical."""
-    from giranking_spark.operators.linkrank import (
-        _resolve_salt_buckets,
-        edges_with_outdeg,
-    )
     from giranking_spark.sources.tables import derive_edges
     from tests.conftest import SF_SMALL
 
-    ex = edges_with_outdeg(derive_edges(spark, SF_SMALL))
-    assert _resolve_salt_buckets(ex, "auto") is None
+    assert _probed_salt(derive_edges(spark, SF_SMALL)) is None
 
 
 def test_auto_salted_fixpoint_scores_match_forced_off(spark, hub_edges):

@@ -85,16 +85,22 @@ def main() -> None:
     # in-hub's 1M contribution rows clear both the absolute floor and the
     # 4x-average-partition bar) and OFF on the uniform sf0.1 derived graph.
     from giranking_spark.operators.linkrank import (
-        _resolve_salt_buckets,
+        Fixpoint,
         edges_with_outdeg,
+        initial_state_ext,
     )
     from giranking_spark.sources.tables import derive_edges
 
-    hub_decision = _resolve_salt_buckets(edges_with_outdeg(edges), "auto")
+    def auto_salt(e):
+        # the rank loops' own dispatch probe, without running a superstep
+        fx = Fixpoint(edges_with_outdeg(e), layout=None)
+        fx.start(initial_state_ext(None, fx.edges), "auto")
+        fx.release()
+        return fx.salt
+
+    hub_decision = auto_salt(edges)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    uni_decision = _resolve_salt_buckets(
-        edges_with_outdeg(derive_edges(spark, sf_dir)), "auto"
-    )
+    uni_decision = auto_salt(derive_edges(spark, sf_dir))
     print(json.dumps({
         "measure": "auto_salt_decision",
         "hub_fixture": hub_decision or 0,
