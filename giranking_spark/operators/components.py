@@ -8,11 +8,14 @@ is what makes an exact DuckDB oracle possible (recursive CTE over the same
 undirected edge set; queries/compq.py).
 
 Scale notes:
-- Per iteration: one shuffle (groupBy dst of the propagated labels) + one
-  join back to state; lineage is truncated every step with the same
-  localCheckpoint/reliable-checkpoint discipline as the rank loop
-  (operators/linkrank.py:_checkpoint) — state_{i+1} references state_i
-  twice, so an uncheckpointed plan grows exponentially.
+- Components, BFS, SSSP and per-seed BFS run on the rank loops' fixpoint
+  driver (operators/linkrank.py:Fixpoint) in its convergence mode, with
+  one shared superstep (linkrank.py:min_relax): the frontier's messages
+  joined from the edges, unioned with the state's own rows, one
+  min-aggregate shuffle. The driver owns the edge cache, the dispatch
+  probe, the per-superstep checkpoint barrier (state_{i+1} references
+  state_i twice, so an uncheckpointed plan grows exponentially), the GC
+  nudge and the release of the cache.
 - Iteration count is bounded by the graph diameter. For web/host graphs the
   effective diameter is small (tens); for adversarial chain graphs the
   large-star/small-star transform (Kiveris et al., "Connected Components in
@@ -24,54 +27,24 @@ Scale notes:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from giranking_spark.operators.linkrank import (
+    Fixpoint,
     _checkpoint,
-    _checkpoint_count,
     _checkpoint_nrows,
     _gc_nudge,
-    _maybe_broadcast,
     _set_checkpoint_dir_once,
     _should_broadcast_state,
+    _state_side,
+    min_relax,
+    pointer_double,
 )
 
 #: hard cap on propagation rounds — a backstop against pathological
 #: diameters, far above any web-graph effective diameter.
 MAX_ITERATIONS = 50
-
-
-def _join_state(und: DataFrame, state: DataFrame, bcast: bool):
-    """The per-round edges-x-state join, scale-shaped for both regimes.
-
-    Broadcast regime (state under the threshold): broadcast-hash join, the
-    edge relation is untouched. Shuffle regime (big state — the 100 TB
-    case): SHUFFLE_HASH hint with the vertex-sized state as build side, so
-    the src-partitioned persisted edge relation satisfies the join's
-    distribution requirement as-is and only the state is exchanged. The
-    default sort-merge strategy would re-SORT the edge relation every
-    round (the sort, unlike the partitioning, is not persisted) — measured
-    15x superlinear at the sf1->sf10 decade."""
-    s = _maybe_broadcast(state, bcast) if bcast else state.hint("shuffle_hash")
-    return und.join(s, und.src == s.id)
-
-
-def _approx_n_vertices(und: DataFrame) -> int:
-    """Estimated distinct vertex count for the broadcast-dispatch probe,
-    from ONE 1-row aggregate scan of the (persisted) symmetrized relation.
-    The exact ``select(src).distinct().count()`` probe this replaces paid a
-    full |E| exchange before the loop even started (guide §2.4 — a distinct
-    on data used only for a size estimate). The number only picks the join
-    STRATEGY (broadcast vs shuffle-hash) and gates the GC nudge — never
-    results — and the scan still materializes the persisted relation as a
-    side effect, exactly like the count it replaces. The estimate is made
-    ONE-SIDED (r14): HLL++'s ~2% relative error could undercount right at
-    the broadcast threshold and broadcast a state that is actually over
-    the limit (a perf/driver-memory hazard, never a results one), so the
-    returned count is inflated by 5% — an overcount only ever falls back
-    to the always-safe shuffle-hash regime."""
-    return int(und.agg(F.approx_count_distinct("src")).first()[0] * 1.05)
 
 
 def undirected_edges(edges: DataFrame, dedup: bool = True) -> DataFrame:
@@ -87,6 +60,25 @@ def undirected_edges(edges: DataFrame, dedup: bool = True) -> DataFrame:
     return und.distinct() if dedup else und
 
 
+def _und_fixpoint(und: DataFrame, checkpoint_dir: str | None) -> Fixpoint:
+    """The fixpoint driver of the symmetrized-relation loops below.
+
+    The relation is hash-partitioned by src ONCE and persisted by the
+    driver: every superstep joins on src, so the persisted layout
+    satisfies the join's distribution requirement and the edges are never
+    reshuffled or re-sorted again — supersteps exchange only the
+    vertex-sized state (broadcast, else the shuffle-hash build side).
+    Measured at sf10 (1.6M vertices, 117M und rows, state past the
+    broadcast threshold): the previous coalesce-only layout re-exchanged
+    the edges every round (258s total); this layout pays one up-front edge
+    shuffle and each relax round streams the cache (151s total,
+    ~12s/round)."""
+    width = int(und.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    return Fixpoint(
+        und.repartition(width, "src"), layout=None, checkpoint_dir=checkpoint_dir
+    )
+
+
 def connected_components(
     edges: DataFrame,
     max_iterations: int = MAX_ITERATIONS,
@@ -97,106 +89,43 @@ def connected_components(
     ``edges`` is treated as undirected. Vertices are implicit (every id
     appearing as src or dst), matching the rank loop's implicit-vertex
     semantics (operators/linkrank.py).
+
+    Each superstep is a :func:`min_relax` of the frontier's labels; at a
+    relax fixpoint every edge's endpoints already share a label, so the
+    loop stops there, before a doubling pass that could change nothing.
+    Otherwise a :func:`pointer_double` pass behind its own barrier follows.
     """
-    # hash-partition the symmetrized union by src ONCE and persist: every
-    # round joins on src, so the persisted layout satisfies the join's
-    # distribution requirement and the edge relation is never reshuffled or
-    # re-sorted again — rounds exchange only the vertex-sized state (the
-    # shuffle-hash build side, see _join_state). Measured at sf10 (1.6M
-    # vertices, 117M und rows, state past the broadcast threshold): the
-    # previous coalesce-only layout re-exchanged the edges every round
-    # (258s total); this layout pays one up-front edge shuffle and each
-    # relax round streams the cache (151s total, ~12s/round).
-    width = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    und = undirected_edges(edges, dedup=False).repartition(width, "src").persist()
-    state = (
-        und.select(F.col("src").alias("id"))
+    fx = _und_fixpoint(undirected_edges(edges, dedup=False), checkpoint_dir)
+    state = fx.start(
+        fx.edges.select(F.col("src").alias("id"))
         .distinct()
         .select("id", F.col("id").alias("component"))
     )
-    reliable = _set_checkpoint_dir_once(state, checkpoint_dir)
-    # localCheckpoint erases size stats, so Catalyst can never auto-broadcast
-    # loop state — decide once from the exact vertex count (same discipline
-    # as the rank loop). Broadcast state means the big edge relation is
-    # NEVER reshuffled across rounds; huge graphs fall back to shuffle joins.
-    # (checkpoint + count fused into one job — see _checkpoint_nrows)
-    state, n_verts = _checkpoint_nrows(state, reliable)
-    bcast = _should_broadcast_state(und, n_verts, state)
-    # Frontier (delta) messaging: only vertices whose label changed last
-    # round send to their neighbors. A message from an unchanged vertex is
-    # a byte-for-byte duplicate of the one it sent the round after it last
-    # changed, and min() is idempotent — so every per-round state is
-    # IDENTICAL to full messaging while the edges-x-state join shrinks
-    # from |reached| to |frontier| rows (total message volume O(|E|)
-    # instead of O(diameter x |E|) — guide §2.2, shuffle fewer bytes).
-    frontier = state
-    for _ in range(max_iterations):
-        # Relax pass as ONE union + min-aggregation (no left join): each
-        # vertex's new label = min over {own label} ∪ {frontier-neighbor
-        # labels}. Tagging the self row lets the same aggregate recover the
-        # old label, so change detection costs no extra join. One shuffle.
-        nbr = _join_state(und, frontier, bcast).select(
-            F.col("dst").alias("id"), "component"
-        )
-        mixed = nbr.withColumn("_self", F.lit(False)).unionByName(
-            state.withColumn("_self", F.lit(True))
-        )
-        relaxed = (
-            mixed.groupBy("id")
-            .agg(
-                F.min("component").alias("component"),
-                F.min(F.when(F.col("_self"), F.col("component"))).alias("_old"),
-            )
-            .select(
-                "id",
-                "component",
-                (F.col("component") < F.col("_old")).alias("_changed"),
-            )
-        )
-        relaxed, changed = _checkpoint_count(relaxed, "_changed", reliable)
-        state = relaxed.drop("_changed")
-        # same dead-shuffle lifecycle as the rank/peel loops — see
-        # linkrank._gc_nudge (BASELINE.md round-12 cliff 1)
-        _gc_nudge(state, n_verts)
-        # Relax-fixpoint test BEFORE the doubling pass: at a relax fixpoint
-        # every edge's endpoints already share a label (min over the closed
-        # neighborhood is stable in both directions), so doubling can't
-        # change anything and the final round skips its cost entirely.
-        if changed == 0:
-            break
-        # Pointer-doubling shortcut: component <- component(component) drops
-        # convergence from O(diameter) to O(log diameter) rounds. Joining
-        # against the CHECKPOINTED state keeps this pass cheap — the relax
-        # plan is never re-executed to build the lookup side. The doubling
-        # pass carries the round's change flag through (relax OR doubling
-        # improved the label) so the next frontier includes vertices whose
-        # label moved in EITHER pass, with their post-doubling labels.
-        lookup = _maybe_broadcast(
-            state.select(F.col("id").alias("_lid"), F.col("component").alias("_lcomp")),
-            bcast,
-        )
-        doubled = _checkpoint(
-            relaxed.join(
-                lookup, relaxed.component == lookup._lid, "left"
-            ).select(
-                "id",
-                F.least(
-                    F.col("component"), F.coalesce(F.col("_lcomp"), F.col("component"))
-                ).alias("component"),
-                (
-                    F.col("_changed")
-                    | (
-                        F.coalesce(F.col("_lcomp"), F.col("component"))
-                        < F.col("component")
-                    )
-                ).alias("_chg"),
-            ),
-            reliable,
-        )
-        state = doubled.drop("_chg")
-        frontier = doubled.filter(F.col("_chg")).drop("_chg")
-    und.unpersist()
-    return state
+    return fx.run(
+        state,
+        lambda s: min_relax(fx, s, "component"),
+        max_iterations,
+        converge=True,
+        then=lambda s: pointer_double(fx, s, "component"),
+    )
+
+
+def _distances(
+    und: DataFrame,
+    state0: DataFrame,
+    msg: Column,
+    cap: int,
+    checkpoint_dir: str | None,
+    keys: tuple[str, ...] = ("id",),
+) -> DataFrame:
+    """Min-distance propagation from seed rows (BFS, SSSP, per-seed BFS):
+    a :func:`min_relax` of ``dist`` with message ``msg`` per superstep, at
+    most ``cap`` supersteps — the hop bound the oracles share. The state is
+    sized for the broadcast decision by the vertices it can reach, not by
+    its seeds (``Fixpoint.start(seeded=True)``)."""
+    fx = _und_fixpoint(und, checkpoint_dir)
+    state = fx.start(state0, keys=keys, seeded=True)
+    return fx.run(state, lambda s: min_relax(fx, s, "dist", msg), cap, converge=True)
 
 
 def component_sizes(components: DataFrame) -> DataFrame:
@@ -220,56 +149,18 @@ def bfs_distances(
     ``max_depth`` is a CONTRACT, not just a safety valve: vertices farther
     than max_depth hops are absent, which is also exactly what the
     depth-bounded recursive-CTE oracle computes — parity holds by
-    construction at any depth cutoff. Per level: one groupBy shuffle + one
-    outer join, lineage checkpoint-truncated like the rank loop; converges
-    in eccentricity(seeds) rounds, far under the cap on web-shaped graphs.
+    construction at any depth cutoff. Converges in eccentricity(seeds)
+    supersteps, far under the cap on web-shaped graphs; a vertex's dist is
+    final the superstep it is first reached, so the frontier is exactly
+    the newly reached set.
     """
-    width = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    und = undirected_edges(edges, dedup=False).repartition(width, "src").persist()
-    state = seeds.select("id", F.lit(0).cast("long").alias("dist"))
-    reliable = _set_checkpoint_dir_once(state, checkpoint_dir)
-    state = _checkpoint(state, reliable)
-    # state is bounded by the vertex count; decide broadcast once from it
-    # (see connected_components) so the edge side never reshuffles per level
-    bcast = _should_broadcast_state(und, _approx_n_vertices(und), state)
-    # frontier messaging: in BFS a vertex's dist is final the round it is
-    # first reached, so only newly-reached vertices (last round's _changed
-    # set) need to send — re-sends from the settled interior are exact
-    # duplicates that min() ignores. Per-level join input drops from
-    # |reached| to |frontier|; every per-level state is identical.
-    frontier = state
-    for _ in range(max_depth):
-        # One union + min-aggregation per level (no outer join): new dist =
-        # min over {own dist} ∪ {frontier-neighbor dist + 1}; the tagged
-        # self row recovers the old dist so change detection is free (same
-        # pattern as connected_components).
-        nbr = _join_state(und, frontier, bcast).select(
-            F.col("dst").alias("id"), (F.col("dist") + 1).alias("dist")
-        )
-        mixed = nbr.withColumn("_self", F.lit(False)).unionByName(
-            state.withColumn("_self", F.lit(True))
-        )
-        merged = (
-            mixed.groupBy("id")
-            .agg(
-                F.min("dist").alias("dist"),
-                F.min(F.when(F.col("_self"), F.col("dist"))).alias("_old"),
-            )
-            .select(
-                "id",
-                "dist",
-                (F.col("_old").isNull() | (F.col("dist") < F.col("_old"))).alias(
-                    "_changed"
-                ),
-            )
-        )
-        merged, changed = _checkpoint_count(merged, "_changed", reliable)
-        state = merged.drop("_changed")
-        frontier = merged.filter(F.col("_changed")).drop("_changed")
-        if changed == 0:
-            break
-    und.unpersist()
-    return state
+    return _distances(
+        undirected_edges(edges, dedup=False),
+        seeds.select("id", F.lit(0).cast("long").alias("dist")),
+        F.col("dist") + 1,
+        max_depth,
+        checkpoint_dir,
+    )
 
 
 KCORE_K = 2
@@ -344,7 +235,7 @@ def kcore_peel(
     bcast = _should_broadcast_state(adj, n_alive, deg)
     for _ in range(rounds):
         dead = deg.filter(F.col("degree") < k).select("id")
-        d = _maybe_broadcast(dead, bcast) if bcast else dead.hint("shuffle_hash")
+        d = _state_side(dead, bcast)
         upd = (
             adj.join(d, adj.src == d.id, "inner")
             .select(F.explode("nbrs").alias("id"))
@@ -397,55 +288,20 @@ def sssp_distances(
     (BIGINT) so distance sums are exact in every engine; derive scaled
     integer weights upstream for fractional costs.
 
-    Scale design mirrors the BFS loop: the symmetrized edge relation is
-    persisted once at shuffle width; each round is one equi-join + one
-    union + one min-aggregation (a single shuffle on vertex id); state
-    lineage is checkpoint-truncated per round; the convergence test ships
-    one scalar per round. Weights must be non-negative (the early-exit
+    Same driver and superstep as :func:`bfs_distances`, with ``dist + w``
+    messages (delta Bellman-Ford: only vertices whose dist improved last
+    round relax their edges). Weights must be non-negative (the early-exit
     fires when no distance improves, which a negative cycle would defeat;
     the hop-bounded result itself stays well-defined either way)."""
-    width = int(wedges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     fwd = wedges.select("src", "dst", "w")
     rev = wedges.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "w")
-    und = fwd.unionByName(rev).repartition(width, "src").persist()
-    state = seeds.select("id", F.lit(0).cast("long").alias("dist"))
-    reliable = _set_checkpoint_dir_once(state, checkpoint_dir)
-    state = _checkpoint(state, reliable)
-    bcast = _should_broadcast_state(und, _approx_n_vertices(und), state)
-    # frontier messaging (delta Bellman-Ford): only vertices whose dist
-    # improved last round relax their out-edges — the textbook queue-based
-    # refinement; re-sends from unimproved vertices are duplicates of the
-    # round after they last improved, and min() ignores duplicates, so
-    # every hop-bounded per-round state (the oracle CONTRACT) is identical.
-    frontier = state
-    for _ in range(max_rounds):
-        nbr = _join_state(und, frontier, bcast).select(
-            F.col("dst").alias("id"), (F.col("dist") + F.col("w")).alias("dist")
-        )
-        mixed = nbr.withColumn("_self", F.lit(False)).unionByName(
-            state.withColumn("_self", F.lit(True))
-        )
-        merged = (
-            mixed.groupBy("id")
-            .agg(
-                F.min("dist").alias("dist"),
-                F.min(F.when(F.col("_self"), F.col("dist"))).alias("_old"),
-            )
-            .select(
-                "id",
-                "dist",
-                (F.col("_old").isNull() | (F.col("dist") < F.col("_old"))).alias(
-                    "_changed"
-                ),
-            )
-        )
-        merged, changed = _checkpoint_count(merged, "_changed", reliable)
-        state = merged.drop("_changed")
-        frontier = merged.filter(F.col("_changed")).drop("_changed")
-        if changed == 0:
-            break
-    und.unpersist()
-    return state
+    return _distances(
+        fwd.unionByName(rev),
+        seeds.select("id", F.lit(0).cast("long").alias("dist")),
+        F.col("dist") + F.col("w"),
+        max_rounds,
+        checkpoint_dir,
+    )
 
 
 def connected_components_star(
@@ -559,7 +415,7 @@ def connected_components_star(
     for _ in range(max_rounds):
         # one large+small alternation per materialization — fusing two was
         # measured SLOWER at fixture scale (the nested sym-union plan costs
-        # Catalyst more than the saved job; same lesson as STEPS_PER_CHECK)
+        # Catalyst more than the saved job)
         e = _checkpoint(_small(_large(e)), reliable)
         # exact convergence test, ONE scalar: the pair list is a star forest
         # (= the alternation's fixpoint — both phases are no-ops on a star
@@ -598,49 +454,19 @@ def per_seed_bfs(
     """(seed, id, dist) — per-seed undirected hop distances, all seeds in
     ONE fixpoint: the state is keyed (seed, id), so k seeds cost k× state
     rows, not k separate propagations (the standard multi-probe trick for
-    eccentricity / diameter estimation). Same fused union+min superstep,
-    checkpoint discipline, and depth-cap CONTRACT as bfs_distances — the
-    depth-bounded recursive-CTE oracle computes the identical cutoff."""
-    width = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    und = undirected_edges(edges, dedup=False).repartition(width, "src").persist()
-    state = seeds.select(
-        F.col("id").alias("seed"), "id", F.lit(0).cast("long").alias("dist")
+    eccentricity / diameter estimation) — and the broadcast decision sizes
+    it that way. Same superstep and depth-cap CONTRACT as bfs_distances —
+    the depth-bounded recursive-CTE oracle computes the identical cutoff."""
+    return _distances(
+        undirected_edges(edges, dedup=False),
+        seeds.select(
+            F.col("id").alias("seed"), "id", F.lit(0).cast("long").alias("dist")
+        ),
+        F.col("dist") + 1,
+        max_depth,
+        checkpoint_dir,
+        keys=("seed", "id"),
     )
-    reliable = _set_checkpoint_dir_once(state, checkpoint_dir)
-    state = _checkpoint(state, reliable)
-    bcast = _should_broadcast_state(und, _approx_n_vertices(und))
-    # frontier messaging — see bfs_distances: only (seed, id) pairs reached
-    # last level send; settled pairs would re-send exact duplicates
-    frontier = state
-    for _ in range(max_depth):
-        nbr = _join_state(und, frontier, bcast).select(
-            "seed", F.col("dst").alias("id"), (F.col("dist") + 1).alias("dist")
-        )
-        mixed = nbr.withColumn("_self", F.lit(False)).unionByName(
-            state.withColumn("_self", F.lit(True))
-        )
-        merged = (
-            mixed.groupBy("seed", "id")
-            .agg(
-                F.min("dist").alias("dist"),
-                F.min(F.when(F.col("_self"), F.col("dist"))).alias("_old"),
-            )
-            .select(
-                "seed",
-                "id",
-                "dist",
-                (
-                    F.col("_old").isNull() | (F.col("dist") < F.col("_old"))
-                ).alias("_changed"),
-            )
-        )
-        merged, changed = _checkpoint_count(merged, "_changed", reliable)
-        state = merged.drop("_changed")
-        frontier = merged.filter(F.col("_changed")).drop("_changed")
-        if changed == 0:
-            break
-    und.unpersist()
-    return state
 
 
 #: full-decomposition contract constants (shared with the unrolled oracle):

@@ -30,7 +30,7 @@ step, LinkRankComputation.java:280-282).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from giranking_spark.config import LinkRankConfig, TrustRankConfig
@@ -440,6 +440,11 @@ class Fixpoint:
     * **checkpointing** (:meth:`checkpoint`) — local, or reliable when a
       ``checkpoint_dir`` is given; :meth:`run` places one after every
       ``checkpoint_interval``-th superstep (0: the step places its own).
+    * **convergence** (``run(converge=True)``, the min-relax loops: see
+      :func:`min_relax`) — every superstep's barrier also counts the rows
+      its step flagged ``_changed``, in the same job
+      (:func:`_checkpoint_count`); the loop stops at the first superstep
+      that changes nothing, or at the caller's cap.
     * **hygiene** — one :func:`_gc_nudge` per superstep, and every cache
       the driver persisted is released when :meth:`run` returns. A
       ``caller_owned`` relation is neither persisted nor released.
@@ -461,6 +466,8 @@ class Fixpoint:
         self.edges = edges
         self._held = [] if caller_owned else [edges]  # released on return
         self._stale: DataFrame | None = None  # input copy of a layout swap
+        self.keys: tuple[str, ...] = ("id",)  # the state's key (start)
+        self.changed = 0  # rows the last converge-mode barrier counted
 
     def checkpoint(self, df: DataFrame) -> DataFrame:
         """A superstep barrier in the run's checkpoint mode. Its full scan
@@ -473,22 +480,49 @@ class Fixpoint:
         return df
 
     def start(
-        self, state: DataFrame, salt: int | str | None = None, extras=()
+        self,
+        state: DataFrame,
+        salt: int | str | None = None,
+        extras=(),
+        keys: tuple[str, ...] = ("id",),
+        seeded: bool = False,
     ) -> DataFrame:
-        """Checkpoint state0 (must carry ``id``, and ``indeg`` when
+        """Checkpoint state0 (must carry ``keys``, and ``indeg`` when
         ``salt == "auto"``) and run the dispatch probe; returns the
-        checkpointed state and sets ``n``, ``bcast``, ``salt``, ``row``."""
+        checkpointed state and sets ``n``, ``bcast``, ``salt``, ``row``.
+
+        ``n`` is state0's row count, unless ``seeded``: then state0 holds
+        only seed rows and grows along the edges to every vertex they
+        reach, so ``n`` bounds the grown state — the edges' distinct ``src``
+        ids (an HLL estimate read in the same job, inflated 5% so its ~2%
+        error can only overcount and fall back to the always-safe
+        shuffle-hash join), once per seed row when the state is keyed by
+        more than ``id``. The row width is measured over ``keys``."""
         # lazy: the probe's full scan fills the checkpoint in the same job
         state = _checkpoint_lazy(state, self.reliable)
+        self.keys = keys
         spark = state.sparkSession
+        rows, n_rows = state, F.count(F.lit(1))
+        if seeded:
+            rows = state.withColumn("_s", F.lit(1)).unionByName(
+                self.edges.select(F.col("src").alias("_v")),
+                allowMissingColumns=True,
+            )
+            n_rows = F.count("_s")
+        widths = [F.octet_length(F.col(k).cast("string")) for k in keys]
         probes = [
-            F.count(F.lit(1)).alias("_n"),
-            F.avg(F.octet_length(F.col("id").cast("string"))).alias("_aw"),
+            n_rows.alias("_n"),
+            F.avg(sum(widths[1:], widths[0])).alias("_aw"),
         ]
+        if seeded:
+            probes.append(F.approx_count_distinct("_v").alias("_nv"))
         if salt == "auto":
             probes += [F.max("indeg").alias("_mx"), F.sum("indeg").alias("_tot")]
-        self.row = row = state.agg(*probes, *extras).first()
+        self.row = row = rows.agg(*probes, *extras).first()
         self.n = int(row["_n"] or 0)
+        if seeded:
+            reach = int((row["_nv"] or 0) * 1.05)
+            self.n = reach * (self.n if len(keys) > 1 else 1)
         thr = _conf_int(spark, "spark.sql.autoBroadcastJoinThreshold", -1)
         self.bcast = _broadcast_rule(self.n, row["_aw"], thr)
         parts = _conf_int(spark, "spark.sql.shuffle.partitions", 200)
@@ -511,27 +545,120 @@ class Fixpoint:
         s = _state_side(state, self.bcast)
         return self.edges.join(s, self.edges[on] == s["id"])
 
-    def run(self, state: DataFrame, step, iterations: int, observe=None):
+    def run(
+        self,
+        state: DataFrame,
+        step,
+        iterations: int,
+        observe=None,
+        converge: bool = False,
+        then=None,
+    ):
         """``iterations`` supersteps ``state = step(state)`` (none on an
         empty graph); ``observe(k, state)`` sees each superstep's result.
-        Releases the driver's caches before returning the final state."""
+        Releases the driver's caches before returning the final state.
+
+        ``converge`` is the min-relax loops' mode: every superstep is
+        barriered and counted on the step's ``_changed`` flag, the loop
+        stops at the first one that changes nothing (``iterations`` is
+        only the cap; ``changed`` > 0 after the return means the cap was
+        hit), and the flag is dropped from the result. ``then`` is a second
+        pass behind its own barrier after every superstep that changed
+        something (the components' pointer doubling)."""
         try:
             for k in range(1, (iterations if self.n else 0) + 1):
                 state = step(state)
-                if self.interval and k % self.interval == 0:
+                if converge:
+                    state, self.changed = _checkpoint_count(
+                        state, "_changed", self.reliable
+                    )
+                elif self.interval and k % self.interval == 0:
                     state = self.checkpoint(state)
                 # each barrier leaves the previous superstep's shuffle dead
                 _gc_nudge(state, self.n)
                 if observe is not None:
                     observe(k, state)
+                if converge and not self.changed:
+                    break
+                if then is not None:
+                    state = self.checkpoint(then(state))
         finally:
             self.release()
-        return state
+        return state.drop("_changed") if converge else state
 
     def release(self) -> None:
         """Unpersist every cache the driver created."""
         for df in self._held:
             df.unpersist()
+
+
+def min_relax(
+    fx: Fixpoint, state: DataFrame, value: str, msg: Column | None = None
+) -> DataFrame:
+    """One min-relax superstep on ``fx`` (components, BFS, SSSP, per-seed
+    BFS, SCC reach labels): the frontier sends ``msg`` (an expression over
+    edges ⋈ frontier; default its ``value``) to every ``dst``, and each
+    key's new ``value`` is the min over its own row and its messages. ONE
+    union + min-aggregate shuffle, no join back: the tagged self row
+    recovers the old value, so change detection is free. Returns
+    (keys…, value, _changed) with ``_changed`` = the key is new this
+    superstep or its value dropped.
+
+    Frontier messaging: only rows flagged ``_changed`` by the previous
+    superstep send (every row of an unflagged state0). An unchanged row
+    would re-send exactly what it sent the superstep after it last
+    changed, and min() is idempotent, so every per-superstep state is
+    IDENTICAL to full messaging while the join shrinks from |state| to
+    |frontier| rows (total message volume O(|E|) instead of
+    O(supersteps × |E|))."""
+    frontier = own = state
+    if "_changed" in state.columns:
+        frontier = state.filter(F.col("_changed")).drop("_changed")
+        own = state.drop("_changed")
+    to = [F.col("dst").alias("id") if k == "id" else k for k in fx.keys]
+    msgs = fx.join(frontier).select(
+        *to, (F.col(value) if msg is None else msg).alias(value)
+    )
+    mixed = msgs.withColumn("_self", F.lit(False)).unionByName(
+        own.withColumn("_self", F.lit(True))
+    )
+    return (
+        mixed.groupBy(*fx.keys)
+        .agg(
+            F.min(value).alias(value),
+            F.min(F.when(F.col("_self"), F.col(value))).alias("_old"),
+        )
+        .select(
+            *fx.keys,
+            value,
+            (F.col("_old").isNull() | (F.col(value) < F.col("_old"))).alias(
+                "_changed"
+            ),
+        )
+    )
+
+
+def pointer_double(fx: Fixpoint, state: DataFrame, value: str) -> DataFrame:
+    """One pointer-doubling pass over a min-label state:
+    value(v) <- min(value(v), value(value(v))), which drops convergence
+    from O(diameter) to O(log diameter) supersteps. Sound whenever a
+    vertex's label is itself a vertex whose label bounds it (components:
+    same component; SCC reach labels: lbl(v) reaches v, so whatever
+    reaches lbl(v) reaches v). As components' ``then`` it reads the
+    checkpointed state, so the relax plan is never re-executed to build
+    the lookup side. The ``_changed`` flag becomes relax OR doubling
+    improved, so the next frontier holds the rows either pass moved, with
+    their post-doubling labels."""
+    lookup = _maybe_broadcast(
+        state.select(F.col("id").alias("_lid"), F.col(value).alias("_lv")),
+        fx.bcast,
+    )
+    hop = F.coalesce(F.col("_lv"), F.col(value))
+    return state.join(lookup, state[value] == lookup["_lid"], "left").select(
+        "id",
+        F.least(F.col(value), hop).alias(value),
+        (F.col("_changed") | (hop < F.col(value))).alias("_changed"),
+    )
 
 
 def linkrank_raw(

@@ -26,15 +26,16 @@ in ≤ #SCC-generations rounds; on web graphs (one giant SCC + shallow
 periphery) this is a handful.
 
 Scale posture (the 100 TB story):
-- Each propagation round is the SAME fused one-shuffle superstep as the rank
-  loop / connected components: edges ⋈ state → union self → min-aggregate,
+- Each propagation round runs the SAME one-shuffle superstep as connected
+  components, on the same fixpoint driver (operators/linkrank.py:
+  min_relax, Fixpoint): edges ⋈ frontier → union self → min-aggregate,
   with per-round lineage truncation (localCheckpoint / reliable checkpoint)
   and ONE scalar (changed count) to the driver.
 - Peeling shrinks the live subgraph monotonically via semi-joins; the giant
   SCC (typically >25% of a web graph, Broder et al.) leaves in round one.
 - Adversarial long-chain DAGs degrade to O(V) rounds; the documented scale
-  remedy is pivot-based FW-BW with pointer doubling on the reach labels —
-  the doubling hook is the same one connected_components already uses.
+  remedy is pivot-based FW-BW; the reach labels already use the same
+  pointer doubling as connected_components (linkrank.py:pointer_double).
 """
 
 from __future__ import annotations
@@ -43,12 +44,14 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from giranking_spark.operators.linkrank import (
-    _state_side,
+    Fixpoint,
     _checkpoint,
     _checkpoint_nrows,
-    _maybe_broadcast,
     _set_checkpoint_dir_once,
     _should_broadcast_state,
+    _state_side,
+    min_relax,
+    pointer_double,
 )
 
 #: backstop on min-label propagation rounds (bounded by directed diameter)
@@ -61,83 +64,41 @@ def _reverse(edges: DataFrame) -> DataFrame:
     return edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
 
 
-#: lazy relax+double pairs fused ahead of the checking relax in one
-#: materialization. Convergence is tested on the LAST relax of a batch only —
-#: sound because one full relax pass with zero label changes is exactly the
-#: fixpoint condition; doubling at a relax fixpoint is a no-op. Each unit
-#: quadruples the plan's references to the checkpointed state, and measured
-#: wall time at fixture scale is dominated by Catalyst work on that plan —
-#: 1 (i.e. relax→double→checking-relax per job) is the measured optimum.
-STEPS_PER_CHECK = 1
-
-
-def _relax_once(edges: DataFrame, state: DataFrame, bcast: bool) -> DataFrame:
-    """One lazy relax pass: lbl(v) <- min over {lbl(v)} ∪ {lbl(u): u→v},
-    with a _changed flag comparing against the incoming label."""
-    msgs = edges.join(_state_side(state, bcast), edges.src == state.id).select(
-        F.col("dst").alias("id"), "lbl"
-    )
-    mixed = msgs.withColumn("_self", F.lit(False)).unionByName(
-        state.withColumn("_self", F.lit(True))
-    )
-    return (
-        mixed.groupBy("id")
-        .agg(
-            F.min("lbl").alias("lbl"),
-            F.min(F.when(F.col("_self"), F.col("lbl"))).alias("_old"),
-        )
-        .select("id", "lbl", (F.col("lbl") < F.col("_old")).alias("_changed"))
-    )
-
-
-def _double_once(state: DataFrame, bcast: bool) -> DataFrame:
-    """One lazy pointer-doubling pass: lbl(v) <- min(lbl(v), lbl(lbl(v))).
-    Sound because reach-min labels are transitive (lbl(v) reaches v, so
-    anything reaching lbl(v) reaches v); drops rounds from O(diameter) to
-    O(log diameter) — same shortcut connected_components uses."""
-    lookup = _maybe_broadcast(
-        state.select(F.col("id").alias("_lid"), F.col("lbl").alias("_llbl")),
-        bcast,
-    )
-    return state.join(lookup, state.lbl == lookup._lid, "left").select(
-        "id",
-        F.least(F.col("lbl"), F.coalesce(F.col("_llbl"), F.col("lbl"))).alias(
-            "lbl"
-        ),
-    )
-
-
 def min_reach_labels(
     edges: DataFrame,
     verts: DataFrame,
-    bcast: bool,
     reliable: bool,
     max_rounds: int = MAX_PROP_ROUNDS,
 ) -> DataFrame:
     """(id, lbl) with lbl = min id that reaches ``id`` along edge direction
-    (reflexive: every vertex reaches itself). Each materialization fuses
-    STEPS_PER_CHECK relax+double supersteps; one scalar (changed count of
-    the final relax) goes to the driver per materialization."""
-    state = verts.select("id", F.col("id").alias("lbl"))
-    state = _checkpoint(state, reliable)
-    for _ in range(max_rounds):
-        work = state
-        for step in range(STEPS_PER_CHECK):
-            relaxed = _relax_once(edges, work, bcast)
-            work = _double_once(relaxed.drop("_changed"), bcast)
-        # materialize the whole batch once; the convergence scalar reads the
-        # final relax's _changed flags (carried through the last doubling)
-        final = _checkpoint(
-            _relax_once(edges, work, bcast), reliable
-        )
-        changed = final.filter(F.col("_changed")).count()
-        state = final.drop("_changed")
-        if changed == 0:
-            return state
-        state = _double_once(state, bcast)
-    raise ValueError(
-        f"min-label propagation did not converge in {max_rounds} rounds"
+    (reflexive: every vertex reaches itself). Each superstep is relax →
+    pointer-double → relax (:func:`min_relax`, :func:`pointer_double`;
+    reach-min labels are transitive), and one scalar — the changed count of
+    the second relax — goes to the driver. Zero changes there is the
+    fixpoint: one full relax pass that changes nothing. Two relaxes per
+    barrier because every counting barrier costs jobs of its own (sf0.01
+    graph_scc: 148 jobs, against 194 with one relax and a barriered
+    doubling per superstep)."""
+    fx = Fixpoint(edges, layout=None, caller_owned=True)
+    # the caller set the run's checkpoint dir once; a second
+    # setCheckpointDir would mint a second UUID dir
+    fx.reliable = reliable
+
+    def step(s: DataFrame) -> DataFrame:
+        doubled = pointer_double(fx, min_relax(fx, s, "lbl"), "lbl")
+        return min_relax(fx, doubled, "lbl")
+
+    state = fx.run(
+        fx.start(verts.select("id", F.col("id").alias("lbl"))),
+        step,
+        max_rounds,
+        converge=True,
     )
+    if fx.changed:
+        raise ValueError(
+            f"min-label propagation did not converge in {max_rounds} rounds"
+        )
+    return state
 
 
 def strongly_connected_components(
@@ -159,7 +120,6 @@ def strongly_connected_components(
     reliable = _set_checkpoint_dir_once(live_v, checkpoint_dir)
     live_e = _checkpoint(live_e, reliable)
     live_v, n_live = _checkpoint_nrows(live_v, reliable)
-    bcast = _should_broadcast_state(live_e, n_live, live_v)
     # assigned rows accumulate as a LIST of individually-checkpointed parts
     # (unioned lazily on return) — re-materializing the growing union every
     # round would copy O(rounds x V) rows
@@ -219,8 +179,8 @@ def strongly_connected_components(
             n_live = n_keep
         if n_live == 0:
             break
-        fwd = min_reach_labels(live_e, live_v, bcast, reliable)
-        bwd = min_reach_labels(_reverse(live_e), live_v, bcast, reliable)
+        fwd = min_reach_labels(live_e, live_v, reliable)
+        bwd = min_reach_labels(_reverse(live_e), live_v, reliable)
         done = _checkpoint(
             fwd.join(bwd.select("id", F.col("lbl").alias("_b")), "id")
             .filter(F.col("lbl") == F.col("_b"))

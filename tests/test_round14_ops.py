@@ -74,6 +74,16 @@ QUERY_KEYS = [
     "graph_hits",
     "graph_salsa",
     "graph_label_prop",
+    # the min-relax loops on the same driver
+    "graph_components",
+    "graph_component_sizes",
+    "graph_bfs_dist",
+    "graph_sssp",
+    "graph_diameter_est",
+    "graph_ecc_sample",
+    "graph_wcc_bfs_layers",
+    "graph_scc",
+    "dedup_clusters",
 ]
 
 

@@ -350,7 +350,7 @@ def test_fused_rank_step_single_shuffle(spark):
     assert "BatchEvalPython" not in plan
 
 
-#: Spark jobs each rank-loop query launched (build + noop write at
+#: Spark jobs each fixpoint-loop query launched (build + noop write at
 #: SF_SMALL) at the commit before its loop moved onto the shared fixpoint
 #: driver (operators/linkrank.py:Fixpoint); the driver must add none.
 FIXPOINT_JOBS_BEFORE = {
@@ -364,6 +364,17 @@ FIXPOINT_JOBS_BEFORE = {
     "graph_hits": 32,
     "graph_salsa": 47,
     "graph_label_prop": 23,
+    # the min-relax loops (components, BFS, SSSP, per-seed BFS, SCC reach
+    # labels), measured the same way before their port
+    "graph_components": 27,
+    "graph_component_sizes": 28,
+    "graph_bfs_dist": 29,
+    "graph_sssp": 29,
+    "graph_diameter_est": 12,
+    "graph_ecc_sample": 28,
+    "graph_wcc_bfs_layers": 28,
+    "graph_scc": 9,
+    "dedup_clusters": 26,
 }
 
 
@@ -623,15 +634,55 @@ def test_semdedup_pair_join_is_cell_equi_join(spark):
 
 def test_sssp_round_is_single_aggregation_shuffle(spark):
     """One Bellman-Ford round = join + union + min-agg; no Python, no
-    nested loop in the per-round plan."""
+    nested loop in the per-round plan. Built with lazy checkpoints: the
+    eagerly checkpointed result would show only a scan of its blocks."""
     from giranking_spark.operators.components import sssp_distances
 
     e = derive_edges(spark, SF_SMALL)
     w = e.select("src", "dst", F.lit(1).cast("long").alias("w"))
     seeds = e.select(F.col("src").alias("id")).distinct().limit(5)
-    plan = plan_of(sssp_distances(w, seeds, max_rounds=1))
+    with lazy_checkpoints():
+        plan = plan_of(sssp_distances(w, seeds, max_rounds=1))
     assert "BatchEvalPython" not in plan
     assert "CartesianProduct" not in plan
+    assert "BroadcastNestedLoopJoin" not in plan
+    # the round's equi-join of edges with the frontier, and its min-combine
+    assert "HashJoin" in plan and "Left keys [1]: [src" in plan, plan
+    assert "HashAggregate" in plan and "min(dist" in plan, plan
+
+
+def test_per_seed_bfs_state_sized_per_seed(spark):
+    """per_seed_bfs keys its state (seed, id), so it can reach vertices x
+    seeds rows: the broadcast decision must size it so. Under a threshold
+    that fits one row per vertex but not one per (seed, vertex) pair, the
+    state side must not broadcast, and the distances stay exact."""
+    from giranking_spark.operators.components import per_seed_bfs
+
+    pairs = [("a", "b"), ("b", "c"), ("c", "d"), ("d", "e"), ("f", "g")]
+    e = spark.createDataFrame(pairs, "src string, dst string")
+    names = ["a", "c", "e", "f"]
+    seeds = spark.createDataFrame([(s,) for s in names], "id string")
+    n_verts = 7
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    # one 64 B row per vertex fits twice over; one per (seed, vertex) does not
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(2 * 64 * n_verts))
+    try:
+        with lazy_checkpoints():
+            d = per_seed_bfs(e, seeds, max_depth=2)
+            plan = plan_of(d)
+            got = {(r.seed, r.id): r.dist for r in d.collect()}
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+    assert "BroadcastHashJoin" not in plan, plan
+    assert "ShuffledHashJoin" in plan, plan
+    want = {
+        ("a", "a"): 0, ("a", "b"): 1, ("a", "c"): 2,
+        ("c", "c"): 0, ("c", "b"): 1, ("c", "d"): 1, ("c", "a"): 2,
+        ("c", "e"): 2,
+        ("e", "e"): 0, ("e", "d"): 1, ("e", "c"): 2,
+        ("f", "f"): 0, ("f", "g"): 1,
+    }
+    assert got == want
 
 
 def test_partition_pruned_scan_prunes_directories(spark):
@@ -1242,21 +1293,25 @@ def test_warm_restart_matches_cold_on_no_delta(spark):
 
 
 def test_scc_relax_step_is_equi_join_and_agg(spark):
-    """One min-label relax+double superstep (the SCC peel's inner loop)
-    must be equi-joins + a min-aggregate — no cartesian, no Python."""
+    """One min-label relax+double superstep (the SCC peel's inner loop,
+    built from the shared fixpoint helpers) must be equi-joins + a
+    min-aggregate — no cartesian, no Python."""
     from pyspark.sql import functions as F
 
-    from giranking_spark.operators.scc import (
-        _double_once,
-        _relax_once,
+    from giranking_spark.operators.linkrank import (
+        Fixpoint,
+        min_relax,
+        pointer_double,
     )
 
     e = spark.createDataFrame([(1, 2), (2, 3), (3, 1)], "src long, dst long")
-    state = e.select(F.col("src").alias("id")).distinct().select(
-        "id", F.col("id").alias("lbl")
+    fx = Fixpoint(e, layout=None, caller_owned=True)
+    state = fx.start(
+        e.select(F.col("src").alias("id")).distinct().select(
+            "id", F.col("id").alias("lbl")
+        )
     )
-    step = _double_once(_relax_once(e, state, bcast=False).drop("_changed"),
-                        bcast=False)
+    step = pointer_double(fx, min_relax(fx, state, "lbl"), "lbl")
     plan = step._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan
     assert "BatchEvalPython" not in plan
