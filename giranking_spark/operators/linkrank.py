@@ -466,7 +466,6 @@ class Fixpoint:
         self.edges = edges
         self._held = [] if caller_owned else [edges]  # released on return
         self._stale: DataFrame | None = None  # input copy of a layout swap
-        self.keys: tuple[str, ...] = ("id",)  # the state's key (start)
         self.changed = 0  # rows the last converge-mode barrier counted
 
     def checkpoint(self, df: DataFrame) -> DataFrame:
