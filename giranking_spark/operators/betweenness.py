@@ -29,8 +29,8 @@ from pyspark.sql import functions as F
 from giranking_spark.operators.components import undirected_edges
 from giranking_spark.operators.linkrank import (
     _checkpoint,
+    _checkpoint_lazy,
     _checkpoint_nrows,
-    _maybe_broadcast,
     _state_side,
     _set_checkpoint_dir_once,
     _should_broadcast_state,
@@ -60,13 +60,9 @@ def betweenness_approx(
     reliable = _set_checkpoint_dir_once(e, checkpoint_dir)
     e = _checkpoint(e, reliable)
     verts = e.select(F.col("src").alias("id")).distinct()
-    n_v = verts.count()
-    # width probe over a bounded vertex slice, not the whole edge relation —
-    # the measured-width scan inside _should_broadcast_state is O(rows given)
-    bcast = _should_broadcast_state(e, n_v, verts.limit(10_000))
 
     # forward sweep: levels[l] = (seed, id, sigma) at BFS distance l
-    frontier = _checkpoint(
+    frontier = _checkpoint_lazy(
         seeds.select(
             F.col("id").alias("seed"),
             F.col("id"),
@@ -74,6 +70,18 @@ def betweenness_approx(
         ),
         reliable,
     )
+    # ONE probe job counts the vertices and the pivots (its full scan of
+    # the seeds fills their lazy checkpoint): the (seed, id)-keyed level
+    # state reaches up to one row per vertex per pivot
+    n_v, n_pivots = (
+        verts.select(F.lit(True).alias("_vert"))
+        .unionByName(frontier.select(F.lit(False).alias("_vert")))
+        .agg(F.count_if("_vert"), F.count_if(~F.col("_vert")))
+        .first()
+    )
+    # width probe over a bounded vertex slice, not the whole edge relation —
+    # the measured-width scan inside _should_broadcast_state is O(rows given)
+    bcast = _should_broadcast_state(e, n_v * n_pivots, verts.limit(10_000))
     levels: list[DataFrame] = [frontier]
     visited = frontier.select("seed", "id")  # lazy union of checkpointed parts
     for _ in range(int(depth)):

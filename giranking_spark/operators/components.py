@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from giranking_spark.cache import cached
 from giranking_spark.operators.linkrank import (
     Fixpoint,
     _checkpoint,
@@ -221,54 +222,52 @@ def kcore_peel(
         .repartition(width, "src")
         .groupBy("src")
         .agg(F.collect_set("dst").alias("nbrs"))
-        .persist()
     )
-    # full degrees once: alive_0 = all vertices, and every vertex appears
-    # as a src because und is symmetric; collect_set already deduped the
-    # doubled union, so size(nbrs) = distinct undirected degree
-    deg, n_alive = _checkpoint_nrows(
-        adj.select(
-            F.col("src").alias("id"),
-            F.size("nbrs").cast("bigint").alias("degree"),
-        )
-    )
-    bcast = _should_broadcast_state(adj, n_alive, deg)
-    for _ in range(rounds):
-        dead = deg.filter(F.col("degree") < k).select("id")
-        d = _state_side(dead, bcast)
-        upd = (
-            adj.join(d, adj.src == d.id, "inner")
-            .select(F.explode("nbrs").alias("id"))
-            .groupBy("id")
-            .agg(F.count(F.lit(1)).cast("bigint").alias("_dd"))
-        )
-        deg, n_next = _checkpoint_nrows(
-            deg.filter(F.col("degree") >= k)
-            .join(upd, "id", "left")
-            .select(
-                "id",
-                (
-                    F.col("degree") - F.coalesce(F.col("_dd"), F.lit(0))
-                ).alias("degree"),
+    with cached(adj):
+        # full degrees once: alive_0 = all vertices, and every vertex appears
+        # as a src because und is symmetric; collect_set already deduped the
+        # doubled union, so size(nbrs) = distinct undirected degree
+        deg, n_alive = _checkpoint_nrows(
+            adj.select(
+                F.col("src").alias("id"),
+                F.size("nbrs").cast("bigint").alias("degree"),
             )
         )
-        # same dead-shuffle lifecycle as the rank loops — see
-        # linkrank._gc_nudge (this loop is where sf100 first hit ENOSPC)
-        _gc_nudge(deg, n_next)
-        # the alive set is monotone decreasing, so an unchanged COUNT
-        # means nothing died and every remaining round is a no-op — early
-        # exit is parity-safe under the fixed-round oracle contract (the
-        # oracle unrolls all rounds; extra rounds change nothing at the
-        # fixpoint)
-        if n_next == n_alive:
-            break
-        n_alive = n_next
-    # survivors with at least one surviving neighbor — deg already counts
-    # alive neighbors at the final round boundary, so this is identical to
-    # the recount formulation's final both-endpoints-filtered recount
-    out = deg.filter(F.col("degree") > 0)
-    adj.unpersist()
-    return out
+        bcast = _should_broadcast_state(adj, n_alive, deg)
+        for _ in range(rounds):
+            dead = deg.filter(F.col("degree") < k).select("id")
+            d = _state_side(dead, bcast)
+            upd = (
+                adj.join(d, adj.src == d.id, "inner")
+                .select(F.explode("nbrs").alias("id"))
+                .groupBy("id")
+                .agg(F.count(F.lit(1)).cast("bigint").alias("_dd"))
+            )
+            deg, n_next = _checkpoint_nrows(
+                deg.filter(F.col("degree") >= k)
+                .join(upd, "id", "left")
+                .select(
+                    "id",
+                    (
+                        F.col("degree") - F.coalesce(F.col("_dd"), F.lit(0))
+                    ).alias("degree"),
+                )
+            )
+            # same dead-shuffle lifecycle as the rank loops — see
+            # linkrank._gc_nudge (this loop is where sf100 first hit ENOSPC)
+            _gc_nudge(deg, n_next)
+            # the alive set is monotone decreasing, so an unchanged COUNT
+            # means nothing died and every remaining round is a no-op — early
+            # exit is parity-safe under the fixed-round oracle contract (the
+            # oracle unrolls all rounds; extra rounds change nothing at the
+            # fixpoint)
+            if n_next == n_alive:
+                break
+            n_alive = n_next
+        # survivors with at least one surviving neighbor — deg already counts
+        # alive neighbors at the final round boundary, so this is identical to
+        # the recount formulation's final both-endpoints-filtered recount
+        return deg.filter(F.col("degree") > 0)
 
 
 def sssp_distances(
@@ -492,8 +491,9 @@ def coreness_peel(
     distributed formulation: Montresor et al. 2011): phase k peels to the
     k-core; vertices present in the (k-1)-core but not the k-core have
     coreness k-1; survivors of the last phase get kmax. Every phase round
-    is the same two-semi-join shape as :func:`kcore_peel` (single-column
-    filter relations, no payload amplification), state is
+    recounts degrees over the surviving edge rows and keeps the edges with
+    both endpoints alive by two semi-joins (single-column filter
+    relations, no payload amplification), state is
     checkpoint-truncated per round, and the only driver traffic is one
     edge-count scalar per round (which doubles as an exact early-exit:
     unchanged edge count == peel fixpoint, so tail rounds are free).

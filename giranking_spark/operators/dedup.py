@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from giranking_spark.cache import cached
 from giranking_spark.functions.hashing import affine, md5_u32, md5_u60
 from giranking_spark.functions.text import words
 
@@ -155,33 +156,28 @@ def ngram_jaccard_pairs(
     exposure is unchanged vs the old join-by-shingle prune: a viral
     pre-prune shingle lands in one partition either way, and max_df bounds
     what survives downstream."""
-    sh = _pruned_shingles(docs, n, max_df, id_col, text_col).persist()
-    sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("sz"))
-    a = sh.select(F.col("id").alias("id_a"), "shingle")
-    b = sh.select(F.col("id").alias("id_b"), "shingle")
-    inter = (
-        a.join(b, "shingle")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    out = (
-        inter.join(sizes.withColumnRenamed("id", "id_a").withColumnRenamed("sz", "sz_a"), "id_a")
-        .join(sizes.withColumnRenamed("id", "id_b").withColumnRenamed("sz", "sz_b"), "id_b")
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("inter") / (F.col("sz_a") + F.col("sz_b") - F.col("inter")), 6
-            ),
+    with cached(_pruned_shingles(docs, n, max_df, id_col, text_col)) as sh:
+        sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("sz"))
+        a = sh.select(F.col("id").alias("id_a"), "shingle")
+        b = sh.select(F.col("id").alias("id_b"), "shingle")
+        inter = (
+            a.join(b, "shingle")
+            .filter(F.col("id_a") < F.col("id_b"))
+            .groupBy("id_a", "id_b")
+            .agg(F.count(F.lit(1)).alias("inter"))
         )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    ).localCheckpoint()
-    # r14 unpersist discipline: the pair-sized output is materialized above,
-    # so the shingle cache is released before return instead of leaking one
-    # persisted relation per call into a long-lived session
-    sh.unpersist()
-    return out
+        return (
+            inter.join(sizes.withColumnRenamed("id", "id_a").withColumnRenamed("sz", "sz_a"), "id_a")
+            .join(sizes.withColumnRenamed("id", "id_b").withColumnRenamed("sz", "sz_b"), "id_b")
+            .withColumn(
+                "jaccard",
+                F.round(
+                    F.col("inter") / (F.col("sz_a") + F.col("sz_b") - F.col("inter")), 6
+                ),
+            )
+            .filter(F.col("jaccard") >= threshold)
+            .select("id_a", "id_b", "jaccard")
+        ).localCheckpoint()
 
 
 def minhash_signatures(
@@ -242,18 +238,15 @@ def band_keys(sig: DataFrame, k: int, bands: int) -> DataFrame:
 def banded_pairs(sig: DataFrame, k: int, bands: int) -> DataFrame:
     """LSH candidate pairs from a signature relation (id, s0..s{k-1}):
     (id_a, id_b, n_bands) for docs agreeing on ALL rows of ≥1 band."""
-    exploded = band_keys(sig, k, bands).persist()
-    a = exploded.select(F.col("id").alias("id_a"), "band", "bh")
-    b = exploded.select(F.col("id").alias("id_b"), "band", "bh")
-    out = (
-        a.join(b, ["band", "bh"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("n_bands"))
-    ).localCheckpoint()
-    # r14 unpersist discipline (see ngram_jaccard_pairs)
-    exploded.unpersist()
-    return out
+    with cached(band_keys(sig, k, bands)) as exploded:
+        a = exploded.select(F.col("id").alias("id_a"), "band", "bh")
+        b = exploded.select(F.col("id").alias("id_b"), "band", "bh")
+        return (
+            a.join(b, ["band", "bh"])
+            .filter(F.col("id_a") < F.col("id_b"))
+            .groupBy("id_a", "id_b")
+            .agg(F.count(F.lit(1)).alias("n_bands"))
+        ).localCheckpoint()
 
 
 def incremental_lsh_matches(
@@ -315,26 +308,23 @@ def minhash_jaccard_estimates(
     second pass over the corpus (contrast :func:`ngram_jaccard_pairs`, the
     exact formulation). The signature relation feeds candidate generation
     and both estimate joins, so it is persisted."""
-    sig = minhash_signatures(docs, k, n, id_col, text_col).persist()
-    pairs = banded_pairs(sig, k, bands)
-    sa = sig.select(F.col("id").alias("id_a"), *[F.col(f"s{i}").alias(f"a{i}") for i in range(k)])
-    sb = sig.select(F.col("id").alias("id_b"), *[F.col(f"s{i}").alias(f"b{i}") for i in range(k)])
-    agree = None
-    for i in range(k):
-        term = F.when(F.col(f"a{i}") == F.col(f"b{i}"), F.lit(1)).otherwise(F.lit(0))
-        agree = term if agree is None else agree + term
-    out = (
-        pairs.join(sa, "id_a")
-        .join(sb, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            F.round(agree / F.lit(float(k)), 6).alias("jaccard_est"),
-        )
-    ).localCheckpoint()
-    # r14 unpersist discipline (see ngram_jaccard_pairs)
-    sig.unpersist()
-    return out
+    with cached(minhash_signatures(docs, k, n, id_col, text_col)) as sig:
+        pairs = banded_pairs(sig, k, bands)
+        sa = sig.select(F.col("id").alias("id_a"), *[F.col(f"s{i}").alias(f"a{i}") for i in range(k)])
+        sb = sig.select(F.col("id").alias("id_b"), *[F.col(f"s{i}").alias(f"b{i}") for i in range(k)])
+        agree = None
+        for i in range(k):
+            term = F.when(F.col(f"a{i}") == F.col(f"b{i}"), F.lit(1)).otherwise(F.lit(0))
+            agree = term if agree is None else agree + term
+        return (
+            pairs.join(sa, "id_a")
+            .join(sb, "id_b")
+            .select(
+                "id_a",
+                "id_b",
+                F.round(agree / F.lit(float(k)), 6).alias("jaccard_est"),
+            )
+        ).localCheckpoint()
 
 
 def simhash_signatures(
@@ -489,28 +479,25 @@ def containment_pairs(
     bucketed shuffle-on-key — never all-pairs. The pair relation is emitted
     DIRECTED (both (a,b) and (b,a) when both clear the threshold) because
     containment is not symmetric."""
-    sh = _pruned_shingles(docs, n, max_df, id_col, text_col).persist()
-    sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("sz"))
-    a = sh.select(F.col("id").alias("id_a"), "shingle")
-    b = sh.select(F.col("id").alias("id_b"), "shingle")
-    inter = (
-        a.join(b, "shingle")
-        .filter(F.col("id_a") != F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    out = (
-        inter.join(
-            sizes.withColumnRenamed("id", "id_a").withColumnRenamed("sz", "sz_a"),
-            "id_a",
+    with cached(_pruned_shingles(docs, n, max_df, id_col, text_col)) as sh:
+        sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("sz"))
+        a = sh.select(F.col("id").alias("id_a"), "shingle")
+        b = sh.select(F.col("id").alias("id_b"), "shingle")
+        inter = (
+            a.join(b, "shingle")
+            .filter(F.col("id_a") != F.col("id_b"))
+            .groupBy("id_a", "id_b")
+            .agg(F.count(F.lit(1)).alias("inter"))
         )
-        .withColumn("containment", F.round(F.col("inter") / F.col("sz_a"), 6))
-        .filter(F.col("containment") >= threshold)
-        .select("id_a", "id_b", "containment")
-    ).localCheckpoint()
-    # r14 unpersist discipline (see ngram_jaccard_pairs)
-    sh.unpersist()
-    return out
+        return (
+            inter.join(
+                sizes.withColumnRenamed("id", "id_a").withColumnRenamed("sz", "sz_a"),
+                "id_a",
+            )
+            .withColumn("containment", F.round(F.col("inter") / F.col("sz_a"), 6))
+            .filter(F.col("containment") >= threshold)
+            .select("id_a", "id_b", "containment")
+        ).localCheckpoint()
 
 
 def chunk_dedup(

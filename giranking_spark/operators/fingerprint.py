@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from giranking_spark.cache import cached
 from giranking_spark.functions.hashing import md5_u32, md5_u60
 from giranking_spark.functions.text import words
 from giranking_spark.operators.dedup import _spread
@@ -104,34 +105,30 @@ def winnow_pairs(
     every document can never explode the candidate join (the MOSS 'ignore
     fingerprints in too many submissions' rule, which is also the 100 TB
     skew guard)."""
-    # persist: the fingerprint relation feeds the df-cap aggregate AND both
+    # cache: the fingerprint relation feeds the df-cap aggregate AND both
     # sides of the candidate self-join — without it the whole two-window
     # shingle pipeline re-executes per reference (the plan showed 24 Window
-    # ops = ~6 copies; r13, guide §5 caching-for-reuse). r14 unpersist
-    # discipline: the (pair-sized) output is materialized eagerly below and
-    # the fingerprint cache released before return, so library callers
-    # outside the bench do not accumulate a cached relation per call.
+    # ops = ~6 copies; r13, guide §5 caching-for-reuse).
     # (A plain fp.localCheckpoint() was measured ~25% slower at sf0.1 —
     # the eager checkpoint pays a separate materialization job for the
     # full fingerprint relation; persist folds it into the first consumer.)
     fp = winnow_fingerprints(
         docs, k=k, w=w, id_col=id_col, text_col=text_col
-    ).persist()
-    keep = fp.groupBy("fp").agg(F.count(F.lit(1)).alias("df")).filter(
-        F.col("df") <= max_df
     )
-    fpk = fp.join(keep.select("fp"), "fp")
-    a = fpk.select(F.col("doc_id").alias("doc_a"), "fp")
-    b = fpk.select(F.col("doc_id").alias("doc_b"), "fp")
-    out = (
-        a.join(b, "fp")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("shared"))
-        .filter(F.col("shared") >= min_shared)
-    ).localCheckpoint()
-    fp.unpersist()
-    return out
+    with cached(fp):
+        keep = fp.groupBy("fp").agg(F.count(F.lit(1)).alias("df")).filter(
+            F.col("df") <= max_df
+        )
+        fpk = fp.join(keep.select("fp"), "fp")
+        a = fpk.select(F.col("doc_id").alias("doc_a"), "fp")
+        b = fpk.select(F.col("doc_id").alias("doc_b"), "fp")
+        return (
+            a.join(b, "fp")
+            .filter(F.col("doc_a") < F.col("doc_b"))
+            .groupBy("doc_a", "doc_b")
+            .agg(F.count(F.lit(1)).alias("shared"))
+            .filter(F.col("shared") >= min_shared)
+        ).localCheckpoint()
 
 
 def substring_runs(
@@ -150,33 +147,32 @@ def substring_runs(
     run, grouped with the gaps-and-islands trick (pos - row_number is
     constant within a consecutive stretch). A run of c consecutive matching
     k-grams certifies c + k - 1 exactly-equal tokens."""
-    # same reuse persist + eager-output unpersist as winnow_pairs: g feeds
-    # the df-cap aggregate and both join sides — three executions of the
-    # gram+hash window pipeline without it
+    # same reuse cache as winnow_pairs: g feeds the df-cap aggregate and
+    # both join sides — three executions of the gram+hash window pipeline
+    # without it
     g = _gram_rows(docs, k, id_col, text_col).withColumn(
         "h", md5_u60(F.col("gram"))
-    ).persist()
-    keep = (
-        g.groupBy("h")
-        .agg(F.countDistinct("id").alias("df"))
-        .filter(F.col("df") <= max_df)
     )
-    gk = g.join(keep.select("h"), "h").select("id", "pos", "h")
-    a = gk.select(F.col("id").alias("doc_a"), F.col("pos").alias("pa"), "h")
-    b = gk.select(F.col("id").alias("doc_b"), F.col("pos").alias("pb"), "h")
-    pairs = a.join(b, "h").filter(F.col("doc_a") < F.col("doc_b"))
-    wdiag = Window.partitionBy(
-        "doc_a", "doc_b", (F.col("pa") - F.col("pb"))
-    ).orderBy("pa")
-    runs = (
-        pairs.withColumn("isl", F.col("pa") - F.row_number().over(wdiag))
-        .groupBy("doc_a", "doc_b", (F.col("pa") - F.col("pb")).alias("d"), "isl")
-        .agg((F.count(F.lit(1)) + F.lit(k - 1)).alias("run"))
-    )
-    out = (
-        runs.groupBy("doc_a", "doc_b")
-        .agg(F.max("run").alias("longest_run"))
-        .filter(F.col("longest_run") >= min_run)
-    ).localCheckpoint()
-    g.unpersist()
-    return out
+    with cached(g):
+        keep = (
+            g.groupBy("h")
+            .agg(F.countDistinct("id").alias("df"))
+            .filter(F.col("df") <= max_df)
+        )
+        gk = g.join(keep.select("h"), "h").select("id", "pos", "h")
+        a = gk.select(F.col("id").alias("doc_a"), F.col("pos").alias("pa"), "h")
+        b = gk.select(F.col("id").alias("doc_b"), F.col("pos").alias("pb"), "h")
+        pairs = a.join(b, "h").filter(F.col("doc_a") < F.col("doc_b"))
+        wdiag = Window.partitionBy(
+            "doc_a", "doc_b", (F.col("pa") - F.col("pb"))
+        ).orderBy("pa")
+        runs = (
+            pairs.withColumn("isl", F.col("pa") - F.row_number().over(wdiag))
+            .groupBy("doc_a", "doc_b", (F.col("pa") - F.col("pb")).alias("d"), "isl")
+            .agg((F.count(F.lit(1)) + F.lit(k - 1)).alias("run"))
+        )
+        return (
+            runs.groupBy("doc_a", "doc_b")
+            .agg(F.max("run").alias("longest_run"))
+            .filter(F.col("longest_run") >= min_run)
+        ).localCheckpoint()

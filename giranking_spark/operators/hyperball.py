@@ -33,7 +33,7 @@ from pyspark.sql import functions as F
 from giranking_spark.operators.linkrank import (
     _checkpoint,
     _checkpoint_lazy,
-    _maybe_broadcast,
+    _conf_int,
     _state_side,
     _set_checkpoint_dir_once,
 )
@@ -83,13 +83,7 @@ def hyperball(
         .agg(F.max("rho").alias("r")),
         reliable,
     )
-    try:
-        bcast_thr = int(
-            spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        )
-    except (TypeError, ValueError):
-        bcast_thr = -1
-
+    bcast_thr = _conf_int(spark, "spark.sql.autoBroadcastJoinThreshold", -1)
     n_regs = regs.count()
     parts = [
         hll_finalize(regs, "id").withColumn("t", F.lit(0).cast("long"))

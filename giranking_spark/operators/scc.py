@@ -151,7 +151,7 @@ def strongly_connected_components(
                 "left_semi",
             )
             e1 = _restrict(live_e, v1)
-            keep = _checkpoint(
+            keep, n_keep = _checkpoint_nrows(
                 v1.join(
                     e1.select(F.col("src").alias("id")).distinct(),
                     "id",
@@ -163,7 +163,6 @@ def strongly_connected_components(
                 ),
                 reliable,
             )
-            n_keep = keep.count()
             if n_keep == n_live:
                 break
             parts.append(
@@ -278,13 +277,13 @@ def bowtie_classes(
     e = edges.select("src", "dst").distinct().coalesce(width)
     reliable = _set_checkpoint_dir_once(e, checkpoint_dir)
     e = _checkpoint(e, reliable)
-    verts = _checkpoint(
+    verts, n_verts = _checkpoint_nrows(
         e.select(F.col("src").alias("id"))
         .unionByName(e.select(F.col("dst").alias("id")))
         .distinct(),
         reliable,
     )
-    bcast = _should_broadcast_state(e, verts.count(), verts)
+    bcast = _should_broadcast_state(e, n_verts, verts)
     pivot = (
         e.select(F.col("src").alias("id"))
         .unionByName(e.select(F.col("dst").alias("id")))

@@ -30,6 +30,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from giranking_spark.cache import cached
+
 
 def _dot(a, b):
     return F.aggregate(
@@ -1245,7 +1247,6 @@ def semdedup(
     iters: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    materialize: bool = True,
     corpus_count: int | None = None,
 ) -> DataFrame:
     """SemDeDup (Abbas et al., 2023, arXiv:2303.09540): semantic
@@ -1273,57 +1274,51 @@ def semdedup(
         corpus_count=corpus_count,
     )
     # both the GEMM candidate stage and the exact-rescore joins read the
-    # assignment — persist or the broadcast crossJoin + argmax window
+    # assignment — cache it or the broadcast crossJoin + argmax window
     # lineage executes twice
     assigned = ivf_assign(
         corpus, cents, id_col, vec_col,
         corpus_count=corpus_count, cells_count=c,
-    ).persist()
-    # within-cell scoring via the blocked GEMM candidate stage (r10): the
-    # per-pair Column-expression equi-join it replaces was Σ|cell|²
-    # Catalyst expression eval — quadratic once cells densify (the cell
-    # count is a fixture/oracle constant here; the paper grows it with the
-    # corpus). directed=lower-id-only + the threshold floor mirror the
-    # filters below; the margin proof is in blocked_knn_candidates.
-    cand_pairs = blocked_knn_candidates(
-        assigned.select("cell", id_col, F.col(vec_col).alias("v")),
-        k=1,
-        id_col=id_col,
-        vec_col="v",
-        block_col="cell",
-        directed=True,
-        min_score=threshold,
-    ).withColumnRenamed("nbr_id", "dup_of")
-    keep = assigned.select(
-        F.col(id_col).alias("dup_of"), F.col(vec_col).alias("av")
     )
-    cand = assigned.select(id_col, F.col(vec_col).alias("bv"))
-    pairs = (
-        cand_pairs.join(cand, id_col)
-        .join(keep, "dup_of")
-        .select(
-            id_col,
-            "dup_of",
-            F.round(
-                cosine(F.col("av").cast("array<double>"), F.col("bv").cast("array<double>")),
-                6,
-            ).alias("cos"),
+    with cached(assigned):
+        # within-cell scoring via the blocked GEMM candidate stage (r10): the
+        # per-pair Column-expression equi-join it replaces was Σ|cell|²
+        # Catalyst expression eval — quadratic once cells densify (the cell
+        # count is a fixture/oracle constant here; the paper grows it with the
+        # corpus). directed=lower-id-only + the threshold floor mirror the
+        # filters below; the margin proof is in blocked_knn_candidates.
+        cand_pairs = blocked_knn_candidates(
+            assigned.select("cell", id_col, F.col(vec_col).alias("v")),
+            k=1,
+            id_col=id_col,
+            vec_col="v",
+            block_col="cell",
+            directed=True,
+            min_score=threshold,
+        ).withColumnRenamed("nbr_id", "dup_of")
+        keep = assigned.select(
+            F.col(id_col).alias("dup_of"), F.col(vec_col).alias("av")
         )
-        .filter(F.col("cos") >= F.lit(threshold))
-    )
-    w = Window.partitionBy(id_col).orderBy(F.desc("cos"), F.asc("dup_of"))
-    out = (
-        pairs.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(id_col, "dup_of", "cos")
-    )
-    if not materialize:  # lazy plan for plan-shape tests
-        return out
-    # materialize the drop list, then release the persisted assignment so
-    # executor storage does not leak across invocations
-    out = out.localCheckpoint(eager=True)
-    assigned.unpersist()
-    return out
+        cand = assigned.select(id_col, F.col(vec_col).alias("bv"))
+        pairs = (
+            cand_pairs.join(cand, id_col)
+            .join(keep, "dup_of")
+            .select(
+                id_col,
+                "dup_of",
+                F.round(
+                    cosine(F.col("av").cast("array<double>"), F.col("bv").cast("array<double>")),
+                    6,
+                ).alias("cos"),
+            )
+            .filter(F.col("cos") >= F.lit(threshold))
+        )
+        w = Window.partitionBy(id_col).orderBy(F.desc("cos"), F.asc("dup_of"))
+        return (
+            pairs.withColumn("rn", F.row_number().over(w))
+            .filter(F.col("rn") == 1)
+            .select(id_col, "dup_of", "cos")
+        ).localCheckpoint()
 
 
 def blocked_knn_candidates(

@@ -32,16 +32,20 @@ substrate is the k-core peel's (operators/components.py): one exchange,
 a 16M-row cache at sf100, and per-step joins that touch |V| rows, not
 |und|.
 
-All per-step caches and the adjacency relation are unpersisted before
-returning: the result is materialized via an eager localCheckpoint, so it
-stays valid after cleanup and never re-executes the join chain.
+All per-step caches and the adjacency relation are released before
+returning (one cache scope per relation, held on an ``ExitStack``): the
+result is materialized via an eager localCheckpoint, so it stays valid
+after cleanup and never re-executes the join chain.
 """
 
 from __future__ import annotations
 
+from contextlib import ExitStack
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from giranking_spark.cache import cached
 from giranking_spark.functions.hashing import md5_u32
 
 
@@ -60,68 +64,44 @@ def adjacency_arrays(edges: DataFrame) -> DataFrame:
     )
 
 
-def random_walks(
-    edges: DataFrame,
-    length: int,
-    materialize: bool = True,
-    persisted_out: list[DataFrame] | None = None,
-) -> DataFrame:
+def random_walks(edges: DataFrame, length: int) -> DataFrame:
     """One walk per distinct vertex with out-edges; ``length`` hash-driven
     steps.  Returns (walk_id, step, node) rows — step 0 is the start
-    vertex; walks that hit a dangling vertex end early.
-
-    ``materialize=False`` skips the eager localCheckpoint + cache cleanup
-    and returns the lazy plan (for plan-shape tests); pass ``persisted_out``
-    (an empty list) to receive the persisted intermediates (adjacency + per-
-    step states) so they can be ``unpersist()``-ed individually once the
-    plan is done — without it the only cleanup is the blunt
-    ``spark.catalog.clearCache()``, which evicts unrelated caches in a
-    shared session."""
-    adj = adjacency_arrays(edges).persist()
-    state = adj.select(F.col("src").alias("walk_id"), F.col("src").alias("cur"))
-    frames = [
-        state.select(
-            "walk_id", F.lit(0).cast("int").alias("step"), F.col("cur").alias("node")
-        )
-    ]
-    persisted: list[DataFrame] = [adj]
-    for k in range(1, length + 1):
-        # ONE row per walker: adj is unique-by-src, so the join cannot fan
-        # out; pick indexes the sorted neighbor array (1-based element_at)
-        pick = md5_u32(F.concat_ws(":", "walk_id", F.lit(str(k)))) % F.size(
-            "nbrs"
-        )
-        # persist per step: the output union references every state once —
-        # without this, union branch k re-executes joins 1..k (quadratic)
-        state = (
-            state.join(adj, state.cur == adj.src)
-            .select(
-                "walk_id",
-                F.element_at("nbrs", (pick + F.lit(1)).cast("int")).alias(
-                    "cur"
-                ),
-            )
-            .persist()
-        )
-        persisted.append(state)
-        frames.append(
+    vertex; walks that hit a dangling vertex end early."""
+    with ExitStack() as caches:
+        adj = caches.enter_context(cached(adjacency_arrays(edges)))
+        state = adj.select(F.col("src").alias("walk_id"), F.col("src").alias("cur"))
+        frames = [
             state.select(
-                "walk_id",
-                F.lit(k).cast("int").alias("step"),
-                F.col("cur").alias("node"),
+                "walk_id", F.lit(0).cast("int").alias("step"), F.col("cur").alias("node")
             )
-        )
-    out = frames[0]
-    for f in frames[1:]:
-        out = out.unionByName(f)
-    if persisted_out is not None:
-        persisted_out.extend(persisted)
-    if not materialize:
-        return out
-    # materialize, then release every intermediate cache (adjacency + all
-    # step states) — callers get a self-contained result and executor
-    # storage does not leak across invocations
-    out = out.localCheckpoint(eager=True)
-    for df in persisted:
-        df.unpersist()
-    return out
+        ]
+        for k in range(1, length + 1):
+            # ONE row per walker: adj is unique-by-src, so the join cannot fan
+            # out; pick indexes the sorted neighbor array (1-based element_at)
+            pick = md5_u32(F.concat_ws(":", "walk_id", F.lit(str(k)))) % F.size(
+                "nbrs"
+            )
+            # cache per step: the output union references every state once —
+            # without this, union branch k re-executes joins 1..k (quadratic)
+            state = caches.enter_context(
+                cached(
+                    state.join(adj, state.cur == adj.src).select(
+                        "walk_id",
+                        F.element_at("nbrs", (pick + F.lit(1)).cast("int")).alias(
+                            "cur"
+                        ),
+                    )
+                )
+            )
+            frames.append(
+                state.select(
+                    "walk_id",
+                    F.lit(k).cast("int").alias("step"),
+                    F.col("cur").alias("node"),
+                )
+            )
+        out = frames[0]
+        for f in frames[1:]:
+            out = out.unionByName(f)
+        return out.localCheckpoint()

@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from giranking_spark.cache import cached
 from giranking_spark.queries.relational import load_events
 from giranking_spark.sources.tables import load_table
 
@@ -2595,39 +2596,37 @@ def q_events_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_events(spark, sf_dir)
     daily = ev.groupBy(F.expr("t div 86400").alias("day")).agg(
         F.count(F.lit(1)).cast("long").alias("c")
-    ).persist()
-    wm = Window.orderBy("c", "day")
-    med = (
-        daily.select("c", F.row_number().over(wm).alias("rn"),
-                     F.count(F.lit(1)).over(Window.partitionBy()).alias("n"))
-        .filter(F.col("rn") == F.expr("(n + 1) div 2"))
-        .select(F.col("c").alias("med"))
     )
-    dev = daily.crossJoin(F.broadcast(med)).select(
-        "day", "c", "med", F.abs(F.col("c") - F.col("med")).alias("adev")
-    )
-    wd = Window.orderBy("adev", "day")
-    mad = (
-        dev.select("adev", F.row_number().over(wd).alias("rn"),
-                   F.count(F.lit(1)).over(Window.partitionBy()).alias("n"))
-        .filter(F.col("rn") == F.expr("(n + 1) div 2"))
-        .select(F.col("adev").alias("mad"))
-    )
-    out = (
-        dev.crossJoin(F.broadcast(mad))
-        .groupBy()
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_days"),
-            F.max("med").cast("long").alias("med"),
-            F.max("mad").cast("long").alias("mad"),
-            F.sum(
-                F.when(F.col("adev") > MAD_K * F.col("mad"), 1).otherwise(0)
-            ).cast("long").alias("n_anomalies"),
+    with cached(daily):
+        wm = Window.orderBy("c", "day")
+        med = (
+            daily.select("c", F.row_number().over(wm).alias("rn"),
+                         F.count(F.lit(1)).over(Window.partitionBy()).alias("n"))
+            .filter(F.col("rn") == F.expr("(n + 1) div 2"))
+            .select(F.col("c").alias("med"))
         )
-    ).localCheckpoint()
-    # r14 unpersist discipline: 1-row audit materialized, daily counts freed
-    daily.unpersist()
-    return out
+        dev = daily.crossJoin(F.broadcast(med)).select(
+            "day", "c", "med", F.abs(F.col("c") - F.col("med")).alias("adev")
+        )
+        wd = Window.orderBy("adev", "day")
+        mad = (
+            dev.select("adev", F.row_number().over(wd).alias("rn"),
+                       F.count(F.lit(1)).over(Window.partitionBy()).alias("n"))
+            .filter(F.col("rn") == F.expr("(n + 1) div 2"))
+            .select(F.col("adev").alias("mad"))
+        )
+        return (
+            dev.crossJoin(F.broadcast(mad))
+            .groupBy()
+            .agg(
+                F.count(F.lit(1)).cast("long").alias("n_days"),
+                F.max("med").cast("long").alias("med"),
+                F.max("mad").cast("long").alias("mad"),
+                F.sum(
+                    F.when(F.col("adev") > MAD_K * F.col("mad"), 1).otherwise(0)
+                ).cast("long").alias("n_anomalies"),
+            )
+        ).localCheckpoint()
 
 
 QUERIES["events_anomaly_mad"] = q_events_anomaly_mad

@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from pyspark.sql import functions as F
 
+from giranking_spark.cache import cached
 from giranking_spark.operators import linkrank as lr
 from giranking_spark.operators.components import (
     bfs_distances,
@@ -71,9 +72,7 @@ def q_graph_degree_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_graph_degree_assort(
-    spark: SparkSession, sf_dir: str, materialize: bool = True
-) -> DataFrame:
+def q_graph_degree_assort(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Degree assortativity of the derived graph: Pearson correlation of
     endpoint degrees over the (symmetric) undirected edge list — positive
     for hub-to-hub wiring, negative for hub-and-spoke (web graphs are
@@ -86,11 +85,9 @@ def q_graph_degree_assort(
     undirected edge list and the degree relation are each referenced more
     than once, so both are persisted for the single pass and released
     after the (1-row) result materializes."""
-    und = undirected_edges(derive_edges(spark, sf_dir), dedup=True).persist()
-    deg = (
-        und.groupBy(F.col("src").alias("id"))
-        .agg(F.count(F.lit(1)).cast("long").alias("d"))
-        .persist()
+    und = undirected_edges(derive_edges(spark, sf_dir), dedup=True)
+    deg = und.groupBy(F.col("src").alias("id")).agg(
+        F.count(F.lit(1)).cast("long").alias("d")
     )
     # r13 note (guide §1.1): a moment-based rewrite (n/Σdx/Σdx² from the
     # degree relation alone + one join for Σdx·dy) measured SLOWER in an
@@ -101,31 +98,26 @@ def q_graph_degree_assort(
     # aggregates. Past the broadcast threshold the moment rewrite wins
     # (one |E| exchange instead of two) — revisit if degree relations
     # ever outgrow the threshold.
-    e = und.join(
-        deg.select(F.col("id").alias("src"), F.col("d").alias("dx")), "src"
-    ).join(deg.select(F.col("id").alias("dst"), F.col("d").alias("dy")), "dst")
-    a = e.agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum("dx").alias("sx"),
-        F.sum(F.col("dx") * F.col("dy")).alias("sxy"),
-        F.sum(F.col("dx") * F.col("dx")).alias("sxx"),
-    )
-    n = F.col("n").cast("double")
-    sx = F.col("sx").cast("double")
-    num = n * F.col("sxy").cast("double") - sx * sx
-    den = n * F.col("sxx").cast("double") - sx * sx
-    out = a.select(
-        F.col("n").alias("n_edges"),
-        F.round(
-            F.when(den != 0, num / den).otherwise(F.lit(0.0)), 6
-        ).alias("assortativity"),
-    )
-    if not materialize:  # lazy plan for plan-shape tests
-        return out
-    out = out.localCheckpoint(eager=True)
-    und.unpersist()
-    deg.unpersist()
-    return out
+    with cached(und, deg):
+        e = und.join(
+            deg.select(F.col("id").alias("src"), F.col("d").alias("dx")), "src"
+        ).join(deg.select(F.col("id").alias("dst"), F.col("d").alias("dy")), "dst")
+        a = e.agg(
+            F.count(F.lit(1)).cast("long").alias("n"),
+            F.sum("dx").alias("sx"),
+            F.sum(F.col("dx") * F.col("dy")).alias("sxy"),
+            F.sum(F.col("dx") * F.col("dx")).alias("sxx"),
+        )
+        n = F.col("n").cast("double")
+        sx = F.col("sx").cast("double")
+        num = n * F.col("sxy").cast("double") - sx * sx
+        den = n * F.col("sxx").cast("double") - sx * sx
+        return a.select(
+            F.col("n").alias("n_edges"),
+            F.round(
+                F.when(den != 0, num / den).otherwise(F.lit(0.0)), 6
+            ).alias("assortativity"),
+        ).localCheckpoint()
 
 
 NEG_K = 3  # negative candidates per positive edge
@@ -217,9 +209,7 @@ def q_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_graph_modularity(
-    spark: SparkSession, sf_dir: str, materialize: bool = True
-) -> DataFrame:
+def q_graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Newman modularity of the label-propagation communities — the
     community-quality metric that tells a pipeline whether its clustering
     is better than chance wiring: per community c,
@@ -253,49 +243,44 @@ def q_graph_modularity(
     # construction — 'c' vs 's' prefixes), and the degree groupBy runs
     # exchange-free on the persisted layout. Previously canon and deg each
     # re-derived the edges and paid their own full-edge distinct shuffle.
-    und = lpa_substrate(e).persist()
-    labels = label_propagation(e, substrate=und).persist()
-    canon = und.filter(F.col("src") <= F.col("dst")).select(
-        F.col("src").alias("u"), F.col("dst").alias("v")
-    )
-    m = canon.agg(F.count(F.lit(1)).cast("long").alias("m"))
-    deg = und.groupBy(F.col("src").alias("id")).agg(
-        F.count(F.lit(1)).cast("long").alias("d")
-    )
-    la = labels.select(F.col("id").alias("u"), F.col("label").alias("lu"))
-    lb = labels.select(F.col("id").alias("v"), F.col("label").alias("lv"))
-    intra = (
-        canon.join(la, "u")
-        .join(lb, "v")
-        .filter(F.col("lu") == F.col("lv"))
-        .groupBy(F.col("lu").alias("label"))
-        .agg(F.count(F.lit(1)).cast("long").alias("e_c"))
-    )
-    dtot = (
-        deg.join(labels, "id")
-        .groupBy("label")
-        .agg(F.sum("d").cast("long").alias("d_c"))
-    )
-    mm = F.col("m").cast("double")
-    half = F.col("d_c").cast("double") / (2 * mm)
-    out = (
-        dtot.join(intra, "label", "left")
-        .crossJoin(F.broadcast(m))
-        .select(
-            "label",
-            F.coalesce("e_c", F.lit(0)).cast("long").alias("n_intra"),
-            "d_c",
-            F.round(
-                F.coalesce("e_c", F.lit(0)).cast("double") / mm - half * half, 6
-            ).alias("contrib"),
+    with cached(lpa_substrate(e)) as und, cached(
+        label_propagation(e, substrate=und)
+    ) as labels:
+        canon = und.filter(F.col("src") <= F.col("dst")).select(
+            F.col("src").alias("u"), F.col("dst").alias("v")
         )
-    )
-    if not materialize:  # lazy plan for plan-shape tests
-        return out
-    out = out.localCheckpoint(eager=True)
-    labels.unpersist()
-    und.unpersist()
-    return out
+        m = canon.agg(F.count(F.lit(1)).cast("long").alias("m"))
+        deg = und.groupBy(F.col("src").alias("id")).agg(
+            F.count(F.lit(1)).cast("long").alias("d")
+        )
+        la = labels.select(F.col("id").alias("u"), F.col("label").alias("lu"))
+        lb = labels.select(F.col("id").alias("v"), F.col("label").alias("lv"))
+        intra = (
+            canon.join(la, "u")
+            .join(lb, "v")
+            .filter(F.col("lu") == F.col("lv"))
+            .groupBy(F.col("lu").alias("label"))
+            .agg(F.count(F.lit(1)).cast("long").alias("e_c"))
+        )
+        dtot = (
+            deg.join(labels, "id")
+            .groupBy("label")
+            .agg(F.sum("d").cast("long").alias("d_c"))
+        )
+        mm = F.col("m").cast("double")
+        half = F.col("d_c").cast("double") / (2 * mm)
+        return (
+            dtot.join(intra, "label", "left")
+            .crossJoin(F.broadcast(m))
+            .select(
+                "label",
+                F.coalesce("e_c", F.lit(0)).cast("long").alias("n_intra"),
+                "d_c",
+                F.round(
+                    F.coalesce("e_c", F.lit(0)).cast("double") / mm - half * half, 6
+                ).alias("contrib"),
+            )
+        ).localCheckpoint()
 
 
 def q_graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -351,51 +336,43 @@ def q_graph_neighbor_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     codegen'd self-join at sf0.1 — higher-order array lambdas run
     interpreted, and the per-element slice() copies beat the saved rows
     (adamic A/B: join 5.5 s, posexplode+slice 10.4 s, nested-HOF 14.3 s
-    warm) — so the join form stays, with eager-output unpersist so the
-    shared ek relation is released before return."""
+    warm) — so the join form stays; the shared ek relation is cached for
+    the call only."""
     e = derive_edges(spark, sf_dir)
     deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("df"))
-    # persist: ek feeds the per-dst sizes AND both self-join sides —
+    # cache: ek feeds the per-dst sizes AND both self-join sides —
     # without it the orders⋈lineitem edge derivation executes once per
-    # reference; released below after the output is materialized
-    ek = e.join(
-        deg.filter(F.col("df") <= NJ_MAX_DF).select("src"), "src"
-    ).persist()
-    sizes = ek.groupBy("dst").agg(F.count(F.lit(1)).alias("sz"))
-    a = ek.select(F.col("dst").alias("id_a"), "src")
-    b = ek.select(F.col("dst").alias("id_b"), "src")
-    inter = (
-        a.join(b, "src")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    out = (
-        inter.join(
-            sizes.withColumnRenamed("dst", "id_a").withColumnRenamed("sz", "sz_a"),
-            "id_a",
+    # reference
+    ek = e.join(deg.filter(F.col("df") <= NJ_MAX_DF).select("src"), "src")
+    with cached(ek):
+        sizes = ek.groupBy("dst").agg(F.count(F.lit(1)).alias("sz"))
+        a = ek.select(F.col("dst").alias("id_a"), "src")
+        b = ek.select(F.col("dst").alias("id_b"), "src")
+        inter = (
+            a.join(b, "src")
+            .filter(F.col("id_a") < F.col("id_b"))
+            .groupBy("id_a", "id_b")
+            .agg(F.count(F.lit(1)).alias("inter"))
         )
-        .join(
-            sizes.withColumnRenamed("dst", "id_b").withColumnRenamed("sz", "sz_b"),
-            "id_b",
-        )
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("inter") / (F.col("sz_a") + F.col("sz_b") - F.col("inter")),
-                6,
-            ),
-        )
-        .filter(F.col("jaccard") >= NJ_THRESHOLD)
-        .select("id_a", "id_b", "jaccard")
-    )
-    # r14 unpersist discipline: materialize the (result-sized) output,
-    # release the edge-sized cache — no persisted relation outlives the
-    # call, and the returned plan reads the checkpointed output blocks
-    # (they die with the DataFrame via the ContextCleaner)
-    out = out.localCheckpoint()
-    ek.unpersist()
-    return out
+        return (
+            inter.join(
+                sizes.withColumnRenamed("dst", "id_a").withColumnRenamed("sz", "sz_a"),
+                "id_a",
+            )
+            .join(
+                sizes.withColumnRenamed("dst", "id_b").withColumnRenamed("sz", "sz_b"),
+                "id_b",
+            )
+            .withColumn(
+                "jaccard",
+                F.round(
+                    F.col("inter") / (F.col("sz_a") + F.col("sz_b") - F.col("inter")),
+                    6,
+                ),
+            )
+            .filter(F.col("jaccard") >= NJ_THRESHOLD)
+            .select("id_a", "id_b", "jaccard")
+        ).localCheckpoint()
 
 
 def q_graph_weighted_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -440,54 +417,51 @@ def q_graph_feature_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     Means over integer degrees are exact (sum/count of longs) so
     cross-engine parity holds at round-6."""
     # und feeds three consumers (deg + the shared und⋈deg join used by h1
-    # and the 2-hop partials) and deg three — persist both so the
+    # and the 2-hop partials) and deg three — cache both so the
     # orders⋈lineitem derivation and the symmetrize-distinct shuffle run
-    # once, not once per reference; released below after the per-vertex
-    # output is materialized (r14 unpersist discipline)
-    und = undirected_edges(derive_edges(spark, sf_dir)).persist()
+    # once, not once per reference
+    und = undirected_edges(derive_edges(spark, sf_dir))
     deg = und.groupBy(F.col("src").alias("id")).agg(
         F.count(F.lit(1)).cast("long").alias("d")
-    ).persist()
-    nd = und.join(deg.withColumnRenamed("id", "dst"), "dst")
-    h1 = (
-        nd.groupBy(F.col("src").alias("id"))
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_nbr"),
-            F.round(F.avg("d"), 6).alias("mean_nbr_deg"),
+    )
+    with cached(und, deg):
+        nd = und.join(deg.withColumnRenamed("id", "dst"), "dst")
+        h1 = (
+            nd.groupBy(F.col("src").alias("id"))
+            .agg(
+                F.count(F.lit(1)).cast("long").alias("n_nbr"),
+                F.round(F.avg("d"), 6).alias("mean_nbr_deg"),
+            )
         )
-    )
-    mid_ok = deg.filter(F.col("d") <= FEATURE_AGG_MAX_FANOUT).select(
-        F.col("id").alias("src")
-    )
-    # per capped mid: its neighbor list with degrees, plus the group count
-    # and degree sum; collect_list is bounded by FEATURE_AGG_MAX_FANOUT.
-    # n_m == 1 groups emit no partial (their single neighbor has no 2-hop
-    # path through this mid), matching the wedge formulation's absent rows.
-    g = (
-        nd.join(mid_ok, "src")
-        .groupBy("src")
-        .agg(
-            F.collect_list(F.struct("dst", "d")).alias("nb"),
-            F.count(F.lit(1)).cast("long").alias("n_m"),
-            F.sum("d").alias("s_m"),
+        mid_ok = deg.filter(F.col("d") <= FEATURE_AGG_MAX_FANOUT).select(
+            F.col("id").alias("src")
         )
-        .filter(F.col("n_m") >= 2)
-    )
-    part = g.select(
-        F.explode("nb").alias("x"), "n_m", "s_m"
-    ).select(
-        F.col("x.dst").alias("id"),
-        (F.col("n_m") - 1).alias("cnt"),
-        (F.col("s_m") - F.col("x.d")).alias("sm"),
-    )
-    h2 = part.groupBy("id").agg(
-        F.sum("cnt").alias("n_2hop"),
-        F.round(F.sum("sm") / F.sum("cnt"), 6).alias("mean_2hop_deg"),
-    )
-    out = h1.join(h2, "id", "left").localCheckpoint()
-    und.unpersist()
-    deg.unpersist()
-    return out
+        # per capped mid: its neighbor list with degrees, plus the group count
+        # and degree sum; collect_list is bounded by FEATURE_AGG_MAX_FANOUT.
+        # n_m == 1 groups emit no partial (their single neighbor has no 2-hop
+        # path through this mid), matching the wedge formulation's absent rows.
+        g = (
+            nd.join(mid_ok, "src")
+            .groupBy("src")
+            .agg(
+                F.collect_list(F.struct("dst", "d")).alias("nb"),
+                F.count(F.lit(1)).cast("long").alias("n_m"),
+                F.sum("d").alias("s_m"),
+            )
+            .filter(F.col("n_m") >= 2)
+        )
+        part = g.select(
+            F.explode("nb").alias("x"), "n_m", "s_m"
+        ).select(
+            F.col("x.dst").alias("id"),
+            (F.col("n_m") - 1).alias("cnt"),
+            (F.col("s_m") - F.col("x.d")).alias("sm"),
+        )
+        h2 = part.groupBy("id").agg(
+            F.sum("cnt").alias("n_2hop"),
+            F.round(F.sum("sm") / F.sum("cnt"), 6).alias("mean_2hop_deg"),
+        )
+        return h1.join(h2, "id", "left").localCheckpoint()
 
 
 def q_graph_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -508,8 +482,7 @@ def q_graph_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows) was measured and REJECTED: interpreted array lambdas + per-pair
     slice copies ran 2.6× slower than this codegen'd self-join at sf0.1
     (join 5.5 s vs posexplode+slice 10.4 s vs nested-HOF 14.3 s warm,
-    median-of-3). The join stays; the r13 leak (undk persisted forever)
-    is fixed by eager-output unpersist below."""
+    median-of-3). The join stays; undk is cached for the call only."""
     und = undirected_edges(derive_edges(spark, sf_dir))
     deg = und.groupBy(F.col("src").alias("z")).agg(
         F.count(F.lit(1)).cast("long").alias("d")
@@ -520,23 +493,18 @@ def q_graph_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
     # materialize every hub wedge first — measured 22 s vs 3 s at sf0.1)
     undk = und.join(zd, und["src"] == zd["z"]).select(
         "z", F.col("dst").alias("id_a"), "d"
-    ).persist()
-    b = undk.select("z", F.col("id_a").alias("id_b"))
-    out = (
-        undk.join(b, "z")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_common"),
-            F.round(F.sum(F.lit(1.0) / F.log("d")), 6).alias("aa_score"),
-        )
     )
-    # r14 unpersist discipline: materialize the result, release the
-    # edge-sized wedge cache before returning (blocks of the checkpointed
-    # output die with the DataFrame)
-    out = out.localCheckpoint()
-    undk.unpersist()
-    return out
+    with cached(undk):
+        b = undk.select("z", F.col("id_a").alias("id_b"))
+        return (
+            undk.join(b, "z")
+            .filter(F.col("id_a") < F.col("id_b"))
+            .groupBy("id_a", "id_b")
+            .agg(
+                F.count(F.lit(1)).cast("long").alias("n_common"),
+                F.round(F.sum(F.lit(1.0) / F.log("d")), 6).alias("aa_score"),
+            )
+        ).localCheckpoint()
 
 
 from giranking_spark.functions.hashing import md5_u32_sql_duckdb  # noqa: E402
@@ -1067,45 +1035,42 @@ def q_graph_clustering_coef(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("a.l_suppkey") < F.col("b.l_suppkey"))
         .select(F.col("a.l_suppkey").alias("u"), F.col("b.l_suppkey").alias("v"))
         .distinct()
-        # three consumers (two wedge sides + closing edge) — persist, or the
-        # orders⋈lineitem projection re-executes per reference
-        .persist()
     )
-    e1, e2, e3 = co.alias("e1"), co.alias("e2"), co.alias("e3")
-    tri = (
-        e1.join(e2, F.col("e1.v") == F.col("e2.u"))
-        .join(
-            e3,
-            (F.col("e3.u") == F.col("e1.u")) & (F.col("e3.v") == F.col("e2.v")),
+    # three consumers (two wedge sides + closing edge) — cache, or the
+    # orders⋈lineitem projection re-executes per reference
+    with cached(co):
+        e1, e2, e3 = co.alias("e1"), co.alias("e2"), co.alias("e3")
+        tri = (
+            e1.join(e2, F.col("e1.v") == F.col("e2.u"))
+            .join(
+                e3,
+                (F.col("e3.u") == F.col("e1.u")) & (F.col("e3.v") == F.col("e2.v")),
+            )
+            .select(
+                F.col("e1.u").alias("ta"), F.col("e1.v").alias("tb"), F.col("e2.v").alias("tc")
+            )
         )
-        .select(
-            F.col("e1.u").alias("ta"), F.col("e1.v").alias("tb"), F.col("e2.v").alias("tc")
+        per_v = (
+            tri.select(F.explode(F.array("ta", "tb", "tc")).alias("id"))
+            .groupBy("id")
+            .agg(F.count(F.lit(1)).cast("long").alias("n_tri"))
         )
-    )
-    per_v = (
-        tri.select(F.explode(F.array("ta", "tb", "tc")).alias("id"))
-        .groupBy("id")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_tri"))
-    )
-    deg = (
-        co.select(F.col("u").alias("id"))
-        .unionByName(co.select(F.col("v").alias("id")))
-        .groupBy("id")
-        .agg(F.count(F.lit(1)).cast("long").alias("degree"))
-    )
-    d = F.col("degree")
-    out = deg.join(per_v, "id", "left").select(
-        "id",
-        "degree",
-        F.coalesce("n_tri", F.lit(0)).cast("long").alias("n_tri"),
-        F.round(
-            F.when(d >= 2, F.coalesce("n_tri", F.lit(0)) * 2.0 / (d * (d - 1))).otherwise(0.0),
-            6,
-        ).alias("coef"),
-    ).localCheckpoint()
-    # r14 unpersist discipline: result materialized, co-relation released
-    co.unpersist()
-    return out
+        deg = (
+            co.select(F.col("u").alias("id"))
+            .unionByName(co.select(F.col("v").alias("id")))
+            .groupBy("id")
+            .agg(F.count(F.lit(1)).cast("long").alias("degree"))
+        )
+        d = F.col("degree")
+        return deg.join(per_v, "id", "left").select(
+            "id",
+            "degree",
+            F.coalesce("n_tri", F.lit(0)).cast("long").alias("n_tri"),
+            F.round(
+                F.when(d >= 2, F.coalesce("n_tri", F.lit(0)) * 2.0 / (d * (d - 1))).otherwise(0.0),
+                6,
+            ).alias("coef"),
+        ).localCheckpoint()
 
 
 QUERIES["graph_clustering_coef"] = q_graph_clustering_coef
@@ -1481,10 +1446,9 @@ def ktruss_edges(e: DataFrame, k: int = KTRUSS_K,
     a LEFT SEMI join keeps qualifying edges — all equi-joins off
     checkpointed state; one scalar (edge count) per round, early exit at
     the fixpoint."""
-    from giranking_spark.operators.linkrank import _checkpoint
+    from giranking_spark.operators.linkrank import _checkpoint_nrows
 
-    cur = _checkpoint(e.select("u", "v").distinct())
-    n = cur.count()
+    cur, n = _checkpoint_nrows(e.select("u", "v").distinct())
     for _ in range(rounds):
         e1, e2, e3 = cur.alias("e1"), cur.alias("e2"), cur.alias("e3")
         tri = (
@@ -1508,8 +1472,9 @@ def ktruss_edges(e: DataFrame, k: int = KTRUSS_K,
             .agg(F.count(F.lit(1)).alias("s"))
             .filter(F.col("s") >= k - 2)
         )
-        cur = _checkpoint(cur.join(sup.select("u", "v"), ["u", "v"], "left_semi"))
-        n2 = cur.count()
+        cur, n2 = _checkpoint_nrows(
+            cur.join(sup.select("u", "v"), ["u", "v"], "left_semi")
+        )
         if n2 == n:
             break
         n = n2
@@ -1971,25 +1936,19 @@ def q_graph_bipartite_project(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The r14 collect_list + combination-explode variant was measured and
     REJECTED (interpreted array lambdas ran ~2× slower than the codegen'd
-    self-join at sf0.1 — see q_graph_adamic_adar); the join stays, with
-    eager-output unpersist replacing the r13 leak."""
+    self-join at sf0.1 — see q_graph_adamic_adar); the join stays."""
     e = derive_edges(spark, sf_dir)
     deg = e.groupBy("src").agg(F.count(F.lit(1)).cast("long").alias("fanout"))
     keep = deg.filter(F.col("fanout") <= FEATURE_AGG_MAX_FANOUT).select("src")
-    ek = e.join(keep, "src").persist()
-    b = ek.select("src", F.col("dst").alias("dst_b"))
-    out = (
-        ek.join(b, "src")
-        .filter(F.col("dst") < F.col("dst_b"))
-        .groupBy(F.col("dst").alias("s_a"), F.col("dst_b").alias("s_b"))
-        .agg(F.count(F.lit(1)).cast("long").alias("n_shared"))
-        .filter(F.col("n_shared") >= BIPROJ_MIN_SHARED)
-    )
-    # r14 unpersist discipline: materialize the result, release the
-    # edge-sized cache before returning
-    out = out.localCheckpoint()
-    ek.unpersist()
-    return out
+    with cached(e.join(keep, "src")) as ek:
+        b = ek.select("src", F.col("dst").alias("dst_b"))
+        return (
+            ek.join(b, "src")
+            .filter(F.col("dst") < F.col("dst_b"))
+            .groupBy(F.col("dst").alias("s_a"), F.col("dst_b").alias("s_b"))
+            .agg(F.count(F.lit(1)).cast("long").alias("n_shared"))
+            .filter(F.col("n_shared") >= BIPROJ_MIN_SHARED)
+        ).localCheckpoint()
 
 
 QUERIES["graph_bipartite_project"] = q_graph_bipartite_project
@@ -2237,23 +2196,21 @@ def q_graph_local_bridges(spark: SparkSession, sf_dir: str) -> DataFrame:
     und = undirected_edges(derive_edges(spark, sf_dir), dedup=True)
     ec = und.filter(F.col("src") < F.col("dst")).select(
         F.col("src").alias("u"), F.col("dst").alias("v")
-    ).persist()
-    tri_edges = triangle_edges(ec)
-    n_edges = ec.groupBy().agg(F.count(F.lit(1)).cast("long").alias("n_edges"))
-    n_bridge = (
-        ec.join(tri_edges, ["u", "v"], "left_anti")
-        .groupBy()
-        .agg(F.count(F.lit(1)).cast("long").alias("n_local_bridges"))
     )
-    out = n_edges.crossJoin(F.broadcast(n_bridge)).select(
-        "n_edges",
-        "n_local_bridges",
-        F.round(F.col("n_local_bridges") / F.col("n_edges").cast("double"), 6)
-        .alias("ratio"),
-    ).localCheckpoint()
-    # r14 unpersist discipline: 1-row audit materialized, edges released
-    ec.unpersist()
-    return out
+    with cached(ec):
+        tri_edges = triangle_edges(ec)
+        n_edges = ec.groupBy().agg(F.count(F.lit(1)).cast("long").alias("n_edges"))
+        n_bridge = (
+            ec.join(tri_edges, ["u", "v"], "left_anti")
+            .groupBy()
+            .agg(F.count(F.lit(1)).cast("long").alias("n_local_bridges"))
+        )
+        return n_edges.crossJoin(F.broadcast(n_bridge)).select(
+            "n_edges",
+            "n_local_bridges",
+            F.round(F.col("n_local_bridges") / F.col("n_edges").cast("double"), 6)
+            .alias("ratio"),
+        ).localCheckpoint()
 
 
 QUERIES["graph_local_bridges"] = q_graph_local_bridges
@@ -2332,40 +2289,36 @@ def q_graph_transitivity(spark: SparkSession, sf_dir: str) -> DataFrame:
     graph at sf0.1+ (90%+ of all pairs) and makes any exact triangle
     count Theta(n^3) by construction."""
     from giranking_spark.operators.components import undirected_edges
+    from giranking_spark.operators.triangles import triangle_relation
 
     co = (
         undirected_edges(derive_nav_edges(spark, sf_dir), dedup=True)
         .filter(F.col("src") < F.col("dst"))
         .select(F.col("src").alias("u"), F.col("dst").alias("v"))
-        .persist()
     )
-    und = co.select("u", "v").unionByName(
-        co.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    )
-    wedges = (
-        und.groupBy("u").agg(F.count(F.lit(1)).cast("long").alias("d"))
-        .groupBy()
-        .agg(
-            F.sum(F.expr("d * (d - 1) div 2")).cast("long").alias("n_wedges")
+    with cached(co):
+        und = co.select("u", "v").unionByName(
+            co.select(F.col("v").alias("u"), F.col("u").alias("v"))
         )
-    )
-    from giranking_spark.operators.triangles import triangle_relation
-
-    tri = (
-        triangle_relation(co)
-        .groupBy()
-        .agg(F.count(F.lit(1)).cast("long").alias("n_triangles"))
-    )
-    out = wedges.crossJoin(F.broadcast(tri)).select(
-        "n_wedges",
-        "n_triangles",
-        F.round(
-            3 * F.col("n_triangles") / F.col("n_wedges").cast("double"), 6
-        ).alias("transitivity"),
-    ).localCheckpoint()
-    # r14 unpersist discipline: 1-row audit materialized, edges released
-    co.unpersist()
-    return out
+        wedges = (
+            und.groupBy("u").agg(F.count(F.lit(1)).cast("long").alias("d"))
+            .groupBy()
+            .agg(
+                F.sum(F.expr("d * (d - 1) div 2")).cast("long").alias("n_wedges")
+            )
+        )
+        tri = (
+            triangle_relation(co)
+            .groupBy()
+            .agg(F.count(F.lit(1)).cast("long").alias("n_triangles"))
+        )
+        return wedges.crossJoin(F.broadcast(tri)).select(
+            "n_wedges",
+            "n_triangles",
+            F.round(
+                3 * F.col("n_triangles") / F.col("n_wedges").cast("double"), 6
+            ).alias("transitivity"),
+        ).localCheckpoint()
 
 
 QUERIES["graph_transitivity"] = q_graph_transitivity

@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from giranking_spark.cache import cached
 from giranking_spark.functions import text as T
 from giranking_spark.operators.dedup import neardup_clusters
 from giranking_spark.operators.textops import quality_expr
@@ -62,27 +63,23 @@ def q_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exact dedup: keep the smallest doc_id per content hash
     w = Window.partitionBy(F.md5("text"))
     # The surviving corpus is referenced three times downstream (shingle
-    # pipeline, cluster-id join, final quality join) — without the persist
+    # pipeline, cluster-id join, final quality join) — without the cache
     # the quality/langid scan + md5 window re-executes per reference
-    # (measured 8.5 s → ~5 s at sf0.1). Bench/driver clearCache() frees it.
+    # (measured 8.5 s → ~5 s at sf0.1).
     exact_kept = (
         filtered.withColumn("_keep", F.min("doc_id").over(w))
         .filter(F.col("doc_id") == F.col("_keep"))
         .select("doc_id", "text", "quality")
-        .persist()
     )
-    clusters = neardup_clusters(
-        exact_kept, k=MINHASH_K, bands=MINHASH_BANDS, n=JACCARD_N
-    )
-    out = (
-        clusters.filter("keep")
-        .join(exact_kept.select("doc_id", "quality"), "doc_id")
-        .select("doc_id", "quality")
-    ).localCheckpoint()
-    # r14 unpersist discipline: surviving corpus ids materialized, the
-    # persisted exact-dedup relation freed
-    exact_kept.unpersist()
-    return out
+    with cached(exact_kept):
+        clusters = neardup_clusters(
+            exact_kept, k=MINHASH_K, bands=MINHASH_BANDS, n=JACCARD_N
+        )
+        return (
+            clusters.filter("keep")
+            .join(exact_kept.select("doc_id", "quality"), "doc_id")
+            .select("doc_id", "quality")
+        ).localCheckpoint()
 
 
 QUERIES = {"corpus_pipeline": q_corpus_pipeline}

@@ -10,6 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from giranking_spark.cache import cached
 from giranking_spark.functions.hashing import (
     HASH_FAMILY,
     MERSENNE_P,
@@ -329,34 +330,31 @@ def q_dedup_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     the pipelines it measures.  On the fixture LSH recall is measured, not
     assumed — the oracle recomputes both sides independently."""
     docs = load_table(spark, sf_dir, "documents")
-    # persist both pair lists (tiny): each is referenced twice (its count
+    # cache both pair lists (tiny): each is referenced twice (its count
     # and the semi-join) and the executed plan showed the full shingle +
     # window pipelines running once PER reference (r13; 13.5 → ~7 s at
-    # sf0.1). r14 unpersist discipline: the 1-row summary is materialized
-    # eagerly and both caches released before return (the eager
-    # .localCheckpoint() of the pair lists themselves was measured ~20%
-    # slower — it pays a standalone materialization job per list).
+    # sf0.1). An eager .localCheckpoint() of the pair lists themselves was
+    # measured ~20% slower — it pays a standalone materialization job per
+    # list.
     truth = ngram_jaccard_pairs(
         docs, n=JACCARD_N, threshold=JACCARD_THRESHOLD, max_df=JACCARD_MAX_DF
-    ).select("id_a", "id_b").persist()
+    ).select("id_a", "id_b")
     cand = minhash_lsh_pairs(
         docs, k=MINHASH_K, bands=MINHASH_BANDS, n=JACCARD_N
-    ).select("id_a", "id_b").persist()
-    hit = truth.join(cand, ["id_a", "id_b"], "left_semi")
-    out = (
-        truth.agg(F.count(F.lit(1)).cast("long").alias("n_truth"))
-        .crossJoin(cand.agg(F.count(F.lit(1)).cast("long").alias("n_cand")))
-        .crossJoin(hit.agg(F.count(F.lit(1)).cast("long").alias("n_hit")))
-        .select(
-            "n_truth",
-            "n_cand",
-            "n_hit",
-            F.round(F.col("n_hit") / F.col("n_truth"), 6).alias("recall"),
-        )
-    ).localCheckpoint()
-    truth.unpersist()
-    cand.unpersist()
-    return out
+    ).select("id_a", "id_b")
+    with cached(truth, cand):
+        hit = truth.join(cand, ["id_a", "id_b"], "left_semi")
+        return (
+            truth.agg(F.count(F.lit(1)).cast("long").alias("n_truth"))
+            .crossJoin(cand.agg(F.count(F.lit(1)).cast("long").alias("n_cand")))
+            .crossJoin(hit.agg(F.count(F.lit(1)).cast("long").alias("n_hit")))
+            .select(
+                "n_truth",
+                "n_cand",
+                "n_hit",
+                F.round(F.col("n_hit") / F.col("n_truth"), 6).alias("recall"),
+            )
+        ).localCheckpoint()
 
 
 QUERIES["dedup_recall_eval"] = q_dedup_recall_eval
@@ -442,29 +440,26 @@ def q_text_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
         shingle_rows(load_table(spark, sf_dir, "documents"), JACCARD_N)
         .select("id", md5_u60(F.col("shingle")).alias("shingle"))
         .distinct()
-        .persist()
     )
-    first = sh.groupBy("shingle").agg(F.min("id").alias("first_id"))
-    out = (
-        sh.join(first, "shingle")
-        .groupBy(F.col("id").alias("doc_id"))
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_shingles"),
-            F.sum(
-                F.when(F.col("first_id") == F.col("id"), 1).otherwise(0)
-            ).cast("long").alias("n_novel"),
-            F.round(
+    with cached(sh):
+        first = sh.groupBy("shingle").agg(F.min("id").alias("first_id"))
+        return (
+            sh.join(first, "shingle")
+            .groupBy(F.col("id").alias("doc_id"))
+            .agg(
+                F.count(F.lit(1)).cast("long").alias("n_shingles"),
                 F.sum(
                     F.when(F.col("first_id") == F.col("id"), 1).otherwise(0)
-                )
-                / F.count(F.lit(1)),
-                6,
-            ).alias("novelty"),
-        )
-    ).localCheckpoint()
-    # r14 unpersist discipline: per-doc output materialized, shingles freed
-    sh.unpersist()
-    return out
+                ).cast("long").alias("n_novel"),
+                F.round(
+                    F.sum(
+                        F.when(F.col("first_id") == F.col("id"), 1).otherwise(0)
+                    )
+                    / F.count(F.lit(1)),
+                    6,
+                ).alias("novelty"),
+            )
+        ).localCheckpoint()
 
 
 QUERIES["text_novelty"] = q_text_novelty
@@ -494,17 +489,14 @@ def q_text_simhash_hamming_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit_count(xor) on exact BIGINTs in both engines."""
     from giranking_spark.operators.dedup import simhash_signatures
 
-    sig = simhash_signatures(load_table(spark, sf_dir, "documents")).persist()
-    nxt = sig.select((F.col("id") - 1).alias("id"), F.col("simhash").alias("sim2"))
-    out = (
-        sig.join(nxt, "id")
-        .select(F.expr("bit_count(simhash ^ sim2)").cast("long").alias("hamming"))
-        .groupBy("hamming")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_pairs"))
-    ).localCheckpoint()
-    # r14 unpersist discipline: histogram materialized, signatures freed
-    sig.unpersist()
-    return out
+    with cached(simhash_signatures(load_table(spark, sf_dir, "documents"))) as sig:
+        nxt = sig.select((F.col("id") - 1).alias("id"), F.col("simhash").alias("sim2"))
+        return (
+            sig.join(nxt, "id")
+            .select(F.expr("bit_count(simhash ^ sim2)").cast("long").alias("hamming"))
+            .groupBy("hamming")
+            .agg(F.count(F.lit(1)).cast("long").alias("n_pairs"))
+        ).localCheckpoint()
 
 
 QUERIES["text_simhash_hamming_hist"] = q_text_simhash_hamming_hist
@@ -546,27 +538,24 @@ def q_text_shingle_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
             "shingle",
         )
         .distinct()
-        .persist()
     )
-    first_seen = sh.groupBy("shingle").agg(F.min("bucket").alias("first_bucket"))
-    per_bucket = (
-        sh.join(first_seen, "shingle")
-        .groupBy("bucket")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_shingles"),
-            F.sum(
-                F.when(F.col("bucket") == F.col("first_bucket"), 1).otherwise(0)
-            ).cast("long").alias("n_new"),
+    with cached(sh):
+        first_seen = sh.groupBy("shingle").agg(F.min("bucket").alias("first_bucket"))
+        per_bucket = (
+            sh.join(first_seen, "shingle")
+            .groupBy("bucket")
+            .agg(
+                F.count(F.lit(1)).cast("long").alias("n_shingles"),
+                F.sum(
+                    F.when(F.col("bucket") == F.col("first_bucket"), 1).otherwise(0)
+                ).cast("long").alias("n_new"),
+            )
         )
-    )
-    out = per_bucket.select(
-        "bucket", "n_shingles", "n_new",
-        F.round(F.col("n_new") / F.col("n_shingles").cast("double"), 6)
-        .alias("novelty"),
-    ).localCheckpoint()
-    # r14 unpersist discipline: bucket curve materialized, shingles freed
-    sh.unpersist()
-    return out
+        return per_bucket.select(
+            "bucket", "n_shingles", "n_new",
+            F.round(F.col("n_new") / F.col("n_shingles").cast("double"), 6)
+            .alias("novelty"),
+        ).localCheckpoint()
 
 
 QUERIES["text_shingle_novelty"] = q_text_shingle_novelty

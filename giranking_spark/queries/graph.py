@@ -18,6 +18,7 @@ import functools
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from giranking_spark.cache import cached
 from giranking_spark.config import LinkRankConfig, TrustRankConfig
 from giranking_spark.functions.stats import normal_cdf_sql
 from giranking_spark.operators import linkrank as lr
@@ -611,22 +612,21 @@ def q_rank_warm_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
     from giranking_spark.functions.hashing import md5_u32
 
     cfg = LinkRankConfig(superstep_count=WARM_STEPS + 1)
-    # Both phases consume the same derived edge relation; persist it ONCE
+    # Both phases consume the same derived edge relation; cache it ONCE
     # here so the upstream orders-x-lineitem join + distinct runs a single
     # time — phase A's md5 subset is a filter over the cache, not a second
     # derivation (r8 bench regression: each linkrank_raw call persists only
-    # its own input, so the shared upstream ran twice).
-    e_all = derive_edges(spark, sf_dir).persist()
-    e_old = e_all.filter(
-        md5_u32(F.concat(F.col("src"), F.lit(">"), F.col("dst")))
-        % WARM_OLD_MOD != 0
-    )
-    warm = linkrank_raw(None, e_old, cfg).select("id", "score")
-    final = linkrank_raw(warm, e_all, cfg)
-    # linkrank_raw checkpoints state per iteration, so the returned relation
-    # no longer depends on e_all's lineage
-    e_all.unpersist()
-    return final.select("id", F.round("score", 6).alias("score"))
+    # its own input, so the shared upstream ran twice). linkrank_raw
+    # checkpoints state per iteration, so the returned relation no longer
+    # depends on e_all's lineage.
+    with cached(derive_edges(spark, sf_dir)) as e_all:
+        e_old = e_all.filter(
+            md5_u32(F.concat(F.col("src"), F.lit(">"), F.col("dst")))
+            % WARM_OLD_MOD != 0
+        )
+        warm = linkrank_raw(None, e_old, cfg).select("id", "score")
+        final = linkrank_raw(warm, e_all, cfg)
+        return final.select("id", F.round("score", 6).alias("score"))
 
 
 def _warm_phase_sql(

@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from giranking_spark.cache import cached
 from giranking_spark.functions.hashing import (
     md5_u32_sql_duckdb,
     md5_u60_sql_duckdb,
@@ -995,53 +996,49 @@ def q_sketch_theta_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
             .limit(THETA_K)
         )
 
-    sa, sb = sk(THETA_A_TYPE).persist(), sk(THETA_B_TYPE).persist()
-    full = F.lit(int(KMV_SPACE))
-    ta = sa.agg(
-        F.count(F.lit(1)).alias("ka"),
-        F.when(F.count(F.lit(1)) < THETA_K, full).otherwise(F.max("h")).alias("theta_a"),
-    )
-    tb = sb.agg(
-        F.count(F.lit(1)).alias("kb"),
-        F.when(F.count(F.lit(1)) < THETA_K, full).otherwise(F.max("h")).alias("theta_b"),
-    )
-    thetas = ta.crossJoin(F.broadcast(tb)).select(
-        "ka", "kb", F.least("theta_a", "theta_b").alias("theta")
-    )
-    retained = (
-        sa.join(sb, "h")
-        .crossJoin(F.broadcast(thetas))
-        .filter(F.col("h") < F.col("theta"))
-        .groupBy()
-        .agg(F.count(F.lit(1)).cast("long").alias("n_retained"))
-    )
-    exact = (
-        ev.filter(F.col("event_type") == THETA_A_TYPE)
-        .select("user_id")
-        .intersect(
-            ev.filter(F.col("event_type") == THETA_B_TYPE).select("user_id")
+    with cached(sk(THETA_A_TYPE), sk(THETA_B_TYPE)) as (sa, sb):
+        full = F.lit(int(KMV_SPACE))
+        ta = sa.agg(
+            F.count(F.lit(1)).alias("ka"),
+            F.when(F.count(F.lit(1)) < THETA_K, full).otherwise(F.max("h")).alias("theta_a"),
         )
-        .groupBy()
-        .agg(F.count(F.lit(1)).cast("long").alias("exact_intersect"))
-    )
-    out = (
-        thetas.crossJoin(F.broadcast(retained))
-        .crossJoin(F.broadcast(exact))
-        .select(
-            F.col("ka").cast("long").alias("ka"),
-            F.col("kb").cast("long").alias("kb"),
-            "n_retained",
-            F.round(
-                F.col("n_retained") * F.lit(float(KMV_SPACE)) / F.col("theta"),
-                6,
-            ).alias("est_intersect"),
-            "exact_intersect",
+        tb = sb.agg(
+            F.count(F.lit(1)).alias("kb"),
+            F.when(F.count(F.lit(1)) < THETA_K, full).otherwise(F.max("h")).alias("theta_b"),
         )
-    ).localCheckpoint()
-    # r14 unpersist discipline: 1-row audit materialized, sketches freed
-    sa.unpersist()
-    sb.unpersist()
-    return out
+        thetas = ta.crossJoin(F.broadcast(tb)).select(
+            "ka", "kb", F.least("theta_a", "theta_b").alias("theta")
+        )
+        retained = (
+            sa.join(sb, "h")
+            .crossJoin(F.broadcast(thetas))
+            .filter(F.col("h") < F.col("theta"))
+            .groupBy()
+            .agg(F.count(F.lit(1)).cast("long").alias("n_retained"))
+        )
+        exact = (
+            ev.filter(F.col("event_type") == THETA_A_TYPE)
+            .select("user_id")
+            .intersect(
+                ev.filter(F.col("event_type") == THETA_B_TYPE).select("user_id")
+            )
+            .groupBy()
+            .agg(F.count(F.lit(1)).cast("long").alias("exact_intersect"))
+        )
+        return (
+            thetas.crossJoin(F.broadcast(retained))
+            .crossJoin(F.broadcast(exact))
+            .select(
+                F.col("ka").cast("long").alias("ka"),
+                F.col("kb").cast("long").alias("kb"),
+                "n_retained",
+                F.round(
+                    F.col("n_retained") * F.lit(float(KMV_SPACE)) / F.col("theta"),
+                    6,
+                ).alias("est_intersect"),
+                "exact_intersect",
+            )
+        ).localCheckpoint()
 
 
 QUERIES["sketch_theta_intersect"] = q_sketch_theta_intersect

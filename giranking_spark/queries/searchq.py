@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from giranking_spark.cache import cached
 from giranking_spark.functions.hashing import md5_u32, md5_u60, md5_u60_sql_duckdb
 from giranking_spark.queries.textq import WORDS_SQL
 from giranking_spark.sources.tables import load_table
@@ -38,28 +39,21 @@ BM25_QUERIES: dict[int, list[str]] = {
 
 
 def _tf_dl(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
-    """(doc_id, word, tf) and (doc_id, dl) over the documents table.
+    """(doc_id, word, tf) and (doc_id, dl) over the documents table, lazy.
 
-    Both relations are persisted: the BM25 dataflow references tf three
+    Callers cache both for the query: the BM25 dataflow references tf three
     times (per-term scores, document frequency, query-term extraction) and
-    dl three times (join, avgdl, N) — without the persist the tokenize +
+    dl three times (join, avgdl, N) — without the cache the tokenize +
     explode lineage re-executes per reference (measured 26.7 s → ~8 s at
-    sf0.1). r14 unpersist discipline: callers materialize their (top-k
-    sized) output eagerly and unpersist both relations before returning."""
+    sf0.1)."""
     from giranking_spark.operators.dedup import shingle_rows
 
     docs = load_table(spark, sf_dir, "documents")
     wx = shingle_rows(docs, 1).select(
         F.col("id").alias("doc_id"), F.col("shingle").alias("word")
     )
-    tf = (
-        wx.groupBy("doc_id", "word").agg(F.count(F.lit(1)).alias("tf")).persist()
-    )
-    dl = (
-        wx.groupBy("doc_id")
-        .agg(F.count(F.lit(1)).cast("double").alias("dl"))
-        .persist()
-    )
+    tf = wx.groupBy("doc_id", "word").agg(F.count(F.lit(1)).alias("tf"))
+    dl = wx.groupBy("doc_id").agg(F.count(F.lit(1)).cast("double").alias("dl"))
     return tf, dl
 
 
@@ -98,22 +92,19 @@ def q_text_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     df/avgdl/N are broadcast single-row (or tiny) aggregates — at 100 TB the
     only big shuffle is the (doc_id, word) term count, and it is pruned to
     query words BEFORE the join fan-in."""
-    tf, dl = _tf_dl(spark, sf_dir)
-    n_docs = dl.agg(F.count(F.lit(1)).cast("double").alias("n_docs"))
-    qterms = spark.createDataFrame(
-        [(q, t) for q, ts in BM25_QUERIES.items() for t in ts],
-        "query_id int, word string",
-    )
-    scored = _bm25_scores(tf, dl, n_docs, qterms)
-    w = Window.partitionBy("query_id").orderBy(F.desc("bm25"), F.asc("doc_id"))
-    out = (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= BM25_TOPK)
-        .select("query_id", "doc_id", "bm25")
-    ).localCheckpoint()
-    tf.unpersist()
-    dl.unpersist()
-    return out
+    with cached(*_tf_dl(spark, sf_dir)) as (tf, dl):
+        n_docs = dl.agg(F.count(F.lit(1)).cast("double").alias("n_docs"))
+        qterms = spark.createDataFrame(
+            [(q, t) for q, ts in BM25_QUERIES.items() for t in ts],
+            "query_id int, word string",
+        )
+        scored = _bm25_scores(tf, dl, n_docs, qterms)
+        w = Window.partitionBy("query_id").orderBy(F.desc("bm25"), F.asc("doc_id"))
+        return (
+            scored.withColumn("__rn", F.row_number().over(w))
+            .filter(F.col("__rn") <= BM25_TOPK)
+            .select("query_id", "doc_id", "bm25")
+        ).localCheckpoint()
 
 
 # ---------------------------------------------------------------------------
@@ -134,55 +125,52 @@ def q_search_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     score with a doc_id tiebreak, so the fused output is engine-stable."""
     from giranking_spark.operators.similarity import brute_force_topk
 
-    tf, dl = _tf_dl(spark, sf_dir)
-    n_docs = dl.agg(F.count(F.lit(1)).cast("double").alias("n_docs"))
-    qterms = (
-        tf.filter(F.col("doc_id") % RRF_QUERY_MOD == 0)
-        .select(F.col("doc_id").alias("query_id"), "word")
-        .distinct()
-    )
-    lex = _bm25_scores(tf, dl, n_docs, qterms).filter(
-        F.col("doc_id") != F.col("query_id")
-    )
-    wl = Window.partitionBy("query_id").orderBy(F.desc("bm25"), F.asc("doc_id"))
-    lex_rank = (
-        lex.withColumn("lex_rank", F.row_number().over(wl))
-        .filter(F.col("lex_rank") <= RRF_POOL)
-        .select("query_id", "doc_id", "lex_rank")
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    vec = brute_force_topk(
-        emb, emb.filter(F.col("vec_id") % RRF_QUERY_MOD == 0), k=RRF_POOL
-    )
-    wv = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    vec_rank = vec.select(
-        "query_id",
-        F.col("neighbor_id").alias("doc_id"),
-        F.row_number().over(wv).alias("vec_rank"),
-    )
-
-    fused = (
-        lex_rank.join(vec_rank, ["query_id", "doc_id"], "full_outer")
-        .select(
-            "query_id",
-            "doc_id",
-            F.round(
-                F.coalesce(1.0 / (F.lit(RRF_K) + F.col("lex_rank")), F.lit(0.0))
-                + F.coalesce(1.0 / (F.lit(RRF_K) + F.col("vec_rank")), F.lit(0.0)),
-                6,
-            ).alias("rrf"),
+    with cached(*_tf_dl(spark, sf_dir)) as (tf, dl):
+        n_docs = dl.agg(F.count(F.lit(1)).cast("double").alias("n_docs"))
+        qterms = (
+            tf.filter(F.col("doc_id") % RRF_QUERY_MOD == 0)
+            .select(F.col("doc_id").alias("query_id"), "word")
+            .distinct()
         )
-    )
-    wf = Window.partitionBy("query_id").orderBy(F.desc("rrf"), F.asc("doc_id"))
-    out = (
-        fused.withColumn("__rn", F.row_number().over(wf))
-        .filter(F.col("__rn") <= RRF_TOPK)
-        .select("query_id", "doc_id", "rrf")
-    ).localCheckpoint()
-    tf.unpersist()
-    dl.unpersist()
-    return out
+        lex = _bm25_scores(tf, dl, n_docs, qterms).filter(
+            F.col("doc_id") != F.col("query_id")
+        )
+        wl = Window.partitionBy("query_id").orderBy(F.desc("bm25"), F.asc("doc_id"))
+        lex_rank = (
+            lex.withColumn("lex_rank", F.row_number().over(wl))
+            .filter(F.col("lex_rank") <= RRF_POOL)
+            .select("query_id", "doc_id", "lex_rank")
+        )
+
+        emb = load_table(spark, sf_dir, "embeddings")
+        vec = brute_force_topk(
+            emb, emb.filter(F.col("vec_id") % RRF_QUERY_MOD == 0), k=RRF_POOL
+        )
+        wv = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
+        vec_rank = vec.select(
+            "query_id",
+            F.col("neighbor_id").alias("doc_id"),
+            F.row_number().over(wv).alias("vec_rank"),
+        )
+
+        fused = (
+            lex_rank.join(vec_rank, ["query_id", "doc_id"], "full_outer")
+            .select(
+                "query_id",
+                "doc_id",
+                F.round(
+                    F.coalesce(1.0 / (F.lit(RRF_K) + F.col("lex_rank")), F.lit(0.0))
+                    + F.coalesce(1.0 / (F.lit(RRF_K) + F.col("vec_rank")), F.lit(0.0)),
+                    6,
+                ).alias("rrf"),
+            )
+        )
+        wf = Window.partitionBy("query_id").orderBy(F.desc("rrf"), F.asc("doc_id"))
+        return (
+            fused.withColumn("__rn", F.row_number().over(wf))
+            .filter(F.col("__rn") <= RRF_TOPK)
+            .select("query_id", "doc_id", "rrf")
+        ).localCheckpoint()
 
 
 # ---------------------------------------------------------------------------

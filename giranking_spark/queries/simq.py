@@ -10,6 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from giranking_spark.cache import cached
 from giranking_spark.operators.similarity import (
     brute_force_range,
     brute_force_topk,
@@ -126,9 +127,7 @@ def q_embed_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
 OUTLIER_TOPK = 50
 
 
-def q_embed_outlier_scores(
-    spark: SparkSession, sf_dir: str, materialize: bool = True
-) -> DataFrame:
+def q_embed_outlier_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-space QC: top-``OUTLIER_TOPK`` outliers by Euclidean
     distance to the corpus mean vector, with a z-score against the distance
     distribution — the cheap screen that surfaces corrupted embeddings /
@@ -162,34 +161,23 @@ def q_embed_outlier_scores(
     )
     smu2 = F.aggregate(F.col("mu"), F.lit(0.0), lambda acc, x: acc + x * x)
     # (vec_id, dist) feeds both the stats aggregate and the final select —
-    # persist so the scan + fold pass runs once, release after the k-row
-    # result materializes
-    d = (
-        emb.crossJoin(F.broadcast(mv))
-        .select(
-            "vec_id",
-            F.sqrt(F.greatest(F.lit(0.0), sx2 - 2 * dot + smu2)).alias("dist"),
-        )
-        .persist()
+    # cache it so the scan + fold pass runs once
+    d = emb.crossJoin(F.broadcast(mv)).select(
+        "vec_id",
+        F.sqrt(F.greatest(F.lit(0.0), sx2 - 2 * dot + smu2)).alias("dist"),
     )
-    s = d.agg(
-        F.avg("dist").alias("md"), F.stddev_pop("dist").alias("sd")
-    )
-    out = (
-        d.crossJoin(F.broadcast(s))
-        .select(
-            "vec_id",
-            F.round("dist", 6).alias("dist"),
-            F.round((F.col("dist") - F.col("md")) / F.col("sd"), 6).alias("z"),
-        )
-        .orderBy(F.desc("dist"), F.asc("vec_id"))
-        .limit(OUTLIER_TOPK)
-    )
-    if not materialize:  # lazy plan for plan-shape tests
-        return out
-    out = out.localCheckpoint(eager=True)
-    d.unpersist()
-    return out
+    with cached(d):
+        s = d.agg(F.avg("dist").alias("md"), F.stddev_pop("dist").alias("sd"))
+        return (
+            d.crossJoin(F.broadcast(s))
+            .select(
+                "vec_id",
+                F.round("dist", 6).alias("dist"),
+                F.round((F.col("dist") - F.col("md")) / F.col("sd"), 6).alias("z"),
+            )
+            .orderBy(F.desc("dist"), F.asc("vec_id"))
+            .limit(OUTLIER_TOPK)
+        ).localCheckpoint()
 
 
 
@@ -996,40 +984,36 @@ def q_simsearch_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     from giranking_spark.operators.similarity import lsh_topk
 
     corpus, queries = _corpus_queries(spark, sf_dir)
-    exact = (
-        brute_force_topk(corpus, queries, k=TOPK)
-        .select("query_id", "neighbor_id")
-        .persist()
+    exact = brute_force_topk(corpus, queries, k=TOPK).select(
+        "query_id", "neighbor_id"
     )
-    qids = exact.select("query_id").distinct()
-    approx = {
-        "ivf": ivf_topk(corpus, queries, c=IVF_CELLS, nprobe=IVF_NPROBE, k=TOPK),
-        "lsh": lsh_topk(corpus, queries, k=TOPK),
-    }
-    outs = []
-    for method, adf in approx.items():
-        h = (
-            adf.select("query_id", "neighbor_id")
-            .join(exact, ["query_id", "neighbor_id"], "left_semi")
-            .groupBy("query_id")
-            .agg(F.count(F.lit(1)).alias("n_hit"))
-        )
-        outs.append(
-            qids.join(h, "query_id", "left").select(
-                "query_id",
-                F.lit(method).alias("method"),
-                F.coalesce("n_hit", F.lit(0)).cast("long").alias("n_hit"),
+    with cached(exact):
+        qids = exact.select("query_id").distinct()
+        approx = {
+            "ivf": ivf_topk(corpus, queries, c=IVF_CELLS, nprobe=IVF_NPROBE, k=TOPK),
+            "lsh": lsh_topk(corpus, queries, k=TOPK),
+        }
+        outs = []
+        for method, adf in approx.items():
+            h = (
+                adf.select("query_id", "neighbor_id")
+                .join(exact, ["query_id", "neighbor_id"], "left_semi")
+                .groupBy("query_id")
+                .agg(F.count(F.lit(1)).alias("n_hit"))
             )
-        )
-    out = outs[0]
-    for o in outs[1:]:
-        out = out.unionByName(o)
-    out = out.withColumn(
-        "recall", F.round(F.col("n_hit") / F.lit(TOPK), 6)
-    ).localCheckpoint()
-    # r14 unpersist discipline: per-query rows materialized, GEMM freed
-    exact.unpersist()
-    return out
+            outs.append(
+                qids.join(h, "query_id", "left").select(
+                    "query_id",
+                    F.lit(method).alias("method"),
+                    F.coalesce("n_hit", F.lit(0)).cast("long").alias("n_hit"),
+                )
+            )
+        out = outs[0]
+        for o in outs[1:]:
+            out = out.unionByName(o)
+        return out.withColumn(
+            "recall", F.round(F.col("n_hit") / F.lit(TOPK), 6)
+        ).localCheckpoint()
 
 
 QUERIES["simsearch_recall"] = q_simsearch_recall
@@ -1076,32 +1060,30 @@ def q_simsearch_ivfpq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     from giranking_spark.operators.similarity import ivf_pq_topk
 
     corpus, queries = _corpus_queries(spark, sf_dir)
-    exact = (
-        brute_force_topk(corpus, queries, k=TOPK)
-        .select("query_id", "neighbor_id")
-        .persist()
+    exact = brute_force_topk(corpus, queries, k=TOPK).select(
+        "query_id", "neighbor_id"
     )
-    approx = ivf_pq_topk(
-        corpus, queries, c=IVF_CELLS, nprobe=IVF_NPROBE,
-        m=PQ_M, ksub=PQ_KSUB, dim=PQ_DIM, k=TOPK,
-    )
-    hits = (
-        approx.select("query_id", "neighbor_id")
-        .join(exact, ["query_id", "neighbor_id"], "left_semi")
-        .groupBy("query_id")
-        .agg(F.count(F.lit(1)).alias("n_hit"))
-    )
-    qids = exact.select("query_id").distinct()
-    out = qids.join(hits, "query_id", "left").select(
-        "query_id",
-        F.coalesce("n_hit", F.lit(0)).cast("long").alias("n_hit"),
-    )
-    out = out.withColumn(
-        "recall", F.round(F.col("n_hit") / F.lit(TOPK), 6)
-    ).localCheckpoint()
-    # r14 unpersist discipline: per-query rows materialized, GEMM freed
-    exact.unpersist()
-    return out
+    with cached(exact):
+        approx = ivf_pq_topk(
+            corpus, queries, c=IVF_CELLS, nprobe=IVF_NPROBE,
+            m=PQ_M, ksub=PQ_KSUB, dim=PQ_DIM, k=TOPK,
+        )
+        hits = (
+            approx.select("query_id", "neighbor_id")
+            .join(exact, ["query_id", "neighbor_id"], "left_semi")
+            .groupBy("query_id")
+            .agg(F.count(F.lit(1)).alias("n_hit"))
+        )
+        qids = exact.select("query_id").distinct()
+        return (
+            qids.join(hits, "query_id", "left")
+            .select(
+                "query_id",
+                F.coalesce("n_hit", F.lit(0)).cast("long").alias("n_hit"),
+            )
+            .withColumn("recall", F.round(F.col("n_hit") / F.lit(TOPK), 6))
+            .localCheckpoint()
+        )
 
 
 QUERIES["simsearch_ivfpq_recall"] = q_simsearch_ivfpq_recall
@@ -1206,26 +1188,22 @@ def q_embed_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("i", "j")
         .agg(F.sum(F.col("q") * F.col("qj")).alias("gv"))
-        .persist()
     )
-    v = g.select("i").distinct().select(
-        F.col("i").alias("dim"), F.lit(1.0).alias("x")
-    )
-    for _ in range(PCA_ITERS):
-        w = (
-            g.join(v, g["j"] == v["dim"])
-            .groupBy("i")
-            .agg(F.sum(F.col("gv") * F.col("x")).alias("wx"))
+    with cached(g):
+        v = g.select("i").distinct().select(
+            F.col("i").alias("dim"), F.lit(1.0).alias("x")
         )
-        nn = w.agg(F.sqrt(F.sum(F.col("wx") * F.col("wx"))).alias("nn"))
-        v = w.crossJoin(F.broadcast(nn)).select(
-            F.col("i").alias("dim"), (F.col("wx") / F.col("nn")).alias("x")
-        )
-    # materialize the d-row result, then release the persisted Gram — the
-    # cache must not leak across invocations (the result no longer needs it)
-    out = v.select("dim", F.round("x", 6).alias("loading")).localCheckpoint(eager=True)
-    g.unpersist()
-    return out
+        for _ in range(PCA_ITERS):
+            w = (
+                g.join(v, g["j"] == v["dim"])
+                .groupBy("i")
+                .agg(F.sum(F.col("gv") * F.col("x")).alias("wx"))
+            )
+            nn = w.agg(F.sqrt(F.sum(F.col("wx") * F.col("wx"))).alias("nn"))
+            v = w.crossJoin(F.broadcast(nn)).select(
+                F.col("i").alias("dim"), (F.col("wx") / F.col("nn")).alias("x")
+            )
+        return v.select("dim", F.round("x", 6).alias("loading")).localCheckpoint()
 
 
 QUERIES["embed_pca_power"] = q_embed_pca_power
@@ -1807,45 +1785,40 @@ ORACLES["simsearch_maxdot"] = (
 def _recall_summary(exact: DataFrame, ann: DataFrame) -> DataFrame:
     """(n_queries, k, mean_recall, n_perfect) of ``ann`` vs the ``exact``
     ground truth; both are (query_id, neighbor_id) relations."""
-    # persist the (tiny) pair lists: ``exact`` is referenced by the
+    # cache the (tiny) pair lists: ``exact`` is referenced by the
     # semi-join AND the per-query count, so the brute-force GEMM top-k
     # behind it executed twice per recall gate (r13; ReusedExchange does
     # not fire across the aggregate/join split — same pattern as
-    # dedup_recall_eval). r14 unpersist discipline: the 1-row summary is
-    # materialized eagerly and both caches released before return (eager
-    # .localCheckpoint() of the pair lists was measured ~20% slower).
-    exact = exact.persist()
-    ann = ann.persist()
-    hits = exact.join(ann, ["query_id", "neighbor_id"], "left_semi")
-    per_q = (
-        exact.groupBy("query_id")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_exact"))
-        .join(
-            hits.groupBy("query_id").agg(
-                F.count(F.lit(1)).cast("long").alias("n_hit")
-            ),
-            "query_id",
-            "left",
+    # dedup_recall_eval). Eager .localCheckpoint() of the pair lists was
+    # measured ~20% slower. A caller's own cache of either is left alone.
+    with cached(exact, ann):
+        hits = exact.join(ann, ["query_id", "neighbor_id"], "left_semi")
+        per_q = (
+            exact.groupBy("query_id")
+            .agg(F.count(F.lit(1)).cast("long").alias("n_exact"))
+            .join(
+                hits.groupBy("query_id").agg(
+                    F.count(F.lit(1)).cast("long").alias("n_hit")
+                ),
+                "query_id",
+                "left",
+            )
+            .select(
+                "query_id",
+                "n_exact",
+                F.coalesce("n_hit", F.lit(0)).cast("long").alias("n_hit"),
+            )
         )
-        .select(
-            "query_id",
-            "n_exact",
-            F.coalesce("n_hit", F.lit(0)).cast("long").alias("n_hit"),
-        )
-    )
-    out = per_q.groupBy().agg(
-        F.count(F.lit(1)).cast("long").alias("n_queries"),
-        F.lit(TOPK).cast("long").alias("k"),
-        F.round(
-            F.sum("n_hit") / F.sum("n_exact").cast("double"), 6
-        ).alias("mean_recall"),
-        F.sum(
-            F.when(F.col("n_hit") == F.col("n_exact"), 1).otherwise(0)
-        ).cast("long").alias("n_perfect"),
-    ).localCheckpoint()
-    exact.unpersist()
-    ann.unpersist()
-    return out
+        return per_q.groupBy().agg(
+            F.count(F.lit(1)).cast("long").alias("n_queries"),
+            F.lit(TOPK).cast("long").alias("k"),
+            F.round(
+                F.sum("n_hit") / F.sum("n_exact").cast("double"), 6
+            ).alias("mean_recall"),
+            F.sum(
+                F.when(F.col("n_hit") == F.col("n_exact"), 1).otherwise(0)
+            ).cast("long").alias("n_perfect"),
+        ).localCheckpoint()
 
 
 def _recall_summary_oracle(ann_sql: str, neighbor_col: str = "neighbor_id") -> str:

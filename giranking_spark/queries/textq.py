@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from giranking_spark.cache import cached
 from giranking_spark.functions.hashing import md5_u32_sql_duckdb
 from giranking_spark.functions.text import LANG_ORDER, STOPWORDS, words
 from giranking_spark.operators.textops import (
@@ -353,38 +354,35 @@ def q_text_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     touches the corpus again.  Integer products inside the log keep the
     double deterministic cross-engine (exact long arithmetic, one divide,
     one ln, round-6)."""
-    pairs = q_text_cooc(spark, sf_dir).persist()
-    tot = pairs.agg(F.sum("n").cast("long").alias("tot"))
-    marg = pairs.groupBy("w1").agg(F.sum("n").cast("long").alias("m1"))
-    out = (
-        pairs.join(marg, "w1")
-        .join(
-            marg.select(
-                F.col("w1").alias("w2"), F.col("m1").alias("m2")
-            ),
-            "w2",
-        )
-        .crossJoin(F.broadcast(tot))
-        .select(
-            "w1",
-            "w2",
-            "n",
-            # double BEFORE the multiply: BIGINT*BIGINT overflows (DuckDB
-            # raises, ANSI Spark throws) at large corpora, and the ln
-            # doesn't need exact integer products — IEEE double multiply is
-            # bit-identical cross-engine, so round-6 parity is unaffected
-            F.round(
-                F.log(
-                    (F.col("n").cast("double") * F.col("tot"))
-                    / (F.col("m1").cast("double") * F.col("m2"))
+    with cached(q_text_cooc(spark, sf_dir)) as pairs:
+        tot = pairs.agg(F.sum("n").cast("long").alias("tot"))
+        marg = pairs.groupBy("w1").agg(F.sum("n").cast("long").alias("m1"))
+        return (
+            pairs.join(marg, "w1")
+            .join(
+                marg.select(
+                    F.col("w1").alias("w2"), F.col("m1").alias("m2")
                 ),
-                6,
-            ).alias("pmi"),
-        )
-    ).localCheckpoint()
-    # r14 unpersist discipline: PMI rows materialized, pair counts freed
-    pairs.unpersist()
-    return out
+                "w2",
+            )
+            .crossJoin(F.broadcast(tot))
+            .select(
+                "w1",
+                "w2",
+                "n",
+                # double BEFORE the multiply: BIGINT*BIGINT overflows (DuckDB
+                # raises, ANSI Spark throws) at large corpora, and the ln
+                # doesn't need exact integer products — IEEE double multiply is
+                # bit-identical cross-engine, so round-6 parity is unaffected
+                F.round(
+                    F.log(
+                        (F.col("n").cast("double") * F.col("tot"))
+                        / (F.col("m1").cast("double") * F.col("m2"))
+                    ),
+                    6,
+                ).alias("pmi"),
+            )
+        ).localCheckpoint()
 
 
 QUERIES = {
@@ -917,7 +915,7 @@ def q_text_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     # this query keeps the checkpoint form; the final output checkpoint
     # below cuts the returned plan's reference to db, so db's blocks die
     # at the first driver GC after return instead of living as long as the
-    # caller holds the result (r14 unpersist discipline).
+    # caller holds the result.
     db = (
         toks.select(
             "doc_id", (md5_u32(F.col("word")) % DSIR_BUCKETS).alias("bkt")

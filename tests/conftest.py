@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import contextlib
 import os
 
 import pytest
@@ -27,3 +28,22 @@ def spark() -> SparkSession:
 
 
 SF_SMALL = os.environ.get("SPARK_GRAFT_SF_SMALL", "/root/testdata/sf0.001")
+
+
+@contextlib.contextmanager
+def lazy_checkpoints():
+    """Neuter DataFrame.localCheckpoint for the duration of a plan pin.
+
+    Query outputs are eagerly checkpointed, which collapses explain() to a
+    bare `Scan ExistingRDD` — positive plan assertions would go vacuous.
+    Building the query under this context keeps the honest lazy pipeline
+    visible (the same dump-only trick as tools/dump_plans.py
+    SPARK_GRAFT_PLANS_NO_CHECKPOINT)."""
+    from pyspark.sql.classic.dataframe import DataFrame as _DF
+
+    orig = _DF.localCheckpoint
+    _DF.localCheckpoint = lambda self, eager=True: self
+    try:
+        yield
+    finally:
+        _DF.localCheckpoint = orig

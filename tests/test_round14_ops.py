@@ -84,6 +84,28 @@ QUERY_KEYS = [
     "graph_wcc_bfs_layers",
     "graph_scc",
     "dedup_clusters",
+    # every other query whose reuse cache is a cached() block
+    "dedup_ngram_jaccard",
+    "dedup_minhash_lsh",
+    "dedup_minhash_estimate",
+    "dedup_containment",
+    "embed_semdedup",
+    "graph_walks",
+    "graph_kcore",
+    "graph_degree_assort",
+    "graph_modularity",
+    "graph_clustering_coef",
+    "graph_local_bridges",
+    "embed_outlier_scores",
+    "simsearch_ivfpq_recall",
+    "embed_pca_power",
+    "text_novelty",
+    "text_simhash_hamming_hist",
+    "text_shingle_novelty",
+    "text_bm25",
+    "sketch_theta_intersect",
+    "events_anomaly_mad",
+    "rank_warm_restart",
 ]
 
 
@@ -107,6 +129,48 @@ def test_no_cached_relation_outlives_the_result(spark, key):
         f"{key}: {n - base} persisted relations outlive the call "
         "(cache leak — the r13 persist-without-unpersist regression)"
     )
+
+
+def test_recall_summary_keeps_a_caller_cache(spark):
+    """A relation its caller cached is used as is and stays cached: only
+    the code that created a cache releases it. The summary's own cache of
+    the uncached side is released on return."""
+    from pyspark import StorageLevel
+
+    from giranking_spark.queries.simq import _recall_summary
+
+    spark.catalog.clearCache()
+    base = _n_leaked(spark)
+    rows = [(q, n) for q in range(3) for n in range(4)]
+    exact = spark.createDataFrame(rows, "query_id long, neighbor_id long").persist()
+    ann = spark.createDataFrame(rows[::2], "query_id long, neighbor_id long")
+    try:
+        got = _recall_summary(exact, ann).first()
+        assert exact.storageLevel != StorageLevel.NONE
+        assert ann.storageLevel == StorageLevel.NONE
+        assert _n_leaked(spark) == base + 1  # the caller's exact, nothing else
+        assert (got.n_queries, got.mean_recall, got.n_perfect) == (3, 0.5, 0)
+    finally:
+        exact.unpersist()
+
+
+def test_cached_block_that_raises_leaves_no_cache(spark):
+    """An exception inside a cached() block still releases what the block
+    persisted."""
+    from pyspark import StorageLevel
+
+    from giranking_spark.cache import cached
+
+    spark.catalog.clearCache()
+    base = _n_leaked(spark)
+    df = spark.range(100).selectExpr("id", "id % 7 AS m")
+    with pytest.raises(RuntimeError):
+        with cached(df):
+            assert df.groupBy("m").count().count() == 7  # fills the cache
+            assert _n_leaked(spark) == base + 1
+            raise RuntimeError("mid-block failure")
+    assert df.storageLevel == StorageLevel.NONE
+    assert _n_leaked(spark) == base
 
 
 def test_wedge_pair_stage_is_codegen_join_not_hof_explode(spark):

@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 from giranking_spark.config import LinkRankConfig
 from giranking_spark.operators.linkrank import linkrank_raw
 from giranking_spark.sources.tables import derive_edges, load_table
-from tests.conftest import SF_SMALL
+from tests.conftest import SF_SMALL, lazy_checkpoints
 
 
 def plan_of(df) -> str:
@@ -31,28 +31,6 @@ def plan_of(df) -> str:
     with contextlib.redirect_stdout(buf):
         df.explain("formatted")
     return buf.getvalue()
-
-
-import contextlib as _ctx  # noqa: E402
-
-
-@_ctx.contextmanager
-def lazy_checkpoints():
-    """Neuter DataFrame.localCheckpoint for the duration of a plan pin.
-
-    r14's unpersist discipline eagerly checkpoints query outputs, which
-    collapses explain() to a bare `Scan ExistingRDD` — the positive plan
-    assertions below would go vacuous. Building the query under this
-    context keeps the honest lazy pipeline visible (the same dump-only
-    trick as tools/dump_plans.py SPARK_GRAFT_PLANS_NO_CHECKPOINT)."""
-    from pyspark.sql.classic.dataframe import DataFrame as _DF
-
-    orig = _DF.localCheckpoint
-    _DF.localCheckpoint = lambda self, eager=True: self
-    try:
-        yield
-    finally:
-        _DF.localCheckpoint = orig
 
 
 def test_filter_pushdown_reaches_parquet(spark):
@@ -375,6 +353,9 @@ FIXPOINT_JOBS_BEFORE = {
     "graph_wcc_bfs_layers": 28,
     "graph_scc": 9,
     "dedup_clusters": 26,
+    # k-truss, measured the same way before its checkpoint-then-count
+    # barriers were fused
+    "graph_ktruss": 9,
 }
 
 
@@ -620,16 +601,16 @@ def test_semdedup_pair_join_is_cell_equi_join(spark):
     from giranking_spark.operators.similarity import semdedup
 
     emb = load_table(spark, SF_SMALL, "embeddings")
-    # materialize=False keeps the lazy plan: an eager-checkpointed result
+    # lazy checkpoints keep the lazy plan: an eager-checkpointed result
     # would show only the materialized scan and the assertion would be
     # vacuously true forever
-    plan = plan_of(semdedup(emb, 0.3, c=4, iters=1, materialize=False))
+    with lazy_checkpoints():
+        plan = plan_of(semdedup(emb, 0.3, c=4, iters=1))
     assert "CartesianProduct" not in plan
     # r10: the within-cell scoring is the Arrow GEMM candidate stage, not
     # a Sigma|cell|^2 Column-expression join
     assert "FlatMapGroupsInPandas" in plan
     assert "BatchEvalPython" not in plan
-    spark.catalog.clearCache()
 
 
 def test_sssp_round_is_single_aggregation_shuffle(spark):
@@ -683,6 +664,47 @@ def test_per_seed_bfs_state_sized_per_seed(spark):
         ("f", "f"): 0, ("f", "g"): 1,
     }
     assert got == want
+
+
+def test_betweenness_state_sized_per_pivot(spark, monkeypatch):
+    """betweenness_approx keys its level state (seed, id), so a level can
+    hold vertices x pivots rows: the broadcast decision must size it so.
+    Under a threshold that fits one row per vertex but not one per
+    (pivot, vertex) pair, the state side must not broadcast, and the
+    scores equal those of a run that broadcasts."""
+    import giranking_spark.operators.betweenness as bc
+
+    pairs = [("a", "b"), ("b", "c"), ("c", "d"), ("d", "e"), ("f", "g")]
+    e = spark.createDataFrame(pairs, "src string, dst string")
+    seeds = spark.createDataFrame([(s,) for s in "acef"], "id string")
+    n_verts = 7
+    decisions: set[bool] = set()
+    state_side = bc._state_side
+
+    def recording_state_side(df, do_broadcast):
+        decisions.add(do_broadcast)
+        return state_side(df, do_broadcast)
+
+    monkeypatch.setattr(bc, "_state_side", recording_state_side)
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+
+    def run(threshold):
+        spark.conf.set(key, str(threshold))
+        decisions.clear()
+        got = {r.id: r.bc for r in bc.betweenness_approx(e, seeds, 3).collect()}
+        return got, set(decisions)
+
+    try:
+        # one 64 B row per vertex fits twice over; one per (pivot, vertex)
+        # pair does not
+        tight, tight_bcast = run(2 * 64 * n_verts)
+        wide, wide_bcast = run(64 * 1024 * 1024)
+    finally:
+        spark.conf.set(key, old)
+    assert tight_bcast == {False}
+    assert wide_bcast == {True}
+    assert tight == wide and tight
 
 
 def test_partition_pruned_scan_prunes_directories(spark):
@@ -759,13 +781,10 @@ def test_walk_steps_are_equi_joins(spark):
     from giranking_spark.operators.walks import random_walks
     from giranking_spark.sources.tables import derive_edges
 
-    handles: list = []
-    walks = random_walks(
-        undirected_edges(derive_edges(spark, SF_SMALL), dedup=False),
-        2,
-        materialize=False,
-        persisted_out=handles,
-    )
+    with lazy_checkpoints():
+        walks = random_walks(
+            undirected_edges(derive_edges(spark, SF_SMALL), dedup=False), 2
+        )
     plan = plan_of(walks)
     assert "CartesianProduct" not in plan
     assert "BatchEvalPython" not in plan
@@ -773,11 +792,6 @@ def test_walk_steps_are_equi_joins(spark):
     # construction (unique-by-src arrays), visible in the plan as
     # element_at over nbrs rather than a positional-index join
     assert "element_at" in plan and "nbrs" in plan, plan
-    # targeted cleanup via the returned handles (adjacency + per-step
-    # states) — no session-wide clearCache needed
-    assert len(handles) == 1 + 2  # adj, one state per step
-    for df in handles:
-        df.unpersist()
 
 
 def test_aqe_splits_skewed_join_at_runtime(spark):
@@ -876,11 +890,11 @@ def test_degree_assort_broadcasts_degree_attach(spark):
     persisted undirected-edge cache; no cartesian, no Python."""
     from giranking_spark.queries.compq import q_graph_degree_assort
 
-    plan = plan_of(q_graph_degree_assort(spark, SF_SMALL, materialize=False))
+    with lazy_checkpoints():
+        plan = plan_of(q_graph_degree_assort(spark, SF_SMALL))
     assert "BroadcastHashJoin" in plan
     assert "CartesianProduct" not in plan
     assert "BatchEvalPython" not in plan
-    spark.catalog.clearCache()
 
 
 def test_outlier_scores_mean_rides_as_broadcast_topk(spark):
@@ -890,12 +904,12 @@ def test_outlier_scores_mean_rides_as_broadcast_topk(spark):
     never a global sort."""
     from giranking_spark.queries.simq import q_embed_outlier_scores
 
-    plan = plan_of(q_embed_outlier_scores(spark, SF_SMALL, materialize=False))
+    with lazy_checkpoints():
+        plan = plan_of(q_embed_outlier_scores(spark, SF_SMALL))
     assert "BroadcastNestedLoopJoin" in plan
     assert "TakeOrderedAndProject" in plan
     assert "CartesianProduct" not in plan
     assert "BatchEvalPython" not in plan
-    spark.catalog.clearCache()
 
 
 def test_jpeg_features_stays_arrow_batched_and_pruned(spark):
@@ -1466,12 +1480,9 @@ def test_seasonal_anomaly_baseline_broadcasts(spark):
 def test_coreness_round_filters_are_semi_joins(spark):
     """Every coreness peel round filters both endpoints with LEFT SEMI
     single-column relations — no payload amplification."""
-    from giranking_spark.operators.components import kcore_peel
-
-    # same round shape as coreness_peel's inner loop (shared pattern)
-    e = spark.createDataFrame([(1, 2), (2, 3)], "src long, dst long")
     from giranking_spark.operators.components import coreness_peel
 
+    e = spark.createDataFrame([(1, 2), (2, 3)], "src long, dst long")
     plan = plan_of(coreness_peel(e, kmax=2, rounds=1))
     assert "CartesianProduct" not in plan
     assert "BatchEvalPython" not in plan

@@ -9,7 +9,7 @@ import re
 
 from pyspark.sql import functions as F
 
-from tests.conftest import SF_SMALL
+from tests.conftest import SF_SMALL, lazy_checkpoints
 
 
 def plan_of(df) -> str:
@@ -144,11 +144,11 @@ class TestEmbedOutliers:
     def test_no_python_and_broadcast_mean(self, spark):
         from giranking_spark.queries.simq import q_embed_outlier_scores
 
-        plan = plan_of(q_embed_outlier_scores(spark, SF_SMALL, materialize=False))
+        with lazy_checkpoints():
+            plan = plan_of(q_embed_outlier_scores(spark, SF_SMALL))
         assert "BatchEvalPython" not in plan
         assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan
         assert "TakeOrderedAndProject" in plan
-        spark.catalog.clearCache()
 
 
 class TestStreamHllDaily:

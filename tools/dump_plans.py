@@ -3,7 +3,8 @@
 Usage: python tools/dump_plans.py <outdir> <suffix> q1,q2,...
 Writes <outdir>/<query>_<suffix>.txt. Special names:
   rank_state0      — initial_state(None, derived edges) plan
-  ppr_base         — the PPR base/state0 construction plan
+  lpa_round, katz_round, opic_round
+                   — one superstep of that loop without its checkpoint
 """
 
 from __future__ import annotations
@@ -33,10 +34,10 @@ def main() -> None:
     spark = get_spark("plan-dump", cpus=8)
     spark.sparkContext.setLogLevel("ERROR")
     if os.environ.get("SPARK_GRAFT_PLANS_NO_CHECKPOINT"):
-        # r14: queries that eagerly localCheckpoint their output (unpersist
-        # discipline) explain() as a bare Scan ExistingRDD — neuter the
-        # checkpoint so the dump shows the honest pipeline plan the
-        # checkpoint would otherwise hide (dump-only; never the library)
+        # queries that eagerly localCheckpoint their output explain() as a
+        # bare Scan ExistingRDD — neuter the checkpoint so the dump shows
+        # the honest pipeline plan it would otherwise hide (dump-only;
+        # never the library)
         # Spark 4: sessions hand out pyspark.sql.classic.dataframe.DataFrame,
         # which overrides the abstract base — patch the concrete class
         from pyspark.sql.classic.dataframe import DataFrame as _DF
@@ -51,34 +52,27 @@ def main() -> None:
             from giranking_spark.sources.tables import derive_edges
 
             df = initial_state(None, derive_edges(spark, SF))
-        elif name == "lpa_round":
-            # one synchronous LPA round WITHOUT the per-round checkpoint
-            # (which collapses explain() to a Scan ExistingRDD) — the
-            # honest in-loop plan the fixpoint repeats every round
-            import giranking_spark.operators.labelprop as lp
+        elif name in ("lpa_round", "katz_round", "opic_round"):
+            # one superstep WITHOUT the fixpoint driver's per-superstep
+            # checkpoint (which collapses explain() to a Scan ExistingRDD) —
+            # the honest in-loop plan the loop repeats every superstep
+            import giranking_spark.operators.linkrank as lr
+            from giranking_spark.operators.katz import katz_scores
+            from giranking_spark.operators.labelprop import label_propagation
+            from giranking_spark.operators.opic import opic_scores
             from giranking_spark.sources.tables import derive_edges
 
-            orig = lp._checkpoint
-            lp._checkpoint = lambda df: df
+            fn, kw = {
+                "lpa_round": (label_propagation, {"rounds": 1}),
+                "katz_round": (katz_scores, {"iterations": 1}),
+                "opic_round": (opic_scores, {"iterations": 1}),
+            }[name]
+            orig = lr._checkpoint
+            lr._checkpoint = lambda df, reliable=False: df
             try:
-                df = lp.label_propagation(derive_edges(spark, SF), rounds=1)
+                df = fn(derive_edges(spark, SF), **kw)
             finally:
-                lp._checkpoint = orig
-        elif name in ("katz_round", "opic_round"):
-            # one superstep WITHOUT the per-round checkpoint — the honest
-            # in-loop plan (same rationale as lpa_round)
-            import giranking_spark.operators.katz as kz
-            import giranking_spark.operators.opic as op
-            from giranking_spark.sources.tables import derive_edges
-
-            mod = kz if name == "katz_round" else op
-            orig = mod._checkpoint
-            mod._checkpoint = lambda df: df
-            try:
-                fn = kz.katz_scores if name == "katz_round" else op.opic_scores
-                df = fn(derive_edges(spark, SF), iterations=1)
-            finally:
-                mod._checkpoint = orig
+                lr._checkpoint = orig
         else:
             df = qs[name](spark, SF)
         path = os.path.join(outdir, f"{name}_{suffix}.txt")
