@@ -12,7 +12,10 @@ cost k× state rows, never k propagations); every round — forward or
 backward — is one equi-join with the symmetrized edge relation plus one
 (seed, id) aggregation with map-side partial agg; state is
 checkpoint-truncated per level and the driver sees one frontier-count
-scalar per forward round. The depth cap is a shared contract with the
+scalar per forward round. The edge relation's cache, the state-side
+dispatch and the sizing of the level state are the fixpoint driver's
+(operators/linkrank.py:Fixpoint); the two sweeps drive their levels
+through it. The depth cap is a shared contract with the
 unrolled-CTE oracle (bfs_distances pattern), so engine parity holds even
 for graphs wider than the cap.
 
@@ -27,14 +30,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from giranking_spark.operators.components import undirected_edges
-from giranking_spark.operators.linkrank import (
-    _checkpoint,
-    _checkpoint_lazy,
-    _checkpoint_nrows,
-    _state_side,
-    _set_checkpoint_dir_once,
-    _should_broadcast_state,
-)
+from giranking_spark.operators.linkrank import Fixpoint, _checkpoint_nrows
 
 #: shared Spark/oracle contract: number of hash-picked pivots and the BFS
 #: depth cap (paths longer than BC_DEPTH hops are ignored on BOTH sides —
@@ -52,98 +48,87 @@ def betweenness_approx(
     """(id, bc) — pivot-sampled distance-bounded betweenness over the
     undirected graph of ``edges``; ``seeds`` is an (id) relation of pivots.
     Only vertices with nonzero accumulated dependency appear."""
-    spark = edges.sparkSession
-    width = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    # hash-partition by src once; checkpoint PRESERVES the partitioning, so
+    width = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    # hash-partitioned by src once and persisted by the fixpoint driver:
     # neither sweep ever re-exchanges or re-sorts the edge relation
-    e = undirected_edges(edges).repartition(width, "src")
-    reliable = _set_checkpoint_dir_once(e, checkpoint_dir)
-    e = _checkpoint(e, reliable)
-    verts = e.select(F.col("src").alias("id")).distinct()
-
-    # forward sweep: levels[l] = (seed, id, sigma) at BFS distance l
-    frontier = _checkpoint_lazy(
-        seeds.select(
-            F.col("id").alias("seed"),
-            F.col("id"),
-            F.lit(1).cast("long").alias("sigma"),
-        ),
-        reliable,
+    fx = Fixpoint(
+        undirected_edges(edges).repartition(width, "src"),
+        layout=None,
+        checkpoint_dir=checkpoint_dir,
     )
-    # ONE probe job counts the vertices and the pivots (its full scan of
-    # the seeds fills their lazy checkpoint): the (seed, id)-keyed level
-    # state reaches up to one row per vertex per pivot
-    n_v, n_pivots = (
-        verts.select(F.lit(True).alias("_vert"))
-        .unionByName(frontier.select(F.lit(False).alias("_vert")))
-        .agg(F.count_if("_vert"), F.count_if(~F.col("_vert")))
-        .first()
-    )
-    # width probe over a bounded vertex slice, not the whole edge relation —
-    # the measured-width scan inside _should_broadcast_state is O(rows given)
-    bcast = _should_broadcast_state(e, n_v * n_pivots, verts.limit(10_000))
-    levels: list[DataFrame] = [frontier]
-    visited = frontier.select("seed", "id")  # lazy union of checkpointed parts
-    for _ in range(int(depth)):
-        nxt = (
-            e.join(
-                _state_side(frontier, bcast), e.src == frontier.id
-            )
-            .select("seed", F.col("dst").alias("id"), "sigma")
-            .join(visited, ["seed", "id"], "left_anti")
-            .groupBy("seed", "id")
-            .agg(F.sum("sigma").alias("sigma"))
-        )
-        frontier, n_frontier = _checkpoint_nrows(nxt, reliable)
-        if n_frontier == 0:
-            break
-        levels.append(frontier)
-        visited = visited.unionByName(frontier.select("seed", "id"))
-
-    # backward sweep: delta at the deepest level is 0; each shallower level
-    # pulls (sigma_v / sigma_w) * (1 + delta_w) from its successors
-    delta = _checkpoint(
-        levels[-1].select("seed", "id", F.lit(0.0).alias("delta")),
-        reliable,
-    )
-    acc: list[DataFrame] = []
-    if len(levels) > 1:
-        acc.append(delta)  # deepest level contributes its (zero) deltas
-    for l in range(len(levels) - 2, -1, -1):
-        lv = levels[l]
-        succ = delta.select(
-            "seed",
-            F.col("id").alias("_w"),
-            F.col("delta").alias("_wd"),
-        )
-        sig_w = levels[l + 1].select(
-            "seed", F.col("id").alias("_w"), F.col("sigma").alias("_ws")
-        )
-        pulled = (
-            e.join(_state_side(lv, bcast), e.src == lv.id)
-            .select("seed", "id", "sigma", F.col("dst").alias("_w"))
-            .join(sig_w, ["seed", "_w"])
-            .join(succ, ["seed", "_w"])
-            .groupBy("seed", "id", "sigma")
-            .agg(
-                F.sum(
-                    (F.col("sigma") / F.col("_ws"))
-                    * (F.lit(1.0) + F.col("_wd"))
-                ).alias("delta")
-            )
-            .select("seed", "id", "delta")
-        )
-        # vertices at this level with no successors keep delta 0
-        delta = _checkpoint(
-            lv.select("seed", "id")
-            .join(pulled, ["seed", "id"], "left")
-            .select(
-                "seed", "id", F.coalesce("delta", F.lit(0.0)).alias("delta")
+    try:
+        # forward sweep: levels[l] = (seed, id, sigma) at BFS distance l; the
+        # (seed, id)-keyed level state reaches up to one row per vertex per
+        # pivot, and the driver's probe sizes it so
+        frontier = fx.start(
+            seeds.select(
+                F.col("id").alias("seed"),
+                F.col("id"),
+                F.lit(1).cast("long").alias("sigma"),
             ),
-            reliable,
+            keys=("seed", "id"),
+            seeded=True,
         )
-        if l >= 1:  # pivots themselves are endpoints, not intermediates
-            acc.append(delta)
+        levels: list[DataFrame] = [frontier]
+        visited = frontier.select("seed", "id")  # lazy union of checkpointed parts
+        for _ in range(int(depth)):
+            nxt = (
+                fx.join(frontier)
+                .select("seed", F.col("dst").alias("id"), "sigma")
+                .join(visited, ["seed", "id"], "left_anti")
+                .groupBy("seed", "id")
+                .agg(F.sum("sigma").alias("sigma"))
+            )
+            frontier, n_frontier = _checkpoint_nrows(nxt, fx.reliable)
+            if n_frontier == 0:
+                break
+            levels.append(frontier)
+            visited = visited.unionByName(frontier.select("seed", "id"))
+
+        # backward sweep: delta at the deepest level is 0; each shallower
+        # level pulls (sigma_v / sigma_w) * (1 + delta_w) from its successors
+        delta = fx.checkpoint(
+            levels[-1].select("seed", "id", F.lit(0.0).alias("delta"))
+        )
+        acc: list[DataFrame] = []
+        if len(levels) > 1:
+            acc.append(delta)  # deepest level contributes its (zero) deltas
+        for l in range(len(levels) - 2, -1, -1):
+            lv = levels[l]
+            succ = delta.select(
+                "seed",
+                F.col("id").alias("_w"),
+                F.col("delta").alias("_wd"),
+            )
+            sig_w = levels[l + 1].select(
+                "seed", F.col("id").alias("_w"), F.col("sigma").alias("_ws")
+            )
+            pulled = (
+                fx.join(lv)
+                .select("seed", "id", "sigma", F.col("dst").alias("_w"))
+                .join(sig_w, ["seed", "_w"])
+                .join(succ, ["seed", "_w"])
+                .groupBy("seed", "id", "sigma")
+                .agg(
+                    F.sum(
+                        (F.col("sigma") / F.col("_ws"))
+                        * (F.lit(1.0) + F.col("_wd"))
+                    ).alias("delta")
+                )
+                .select("seed", "id", "delta")
+            )
+            # vertices at this level with no successors keep delta 0
+            delta = fx.checkpoint(
+                lv.select("seed", "id")
+                .join(pulled, ["seed", "id"], "left")
+                .select(
+                    "seed", "id", F.coalesce("delta", F.lit(0.0)).alias("delta")
+                )
+            )
+            if l >= 1:  # pivots themselves are endpoints, not intermediates
+                acc.append(delta)
+    finally:
+        fx.release()
     if not acc:  # nothing reachable beyond the pivots themselves
         return seeds.select("id", F.lit(0.0).alias("bc")).limit(0)
     out = acc[0]

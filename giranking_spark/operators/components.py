@@ -12,10 +12,14 @@ Scale notes:
   driver (operators/linkrank.py:Fixpoint) in its convergence mode, with
   one shared superstep (linkrank.py:min_relax): the frontier's messages
   joined from the edges, unioned with the state's own rows, one
-  min-aggregate shuffle. The driver owns the edge cache, the dispatch
+  min-aggregate shuffle. The k-core peel runs on the same driver with its
+  own delta superstep. The driver owns the edge cache, the dispatch
   probe, the per-superstep checkpoint barrier (state_{i+1} references
   state_i twice, so an uncheckpointed plan grows exponentially), the GC
   nudge and the release of the cache.
+- The large-star/small-star alternation and the coreness peel still drive
+  their own loops: the coreness phases on the driver measured more jobs
+  (sf0.01: 71 → 88), and star CC waits for its sf10 small-star fix.
 - Iteration count is bounded by the graph diameter. For web/host graphs the
   effective diameter is small (tens); for adversarial chain graphs the
   large-star/small-star transform (Kiveris et al., "Connected Components in
@@ -30,15 +34,11 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from giranking_spark.cache import cached
 from giranking_spark.operators.linkrank import (
     Fixpoint,
     _checkpoint,
     _checkpoint_nrows,
-    _gc_nudge,
     _set_checkpoint_dir_once,
-    _should_broadcast_state,
-    _state_side,
     min_relax,
     pointer_double,
 )
@@ -215,59 +215,51 @@ def kcore_peel(
     size(nbrs) — exchange-free — and each round scans |V| cached rows
     (70x fewer at sf100), exploding only the DEAD vertices' lists, which
     emits exactly the und rows with a dead src the r12 shape semi-joined
-    for: same counts, same oracle, Σ|exploded| ≤ |und| unchanged."""
+    for: same counts, same oracle, Σ|exploded| ≤ |und| unchanged.
+
+    The loop runs on the fixpoint driver (linkrank.py:Fixpoint) over the
+    adjacency relation: ``_changed`` flags a vertex that dies in the next
+    superstep (degree < k), so the flagged rows are the frontier, and the
+    driver's count of them stops the loop once nothing is left to peel —
+    parity-safe under the fixed-round oracle contract (the oracle unrolls
+    all rounds; extra rounds change nothing at the fixpoint)."""
     width = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    adj = (
+    fx = Fixpoint(
         undirected_edges(edges, dedup=False)
         .repartition(width, "src")
         .groupBy("src")
-        .agg(F.collect_set("dst").alias("nbrs"))
+        .agg(F.collect_set("dst").alias("nbrs")),
+        layout=None,
     )
-    with cached(adj):
-        # full degrees once: alive_0 = all vertices, and every vertex appears
-        # as a src because und is symmetric; collect_set already deduped the
-        # doubled union, so size(nbrs) = distinct undirected degree
-        deg, n_alive = _checkpoint_nrows(
-            adj.select(
-                F.col("src").alias("id"),
-                F.size("nbrs").cast("bigint").alias("degree"),
-            )
+    # full degrees once: alive_0 = all vertices, and every vertex appears as
+    # a src because und is symmetric; collect_set already deduped the
+    # doubled union, so size(nbrs) = distinct undirected degree
+    deg = fx.start(
+        fx.edges.select(
+            F.col("src").alias("id"), F.size("nbrs").cast("bigint").alias("degree")
         )
-        bcast = _should_broadcast_state(adj, n_alive, deg)
-        for _ in range(rounds):
-            dead = deg.filter(F.col("degree") < k).select("id")
-            d = _state_side(dead, bcast)
-            upd = (
-                adj.join(d, adj.src == d.id, "inner")
-                .select(F.explode("nbrs").alias("id"))
-                .groupBy("id")
-                .agg(F.count(F.lit(1)).cast("bigint").alias("_dd"))
-            )
-            deg, n_next = _checkpoint_nrows(
-                deg.filter(F.col("degree") >= k)
-                .join(upd, "id", "left")
-                .select(
-                    "id",
-                    (
-                        F.col("degree") - F.coalesce(F.col("_dd"), F.lit(0))
-                    ).alias("degree"),
-                )
-            )
-            # same dead-shuffle lifecycle as the rank loops — see
-            # linkrank._gc_nudge (this loop is where sf100 first hit ENOSPC)
-            _gc_nudge(deg, n_next)
-            # the alive set is monotone decreasing, so an unchanged COUNT
-            # means nothing died and every remaining round is a no-op — early
-            # exit is parity-safe under the fixed-round oracle contract (the
-            # oracle unrolls all rounds; extra rounds change nothing at the
-            # fixpoint)
-            if n_next == n_alive:
-                break
-            n_alive = n_next
-        # survivors with at least one surviving neighbor — deg already counts
-        # alive neighbors at the final round boundary, so this is identical to
-        # the recount formulation's final both-endpoints-filtered recount
-        return deg.filter(F.col("degree") > 0)
+    )
+
+    def step(deg: DataFrame) -> DataFrame:
+        dead = deg.filter(F.col("degree") < k).select("id")
+        upd = (
+            fx.join(dead)
+            .select(F.explode("nbrs").alias("id"))
+            .groupBy("id")
+            .agg(F.count(F.lit(1)).cast("bigint").alias("_dd"))
+        )
+        degree = F.col("degree") - F.coalesce(F.col("_dd"), F.lit(0))
+        return (
+            deg.filter(F.col("degree") >= k)
+            .join(upd, "id", "left")
+            .select("id", degree.alias("degree"), (degree < k).alias("_changed"))
+        )
+
+    # survivors with at least one surviving neighbor — deg already counts
+    # alive neighbors at the final round boundary, so this is identical to
+    # the recount formulation's final both-endpoints-filtered recount
+    deg = fx.run(deg, step, rounds, converge=True)
+    return deg.filter(F.col("degree") > 0)
 
 
 def sssp_distances(

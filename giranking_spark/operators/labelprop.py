@@ -69,13 +69,13 @@ def label_propagation(
     full sort of the (v, label) relation and with map-side partial
     aggregation shrinking the second exchange.
 
-    ``substrate`` — a prebuilt, persisted :func:`lpa_substrate` relation;
-    the caller keeps ownership (no unpersist here) so its other consumers
-    can keep reading the cache after the loop returns."""
+    ``substrate`` — a prebuilt :func:`lpa_substrate` relation. A caller
+    that cached it keeps its cache (the driver releases only what it
+    persisted), so its other consumers can keep reading it after the loop
+    returns."""
     fx = Fixpoint(
         substrate if substrate is not None else lpa_substrate(edges),
         layout=None,
-        caller_owned=substrate is not None,
     )
     state = fx.start(
         fx.edges.select(F.col("src").alias("id"))

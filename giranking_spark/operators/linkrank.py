@@ -30,6 +30,7 @@ step, LinkRankComputation.java:280-282).
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -143,10 +144,12 @@ def _conf_int(spark, key: str, default: int) -> int:
 
 
 def _broadcast_rule(n: int, avg_id_width: float | None, thr: int) -> bool:
-    """The ONE broadcast-dispatch rule (shared by
-    :func:`_should_broadcast_state` and the :class:`Fixpoint` probe so the
-    two paths cannot diverge): state broadcasts iff
-    n·max(64, avg_id_width + overhead) ≤ thr."""
+    """The ONE broadcast-dispatch rule, applied by the :class:`Fixpoint`
+    probe: state broadcasts iff n·max(64, avg_id_width + overhead) ≤ thr.
+    localCheckpoint truncates lineage AND size statistics, so Catalyst can
+    never auto-broadcast loop state; the probe decides from the exact row
+    count and the MEASURED id width, so long URL ids (100+ B) cannot
+    undershoot the estimate."""
     if thr <= 0 or n <= 0:
         return False
     width = 64.0
@@ -164,36 +167,6 @@ def _salt_rule(mx: int, tot: int, parts: int, min_hot_rows: int) -> int | None:
     return None
 
 
-def _should_broadcast_state(
-    edges: DataFrame,
-    n: int,
-    state: DataFrame | None = None,
-    id_col: str = "id",
-) -> bool:
-    """Whether the per-iteration vertex state fits Spark's broadcast
-    threshold. localCheckpoint truncates lineage AND size statistics, so
-    Catalyst can never auto-broadcast loop state — this decides from the
-    exact vertex count the loop already holds.
-
-    Row width: 64 B/row floor; when the caller hands the state relation,
-    the id payload is MEASURED (avg octet length + fixed overhead) so long
-    URL ids (100+ B) cannot undershoot the estimate and broadcast a state
-    that is actually over the threshold. The one-row agg runs once per
-    operator invocation, never per iteration. Large graphs fall back to
-    shuffle joins — the 100 TB path."""
-    thr = _conf_int(
-        edges.sparkSession, "spark.sql.autoBroadcastJoinThreshold", -1
-    )
-    if thr <= 0 or n <= 0:
-        return False
-    avg_id = None
-    if state is not None and id_col in state.columns:
-        avg_id = state.agg(
-            F.avg(F.octet_length(F.col(id_col).cast("string")))
-        ).first()[0]
-    return _broadcast_rule(n, avg_id, thr)
-
-
 #: bucket count the auto decision enables (the r9 skew load test measured
 #: 22.3x -> 3.0x exchange imbalance at 32 on the 2M-degree hub fixture)
 SALT_AUTO_BUCKETS = 32
@@ -204,10 +177,6 @@ SALT_HOT_KEY_FACTOR = 4.0
 #: reducer, and the floor keeps small/medium graphs (all shipped fixtures)
 #: on the single-phase plan — bit-identical to prior rounds' value hashes.
 SALT_MIN_HOT_ROWS = 100_000
-
-
-def _maybe_broadcast(df: DataFrame, do_broadcast: bool) -> DataFrame:
-    return F.broadcast(df) if do_broadcast else df
 
 
 def _state_side(df: DataFrame, do_broadcast: bool) -> DataFrame:
@@ -325,17 +294,25 @@ def dangling_mass(state: DataFrame) -> DataFrame:
 
 
 def _set_checkpoint_dir_once(df: DataFrame, checkpoint_dir: str | None) -> bool:
-    """Set the reliable-checkpoint dir ONCE per run (returns whether reliable
+    """Set the reliable-checkpoint dir ONCE per dir (returns whether reliable
     checkpointing is on). setCheckpointDir mints a fresh UUID subdirectory on
     every call — calling it per-checkpoint leaks one full state copy per
-    interval. One call per run = one UUID dir; superseded checkpoint data
-    within the run is reclaimed by the ContextCleaner when
-    ``spark.cleaner.referenceTracking.cleanCheckpoints=true`` (set in
-    :func:`giranking_spark.session.get_spark`), and the whole dir is safe to
-    delete after the run."""
+    interval — so the call is skipped when the context already checkpoints
+    into a UUID subdirectory of ``checkpoint_dir``: every loop of a run
+    (bow-tie's four closures, SCC's reach labels) shares one UUID dir.
+    Superseded checkpoint data within the run is reclaimed by the
+    ContextCleaner when ``spark.cleaner.referenceTracking.cleanCheckpoints
+    =true`` (set in :func:`giranking_spark.session.get_spark`), and the
+    whole dir is safe to delete after the run."""
     if not checkpoint_dir:
         return False
-    df.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)
+    sc = df.sparkSession.sparkContext
+    Path = sc._jvm.org.apache.hadoop.fs.Path
+    want = Path(checkpoint_dir)
+    want = want.getFileSystem(sc._jsc.hadoopConfiguration()).makeQualified(want)
+    current = sc.getCheckpointDir()  # qualified, e.g. file:/tmp/ck/<uuid>
+    if current is None or Path(current).getParent().toString() != want.toString():
+        sc.setCheckpointDir(checkpoint_dir)
     return True
 
 
@@ -446,8 +423,12 @@ class Fixpoint:
       (:func:`_checkpoint_count`); the loop stops at the first superstep
       that changes nothing, or at the caller's cap.
     * **hygiene** — one :func:`_gc_nudge` per superstep, and every cache
-      the driver persisted is released when :meth:`run` returns. A
-      ``caller_owned`` relation is neither persisted nor released.
+      the driver persisted is released when :meth:`run` returns. The
+      relation is cached under :func:`giranking_spark.cache.cached`'s
+      ownership rule: the driver persists it only when it is not cached
+      yet and releases only what it persisted, so a caller's cache
+      outlives the loop. ``caller_owned`` skips the persist for a relation
+      already materialized another way (SCC's checkpointed live edges).
     """
 
     def __init__(
@@ -461,10 +442,10 @@ class Fixpoint:
         self.reliable = _set_checkpoint_dir_once(edges, checkpoint_dir)
         self.interval = checkpoint_interval
         self._layout = layout
-        if not caller_owned:
-            edges = edges.persist()
-        self.edges = edges
-        self._held = [] if caller_owned else [edges]  # released on return
+        # storageLevel is a driver-side cache-manager lookup: no Spark job
+        self._owned = not caller_owned and edges.storageLevel == StorageLevel.NONE
+        self.edges = edges.persist() if self._owned else edges
+        self._held = [self.edges] if self._owned else []  # released on return
         self._stale: DataFrame | None = None  # input copy of a layout swap
         self.changed = 0  # rows the last converge-mode barrier counted
 
@@ -533,8 +514,8 @@ class Fixpoint:
             if salt == "auto"
             else salt
         )
-        if self._layout == "src" and self._held and self.n and not self.bcast:
-            self._stale = self.edges
+        if self._layout == "src" and self.n and not self.bcast:
+            self._stale = self.edges if self._owned else None
             self.edges = self.edges.repartition(parts, "src").persist()
             self._held.append(self.edges)
         return state
@@ -648,10 +629,8 @@ def pointer_double(fx: Fixpoint, state: DataFrame, value: str) -> DataFrame:
     the lookup side. The ``_changed`` flag becomes relax OR doubling
     improved, so the next frontier holds the rows either pass moved, with
     their post-doubling labels."""
-    lookup = _maybe_broadcast(
-        state.select(F.col("id").alias("_lid"), F.col(value).alias("_lv")),
-        fx.bcast,
-    )
+    lookup = state.select(F.col("id").alias("_lid"), F.col(value).alias("_lv"))
+    lookup = F.broadcast(lookup) if fx.bcast else lookup
     hop = F.coalesce(F.col("_lv"), F.col(value))
     return state.join(lookup, state[value] == lookup["_lid"], "left").select(
         "id",

@@ -26,7 +26,8 @@ in ≤ #SCC-generations rounds; on web graphs (one giant SCC + shallow
 periphery) this is a handful.
 
 Scale posture (the 100 TB story):
-- Each propagation round runs the SAME one-shuffle superstep as connected
+- Each propagation round (SCC's reach labels, bow-tie's directed
+  closures) runs the SAME one-shuffle superstep as connected
   components, on the same fixpoint driver (operators/linkrank.py:
   min_relax, Fixpoint): edges ⋈ frontier → union self → min-aggregate,
   with per-round lineage truncation (localCheckpoint / reliable checkpoint)
@@ -43,13 +44,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from giranking_spark.cache import cached
 from giranking_spark.operators.linkrank import (
     Fixpoint,
     _checkpoint,
     _checkpoint_nrows,
     _set_checkpoint_dir_once,
-    _should_broadcast_state,
-    _state_side,
     min_relax,
     pointer_double,
 )
@@ -67,7 +67,7 @@ def _reverse(edges: DataFrame) -> DataFrame:
 def min_reach_labels(
     edges: DataFrame,
     verts: DataFrame,
-    reliable: bool,
+    checkpoint_dir: str | None = None,
     max_rounds: int = MAX_PROP_ROUNDS,
 ) -> DataFrame:
     """(id, lbl) with lbl = min id that reaches ``id`` along edge direction
@@ -78,11 +78,12 @@ def min_reach_labels(
     fixpoint: one full relax pass that changes nothing. Two relaxes per
     barrier because every counting barrier costs jobs of its own (sf0.01
     graph_scc: 148 jobs, against 194 with one relax and a barriered
-    doubling per superstep)."""
-    fx = Fixpoint(edges, layout=None, caller_owned=True)
-    # the caller set the run's checkpoint dir once; a second
-    # setCheckpointDir would mint a second UUID dir
-    fx.reliable = reliable
+    doubling per superstep). ``edges`` is the caller's checkpoint, read
+    as is (``caller_owned``): a persisted copy of it measured more jobs
+    (sf0.01 graph_scc 144 → 178)."""
+    fx = Fixpoint(
+        edges, layout=None, checkpoint_dir=checkpoint_dir, caller_owned=True
+    )
 
     def step(s: DataFrame) -> DataFrame:
         doubled = pointer_double(fx, min_relax(fx, s, "lbl"), "lbl")
@@ -178,8 +179,8 @@ def strongly_connected_components(
             n_live = n_keep
         if n_live == 0:
             break
-        fwd = min_reach_labels(live_e, live_v, reliable)
-        bwd = min_reach_labels(_reverse(live_e), live_v, reliable)
+        fwd = min_reach_labels(live_e, live_v, checkpoint_dir)
+        bwd = min_reach_labels(_reverse(live_e), live_v, checkpoint_dir)
         done = _checkpoint(
             fwd.join(bwd.select("id", F.col("lbl").alias("_b")), "id")
             .filter(F.col("lbl") == F.col("_b"))
@@ -210,33 +211,22 @@ def strongly_connected_components(
 def directed_closure(
     edges: DataFrame,
     seeds: DataFrame,
-    bcast: bool,
-    reliable: bool,
+    checkpoint_dir: str | None = None,
     max_rounds: int = MAX_PROP_ROUNDS,
 ) -> DataFrame:
     """(id) — vertices reachable from ``seeds`` along edge direction
-    (reflexive). Frontier-free flag propagation: reached-set ∪ successors,
-    distinct, until the count is stable (one scalar per round)."""
-    frontier, _ = _checkpoint_nrows(seeds.select("id").distinct(), reliable)
-    reached = frontier  # lazy union of checkpointed frontiers — never
-    # re-materialized, so the accumulated set is not copied every round
-    for _ in range(max_rounds):
-        # frontier BFS: only the newly-reached set joins the edge relation,
-        # so per-round join work tracks the wavefront, not the accumulation
-        succ = (
-            edges.join(
-                _state_side(frontier, bcast), edges.src == frontier.id
-            )
-            .select(F.col("dst").alias("id"))
-            .distinct()
-        )
-        frontier, n_frontier = _checkpoint_nrows(
-            succ.join(reached, "id", "left_anti"), reliable
-        )
-        if n_frontier == 0:
-            return reached
-        reached = reached.unionByName(frontier)
-    raise ValueError(f"closure did not converge in {max_rounds} rounds")
+    (reflexive). A :func:`min_relax` of a constant flag on the fixpoint
+    driver: a reached vertex's flag never drops, so each superstep's
+    frontier is exactly the newly reached set, and the loop stops when a
+    superstep reaches nothing new (one scalar per superstep). The state
+    grows from the seeds, so it is sized by the vertices they can reach
+    (``start(seeded=True)``)."""
+    fx = Fixpoint(edges, layout=None, checkpoint_dir=checkpoint_dir)
+    state = fx.start(seeds.select("id", F.lit(0).alias("_r")), seeded=True)
+    state = fx.run(state, lambda s: min_relax(fx, s, "_r"), max_rounds, converge=True)
+    if fx.changed:
+        raise ValueError(f"closure did not converge in {max_rounds} rounds")
+    return state.select("id")
 
 
 #: bow-tie class labels, in priority order of assignment
@@ -266,57 +256,19 @@ def bowtie_classes(
     Because every core member reaches (and is reached by) the pivot,
     FW(core) == FW(pivot) and BW(core) == BW(pivot) — so the whole map
     costs FOUR directed closures (pivot fwd/bwd + tube/tendril closures on
-    the core-removed subgraph), never a full SCC partition. Everything is
-    joins + distincts off checkpointed state; the only driver traffic is
-    the per-round frontier count."""
+    the core-removed subgraph), never a full SCC partition. Each closure
+    runs on the fixpoint driver (:func:`directed_closure`); the deduped
+    edges are cached for the block, everything else is joins off the
+    closures' checkpointed results, and the output is checkpointed once.
+    The only driver traffic is the per-superstep frontier count."""
     spark = edges.sparkSession
     width = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    # resolve the checkpoint mode BEFORE the first materialization so the
-    # edge relation gets the same reliable-checkpoint posture as every
-    # other state df (an executor loss mid-run must not lose edge blocks)
     e = edges.select("src", "dst").distinct().coalesce(width)
     reliable = _set_checkpoint_dir_once(e, checkpoint_dir)
-    e = _checkpoint(e, reliable)
-    verts, n_verts = _checkpoint_nrows(
-        e.select(F.col("src").alias("id"))
-        .unionByName(e.select(F.col("dst").alias("id")))
-        .distinct(),
-        reliable,
-    )
-    bcast = _should_broadcast_state(e, n_verts, verts)
-    pivot = (
-        e.select(F.col("src").alias("id"))
-        .unionByName(e.select(F.col("dst").alias("id")))
-        .groupBy("id")
-        .agg(F.count(F.lit(1)).alias("d"))
-        .orderBy(F.col("d").desc(), F.col("id").asc())
-        .limit(1)
-        .select("id")
-    )
-    fwd = directed_closure(e, pivot, bcast, reliable)
-    bwd = directed_closure(_reverse(e), pivot, bcast, reliable)
-    core = _checkpoint(fwd.join(bwd, "id", "left_semi"), reliable)
-    in_set = _checkpoint(bwd.join(core, "id", "left_anti"), reliable)
-    out_set = _checkpoint(fwd.join(core, "id", "left_anti"), reliable)
-    nc = _checkpoint(
-        e.join(core.select(F.col("id").alias("src")), "src", "left_anti").join(
-            core.select(F.col("id").alias("dst")), "dst", "left_anti"
-        ),
-        reliable,
-    )
-    from_in = directed_closure(nc, in_set, bcast, reliable)
-    to_out = directed_closure(_reverse(nc), out_set, bcast, reliable)
 
     def _flag(s: DataFrame, name: str) -> DataFrame:
         return s.select("id", F.lit(True).alias(name))
 
-    lab = (
-        verts.join(_flag(core, "_core"), "id", "left")
-        .join(_flag(in_set, "_in"), "id", "left")
-        .join(_flag(out_set, "_out"), "id", "left")
-        .join(_flag(from_in, "_fi"), "id", "left")
-        .join(_flag(to_out, "_to"), "id", "left")
-    )
     cls = (
         F.when(F.col("_core"), F.lit("core"))
         .when(F.col("_in"), F.lit("in"))
@@ -326,4 +278,33 @@ def bowtie_classes(
         .when(F.col("_to"), F.lit("tendril_out"))
         .otherwise(F.lit("disconnected"))
     )
-    return lab.select("id", cls.alias("cls"))
+    with cached(e):
+        ids = e.select(F.col("src").alias("id")).unionByName(
+            e.select(F.col("dst").alias("id"))
+        )
+        pivot = (
+            ids.groupBy("id")
+            .agg(F.count(F.lit(1)).alias("d"))
+            .orderBy(F.col("d").desc(), F.col("id").asc())
+            .limit(1)
+            .select("id")
+        )
+        fwd = directed_closure(e, pivot, checkpoint_dir)
+        bwd = directed_closure(_reverse(e), pivot, checkpoint_dir)
+        core = fwd.join(bwd, "id", "left_semi")
+        in_set = bwd.join(core, "id", "left_anti")
+        out_set = fwd.join(core, "id", "left_anti")
+        nc = e.join(core.select(F.col("id").alias("src")), "src", "left_anti").join(
+            core.select(F.col("id").alias("dst")), "dst", "left_anti"
+        )
+        from_in = directed_closure(nc, in_set, checkpoint_dir)
+        to_out = directed_closure(_reverse(nc), out_set, checkpoint_dir)
+        lab = (
+            ids.distinct()
+            .join(_flag(core, "_core"), "id", "left")
+            .join(_flag(in_set, "_in"), "id", "left")
+            .join(_flag(out_set, "_out"), "id", "left")
+            .join(_flag(from_in, "_fi"), "id", "left")
+            .join(_flag(to_out, "_to"), "id", "left")
+        )
+        return _checkpoint(lab.select("id", cls.alias("cls")), reliable)

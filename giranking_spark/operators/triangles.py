@@ -133,12 +133,7 @@ def _id_oriented_triangles(co: DataFrame, small: bool = False) -> DataFrame:
     )
 
 
-def triangle_relation(
-    co: DataFrame,
-    materialize: bool = True,
-    orient: bool | None = None,
-    pre_materialized: bool = False,
-) -> DataFrame:
+def triangle_relation(co: DataFrame, orient: bool | None = None) -> DataFrame:
     """All triangles of the canonical edge set ``co``, one row (a, b1, b2)
     per triangle (a minimal in the chosen orientation's total order; the
     triangle SET is orientation-invariant). The oriented path semi-probes
@@ -147,66 +142,38 @@ def triangle_relation(
     as (b1 → b2), so the probe is a two-key LEFT SEMI equi-join (key-only,
     no payload shuffle).
 
-    ``materialize=True`` (the default for query execution) localCheckpoints
-    ``co`` once — the edge relation feeds the stats job, both wedge legs
-    and the closing probe, so without it the substrate (often an expensive
-    distinct self-join) executes once per consumer — then runs the one-row
-    dispatch stats job (Sigma od_id^2 vs WEDGE_{ABS,REL}_CAP, see module
-    docstring). localCheckpoint (not persist) so the blocks die with the
-    DataFrame instead of leaking across bench reps.
-
-    ``materialize=False`` builds the plan WITHOUT running any Spark job —
-    for plan-shape consumers (explain tooling, plan tests) and
-    non-materializable inputs; it takes the hub-proof oriented shape with
-    NO checkpoint (even a lazy one executes under AQE) unless ``orient``
-    forces the compact one.
-
-    ``orient`` forces the path (True = degree-oriented, False = compact
-    id-oriented); None decides from the stats job.
-
-    ``pre_materialized`` tells the operator the caller has ALREADY
-    checkpointed/persisted ``co`` (it feeds the caller's own consumers
-    too): the stats job (cheap against the caller's blocks) and both join
-    branches read those blocks directly instead of copying them into a
-    second checkpoint — the adaptive dispatch and broadcast hints still
-    apply.
-    Opt-in deliberately: A/B at sf0.1 showed the default two-copy shape
+    ``co`` is localCheckpointed once — the edge relation feeds the stats
+    job, both wedge legs and the closing probe, so without it the substrate
+    (often an expensive distinct self-join) executes once per consumer —
+    then the one-row dispatch stats job runs (Sigma od_id^2 vs
+    WEDGE_{ABS,REL}_CAP, see module docstring). localCheckpoint (not
+    persist) so the blocks die with the DataFrame instead of leaking across
+    bench reps. A caller that already cached ``co`` for its own consumers
+    still gets this second copy: A/B at sf0.1 showed the two-copy shape
     FASTER for graph_local_bridges (the caller's persist keeps accurate
     size stats on its own consumers — a checkpoint's LogicalRDD defaults
-    to huge sizeInBytes and flips broadcastable joins to SMJ), so pass
-    this only for inputs too large to hold twice."""
-    small = False
-    if materialize or pre_materialized:
-        if not pre_materialized:
-            co = co.localCheckpoint(eager=True)
-        stats = (
-            co.groupBy("u")
-            .agg(F.count(F.lit(1)).cast("long").alias("od"))
-            .agg(
-                F.sum(F.col("od") * F.col("od")).alias("id_wedges"),
-                F.sum("od").alias("m"),
-            )
-            .first()
+    to huge sizeInBytes and flips broadcastable joins to SMJ).
+
+    ``orient`` forces the path (True = degree-oriented, False = compact
+    id-oriented); None decides from the stats job."""
+    co = co.localCheckpoint(eager=True)
+    stats = (
+        co.groupBy("u")
+        .agg(F.count(F.lit(1)).cast("long").alias("od"))
+        .agg(
+            F.sum(F.col("od") * F.col("od")).alias("id_wedges"),
+            F.sum("od").alias("m"),
         )
-        id_wedges = int(stats["id_wedges"] or 0)
-        m = int(stats["m"] or 0)
-        small = m <= BROADCAST_EDGE_CAP
-        if orient is None:
-            orient = should_orient(id_wedges, m)
-    elif orient is None:
-        # plan-only construction cannot afford the stats job; take the
-        # shape that is safe at any skew.
-        orient = True
+        .first()
+    )
+    id_wedges = int(stats["id_wedges"] or 0)
+    m = int(stats["m"] or 0)
+    small = m <= BROADCAST_EDGE_CAP
+    if orient is None:
+        orient = should_orient(id_wedges, m)
     if not orient:
         return _id_oriented_triangles(co, small=small)
-    o = degree_oriented(co, small=small)
-    if materialize:
-        # even a LAZY localCheckpoint executes the plan under AQE (plan ->
-        # RDD conversion materializes the query stages), so plan-only
-        # construction must skip the checkpoint entirely; the oriented
-        # relation then recomputes per consumer, which is fine for a
-        # consumer that never runs an action.
-        o = o.localCheckpoint(eager=True)
+    o = degree_oriented(co, small=small).localCheckpoint(eager=True)
     closing = o.select(F.col("a").alias("b1"), F.col("b").alias("b2"))
     if small:
         closing = F.broadcast(closing)
@@ -217,18 +184,14 @@ def triangle_relation(
     )
 
 
-def triangle_edges(
-    co: DataFrame, materialize: bool = True, pre_materialized: bool = False
-) -> DataFrame:
+def triangle_edges(co: DataFrame) -> DataFrame:
     """Distinct canonical (u, v) edges that close ≥1 triangle — the
     NOT-a-local-bridge relation. Emits the 3 edges of each triangle
     (canonicalized back to id order, since the enumeration order and id
     order may disagree) and dedups; intermediate size is 3·#triangles on
     top of the dispatch-bounded wedge relation, never the Sigma d^2 full
     neighbor expansion."""
-    tri = triangle_relation(
-        co, materialize=materialize, pre_materialized=pre_materialized
-    )
+    tri = triangle_relation(co)
     pairs = (
         tri.select(F.col("a").alias("x"), F.col("b1").alias("y"))
         .unionByName(tri.select(F.col("a").alias("x"), F.col("b2").alias("y")))

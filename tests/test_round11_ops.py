@@ -57,24 +57,6 @@ def test_triangle_paths_agree(spark):
     assert len(auto) > 0
 
 
-def test_triangle_relation_plan_only_runs_no_job(spark):
-    """materialize=False must build a plan without executing a Spark job
-    (the r10 eager checkpoint broke plan-only consumers): the pre-action
-    plan still contains the degree aggregate (nothing was checkpointed
-    away), and explain() works on a plan-only DataFrame."""
-    from giranking_spark.operators.triangles import triangle_relation
-
-    co = _co(spark, [(1, 2), (1, 3), (2, 3)])
-    sc = spark.sparkContext
-    sc.setJobGroup("tri_plan_only", "plan-only construction")
-    try:
-        tri = triangle_relation(co, materialize=False)
-        assert sc.statusTracker().getJobIdsForGroup("tri_plan_only") == []
-    finally:
-        sc.setJobGroup("tri_plan_only_exec", "execution")
-    assert tri.count() == 1
-
-
 @pytest.mark.parametrize("op", ["pq", "ivf_pq", "lsh"])
 def test_gemm_dispatch_paths_agree(spark, op):
     """The GEMM candidate path and the per-pair Column-expression path of

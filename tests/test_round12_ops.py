@@ -1,6 +1,5 @@
 """Round-12 operator tests: corpus-scaled sign-LSH (count-derived bits per
-band over a fixed strided plane table), the ivf_assign count threading, and
-the pre_materialized triangle dispatch fix."""
+band over a fixed strided plane table) and the ivf_assign count threading."""
 
 from __future__ import annotations
 
@@ -149,27 +148,6 @@ def test_ivf_assign_threaded_counts_pin_dispatch(spark):
     a = sorted((r["vec_id"], r["cell"]) for r in small.collect())
     b = sorted((r["vec_id"], r["cell"]) for r in big.collect())
     assert a == b and len(a) == 500
-
-
-def test_pre_materialized_triangles_run_stats_dispatch(spark):
-    """r12 ADVICE fix: pre_materialized no longer skips the dispatch stats
-    job — a tiny persisted graph gets small=True (broadcast hints) and the
-    id-oriented path, matching the default materialize=True dispatch."""
-    from giranking_spark.operators.triangles import triangle_relation
-
-    pairs = [(0, 1), (0, 2), (1, 2), (1, 3), (2, 3), (0, 3)]
-    co = spark.createDataFrame(pairs, "u long, v long").persist()
-    try:
-        pre = triangle_relation(co, pre_materialized=True)
-        tri = {tuple(sorted(r)) for r in pre.collect()}
-        assert tri == {(0, 1, 2), (0, 1, 3), (0, 2, 3), (1, 2, 3)}
-        # the dispatch picked the compact path for this tiny graph: the
-        # plan then contains no outdegree computation (degree orientation
-        # would add a count aggregation over the edge relation)
-        plan = pre._jdf.queryExecution().executedPlan().toString()
-        assert "BroadcastHashJoin" in plan
-    finally:
-        co.unpersist()
 
 
 def test_scaled_lsh_oracle_rewrite_guard():

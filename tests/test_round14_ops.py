@@ -21,6 +21,7 @@ from __future__ import annotations
 
 import gc
 import os
+import re
 
 import pytest
 
@@ -84,6 +85,9 @@ QUERY_KEYS = [
     "graph_wcc_bfs_layers",
     "graph_scc",
     "dedup_clusters",
+    # the frontier loops on the same driver
+    "graph_bowtie",
+    "graph_betweenness",
     # every other query whose reuse cache is a cached() block
     "dedup_ngram_jaccard",
     "dedup_minhash_lsh",
@@ -154,6 +158,43 @@ def test_recall_summary_keeps_a_caller_cache(spark):
         exact.unpersist()
 
 
+def test_fixpoint_keeps_a_caller_cache(spark):
+    """The fixpoint driver follows cached()'s ownership rule: katz_scores
+    selects (src, dst) from an edge frame its caller cached, which resolves
+    to the caller's cache entry, and the loop leaves that cache in place."""
+    from pyspark import StorageLevel
+
+    from giranking_spark.operators.katz import katz_scores
+
+    spark.catalog.clearCache()
+    e = spark.createDataFrame(
+        [("a", "b"), ("b", "c"), ("c", "a")], "src string, dst string"
+    ).persist()
+    try:
+        level = e.storageLevel
+        assert level != StorageLevel.NONE
+        assert katz_scores(e, iterations=2).count() == 3
+        assert e.storageLevel == level
+    finally:
+        e.unpersist()
+
+
+def test_fixpoints_share_one_checkpoint_dir(spark, tmp_path):
+    """setCheckpointDir mints a UUID subdirectory per call: two loops
+    given the same checkpoint dir must share one."""
+    from pyspark.sql import functions as F
+
+    from giranking_spark.operators.linkrank import Fixpoint
+
+    e = spark.createDataFrame([(1, 2), (2, 3)], "src long, dst long")
+    for _ in range(2):
+        fx = Fixpoint(e, layout=None, checkpoint_dir=str(tmp_path))
+        assert fx.reliable
+        state = fx.start(e.select(F.col("src").alias("id"), F.lit(1.0).alias("x")))
+        fx.run(state, lambda s: s.select("id", (F.col("x") * 2).alias("x")), 2)
+    assert len([p for p in tmp_path.iterdir() if p.is_dir()]) == 1
+
+
 def test_cached_block_that_raises_leaves_no_cache(spark):
     """An exception inside a cached() block still releases what the block
     persisted."""
@@ -175,24 +216,22 @@ def test_cached_block_that_raises_leaves_no_cache(spark):
 
 def test_wedge_pair_stage_is_codegen_join_not_hof_explode(spark):
     """The pair stage must be a self-join on the shared-center key; the
-    measured-slower interpreted combination explode must not come back."""
+    measured-slower interpreted combination explode must not come back.
+    Built under lazy_checkpoints() so the plan is the query's pipeline,
+    not a scan of its checkpointed result."""
     from giranking_spark.queries.compq import (
         q_graph_adamic_adar,
         q_graph_bipartite_project,
     )
+    from tests.conftest import lazy_checkpoints
 
-    for fn in (q_graph_adamic_adar, q_graph_bipartite_project):
-        df = fn(spark, SF_SMALL)
-        # the returned plan is an eagerly checkpointed result; the honest
-        # shape evidence is the code itself plus this execution check —
-        # assert no higher-order transform/slice lambda ran (they would
-        # appear in the analyzed plan of a lazy build, so rebuild the
-        # module-level SQL-free way: source inspection)
-        import inspect
-
-        src = inspect.getsource(fn)
-        # match expression usage, not the docstring's history note
-        assert "flatten(transform(" not in src, fn.__name__
-        assert "F.collect_list(" not in src, fn.__name__
+    for fn, center in ((q_graph_adamic_adar, "z"), (q_graph_bipartite_project, "src")):
+        with lazy_checkpoints():
+            df = fn(spark, SF_SMALL)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        self_join = rf"Join \[{center}#\d+L?\], \[{center}#\d+L?\], Inner"
+        assert re.search(self_join, plan), (fn.__name__, plan)
+        for hof in ("Generate", "collect_list", "lambdafunction", "slice("):
+            assert hof not in plan, (fn.__name__, hof)
+        assert "CartesianProduct" not in plan
         assert df.count() > 0
-    spark.catalog.clearCache()
