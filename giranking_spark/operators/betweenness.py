@@ -12,12 +12,12 @@ cost k× state rows, never k propagations); every round — forward or
 backward — is one equi-join with the symmetrized edge relation plus one
 (seed, id) aggregation with map-side partial agg; state is
 checkpoint-truncated per level and the driver sees one frontier-count
-scalar per forward round. The edge relation's cache, the state-side
-dispatch and the sizing of the level state are the fixpoint driver's
-(operators/linkrank.py:Fixpoint); the two sweeps drive their levels
-through it. The depth cap is a shared contract with the
-unrolled-CTE oracle (bfs_distances pattern), so engine parity holds even
-for graphs wider than the cap.
+scalar per forward round, read at the level's barrier. The edge
+relation's cache, the state-side dispatch and the sizing of the level
+state are the fixpoint driver's (operators/linkrank.py:Fixpoint); the two
+sweeps drive their levels through it. The depth cap is a shared contract
+with the unrolled-CTE oracle (bfs_distances pattern), so engine parity
+holds even for graphs wider than the cap.
 
 Reference parity: the reference engine has no centrality beyond its rank
 family; this extends the graph-analysis surface (SURVEY.md §2.10) with the
@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from giranking_spark.operators.components import undirected_edges
-from giranking_spark.operators.linkrank import Fixpoint, _checkpoint_nrows
+from giranking_spark.operators.linkrank import Fixpoint
 
 #: shared Spark/oracle contract: number of hash-picked pivots and the BFS
 #: depth cap (paths longer than BC_DEPTH hops are ignored on BOTH sides —
@@ -79,15 +79,15 @@ def betweenness_approx(
                 .groupBy("seed", "id")
                 .agg(F.sum("sigma").alias("sigma"))
             )
-            frontier, n_frontier = _checkpoint_nrows(nxt, fx.reliable)
-            if n_frontier == 0:
+            frontier, got = fx.checkpoint(nxt, F.count(F.lit(1)).alias("n"))
+            if got["n"] == 0:
                 break
             levels.append(frontier)
             visited = visited.unionByName(frontier.select("seed", "id"))
 
         # backward sweep: delta at the deepest level is 0; each shallower
         # level pulls (sigma_v / sigma_w) * (1 + delta_w) from its successors
-        delta = fx.checkpoint(
+        delta, _ = fx.checkpoint(
             levels[-1].select("seed", "id", F.lit(0.0).alias("delta"))
         )
         acc: list[DataFrame] = []
@@ -118,7 +118,7 @@ def betweenness_approx(
                 .select("seed", "id", "delta")
             )
             # vertices at this level with no successors keep delta 0
-            delta = fx.checkpoint(
+            delta, _ = fx.checkpoint(
                 lv.select("seed", "id")
                 .join(pulled, ["seed", "id"], "left")
                 .select(

@@ -14,31 +14,34 @@ Scale notes:
   joined from the edges, unioned with the state's own rows, one
   min-aggregate shuffle. The k-core peel runs on the same driver with its
   own delta superstep. The driver owns the edge cache, the dispatch
-  probe, the per-superstep checkpoint barrier (state_{i+1} references
-  state_i twice, so an uncheckpointed plan grows exponentially), the GC
-  nudge and the release of the cache.
+  probe, the per-superstep barrier (linkrank.py:_barrier; state_{i+1}
+  references state_i twice, so an uncheckpointed plan grows
+  exponentially), the GC nudge and the release of the cache.
 - The large-star/small-star alternation and the coreness peel still drive
   their own loops: the coreness phases on the driver measured more jobs
-  (sf0.01: 71 → 88), and star CC waits for its sf10 small-star fix.
+  (sf0.01: 88 against the peel's own 71, measured while a counted
+  barrier still cost two extra jobs), and star CC waits for its sf10
+  small-star fix.
 - Iteration count is bounded by the graph diameter. For web/host graphs the
   effective diameter is small (tens); for adversarial chain graphs the
   large-star/small-star transform (Kiveris et al., "Connected Components in
   MapReduce and Beyond") drops rounds to O(log n) — implemented below as
   connected_components_star (equivalence-tested against this fixpoint).
 - The convergence test ships ONE scalar (changed-label count) to the driver
-  per iteration, same contract as the rank loop's aggregates.
+  per iteration, read in the barrier's own job: the write that fills the
+  checkpoint is observed with the count, so the test costs no job.
 """
 
 from __future__ import annotations
+
+from functools import partial
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from giranking_spark.operators.linkrank import (
     Fixpoint,
-    _checkpoint,
-    _checkpoint_nrows,
-    _set_checkpoint_dir_once,
+    _barrier,
     min_relax,
     pointer_double,
 )
@@ -342,15 +345,15 @@ def connected_components_star(
         .repartition(width, "u")
         .dropDuplicates(["u", "v"])
     )
-    reliable = _set_checkpoint_dir_once(pairs, checkpoint_dir)
-    pairs = _checkpoint(pairs, reliable)
-    verts = (
+
+    barrier = partial(_barrier, checkpoint_dir=checkpoint_dir)
+    pairs, _ = barrier(pairs)
+    verts, _ = barrier(
         pairs.select(F.col("u").alias("id"))
         .unionByName(pairs.select(F.col("v").alias("id")))
         .distinct()
         .coalesce(width)
     )
-    verts = _checkpoint(verts, reliable)
     # orient parent-last; drop self loops (their vertices stay via verts)
     e = pairs.filter(F.col("u") != F.col("v"))
 
@@ -407,7 +410,7 @@ def connected_components_star(
         # one large+small alternation per materialization — fusing two was
         # measured SLOWER at fixture scale (the nested sym-union plan costs
         # Catalyst more than the saved job)
-        e = _checkpoint(_small(_large(e)), reliable)
+        e, _ = barrier(_small(_large(e)))
         # exact convergence test, ONE scalar: the pair list is a star forest
         # (= the alternation's fixpoint — both phases are no-ops on a star
         # forest, and parent-last orientation makes every center the
@@ -487,8 +490,9 @@ def coreness_peel(
     both endpoints alive by two semi-joins (single-column filter
     relations, no payload amplification), state is
     checkpoint-truncated per round, and the only driver traffic is one
-    edge-count scalar per round (which doubles as an exact early-exit:
-    unchanged edge count == peel fixpoint, so tail rounds are free).
+    edge-count scalar per round, read at the round's barrier (it doubles
+    as an exact early-exit: unchanged edge count == peel fixpoint, so tail
+    rounds are free).
 
     Self-loops are dropped before peeling: a loop inflates its endpoint's
     degree without contributing core connectivity, diverging from the
@@ -496,33 +500,31 @@ def coreness_peel(
     ``checkpoint_dir`` set, per-round truncation uses reliable checkpoints
     so an executor loss mid-peel cannot lose locally-checkpointed blocks
     (same posture as bowtie_classes)."""
-    e = undirected_edges(edges).filter(F.col("src") != F.col("dst"))
-    reliable = _set_checkpoint_dir_once(e, checkpoint_dir)
-    e, n_e = _checkpoint_nrows(e, reliable)
-    prev_verts = _checkpoint(
-        e.select(F.col("src").alias("id")).distinct(), reliable
+    barrier = partial(_barrier, checkpoint_dir=checkpoint_dir)
+    rows = F.count(F.lit(1)).alias("n")  # a barrier scalar: {"n": edge rows}
+    e, size = barrier(
+        undirected_edges(edges).filter(F.col("src") != F.col("dst")), rows
     )
+    prev_verts, _ = barrier(e.select(F.col("src").alias("id")).distinct())
     parts: list[DataFrame] = []
     for k in range(2, int(kmax) + 1):
         for _ in range(int(rounds)):
-            if n_e == 0:
+            if size["n"] == 0:
                 break
             deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
             keep = deg.filter(F.col("deg") >= k).select(
                 F.col("src").alias("id")
             )
-            e, n_new = _checkpoint_nrows(
+            e, kept = barrier(
                 e.join(keep, e.src == keep.id, "left_semi").join(
                     keep, F.col("dst") == keep.id, "left_semi"
                 ),
-                reliable,
+                rows,
             )
-            if n_new == n_e:
+            if kept == size:
                 break
-            n_e = n_new
-        surv = _checkpoint(
-            e.select(F.col("src").alias("id")).distinct(), reliable
-        )
+            size = kept
+        surv, _ = barrier(e.select(F.col("src").alias("id")).distinct())
         parts.append(
             prev_verts.join(surv, "id", "left_anti").select(
                 "id", F.lit(k - 1).cast("long").alias("coreness")

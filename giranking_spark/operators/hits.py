@@ -62,7 +62,7 @@ def _l1_normalized(
     """(id, carry, to_score = _raw / Σ _raw) from a half-step's raw
     aggregate (id, carry, _raw), barriered first (see :func:`_half_step`).
     Shared with SALSA's half-step."""
-    raw = fx.checkpoint(raw)
+    raw, _ = fx.checkpoint(raw)
     total = raw.agg(F.sum("_raw").alias("_l1"))
     return raw.crossJoin(F.broadcast(total)).select(
         "id", carry, (F.col("_raw") / F.col("_l1")).alias(to_score)

@@ -31,7 +31,7 @@ step, LinkRankComputation.java:280-282).
 from __future__ import annotations
 
 from pyspark import StorageLevel
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from giranking_spark.config import LinkRankConfig, TrustRankConfig
@@ -295,11 +295,12 @@ def dangling_mass(state: DataFrame) -> DataFrame:
 
 def _set_checkpoint_dir_once(df: DataFrame, checkpoint_dir: str | None) -> bool:
     """Set the reliable-checkpoint dir ONCE per dir (returns whether reliable
-    checkpointing is on). setCheckpointDir mints a fresh UUID subdirectory on
-    every call — calling it per-checkpoint leaks one full state copy per
-    interval — so the call is skipped when the context already checkpoints
-    into a UUID subdirectory of ``checkpoint_dir``: every loop of a run
-    (bow-tie's four closures, SCC's reach labels) shares one UUID dir.
+    checkpointing is on); every :func:`_barrier` asks. setCheckpointDir
+    mints a fresh UUID subdirectory on every call — calling it per barrier
+    leaks one full state copy per interval — so the call is skipped when
+    the context already checkpoints into a UUID subdirectory of
+    ``checkpoint_dir``: every barrier of a run (bow-tie's four closures,
+    SCC's peel and reach labels) shares one UUID dir.
     Superseded checkpoint data within the run is reclaimed by the
     ContextCleaner when ``spark.cleaner.referenceTracking.cleanCheckpoints
     =true`` (set in :func:`giranking_spark.session.get_spark`), and the
@@ -341,52 +342,42 @@ def _gc_nudge(df: DataFrame, n_rows: int) -> None:
         df.sparkSession.sparkContext._jvm.System.gc()
 
 
-def _checkpoint(df: DataFrame, reliable: bool = False) -> DataFrame:
-    """Per-iteration lineage truncation (the BSP superstep barrier).
-
-    localCheckpoint (default) keeps blocks on executors — fast but
-    non-resilient. With ``reliable`` (cfg.checkpoint_dir set), uses reliable
-    ``df.checkpoint()`` so a cluster run survives executor loss mid-fixpoint
-    (SURVEY.md §4.2 #1)."""
-    if reliable:
-        return df.checkpoint(eager=True)
-    return df.localCheckpoint(eager=True)
-
-
-def _checkpoint_count(
-    df: DataFrame, flag_col: str, reliable: bool = False
-) -> tuple[DataFrame, int]:
-    """Checkpoint + flagged-row count in ONE job (r13, guide §1.2 — fewer
-    passes): the LAZY checkpoint's first action materializes and caches
-    every partition, and that action IS the convergence count — the
-    fixpoint loops previously paid two jobs per superstep (eager
-    checkpoint, then a count over the cached blocks). The count scans all
-    partitions, so the checkpoint completes within it and lineage is
-    truncated exactly as before. Returns (checkpointed df, flagged count).
-    """
-    ck = _checkpoint_lazy(df, reliable)
-    n = ck.filter(F.col(flag_col)).count()
-    return ck, n
+def _observe(df: DataFrame, *scalars: Column) -> dict:
+    """The named aggregate ``scalars`` over every row of ``df``, read in
+    ONE job that has no shuffle of its own: a ``noop`` write of ``df``
+    observed with them (Giraph's aggregators, which a superstep reduces and
+    hands over at its barrier). A plain ``df.agg(...).first()`` runs as two
+    jobs under AQE: the partial aggregate's shuffle map stage, then the
+    final aggregate."""
+    obs = Observation()
+    df.observe(obs, *scalars).write.format("noop").mode("overwrite").save()
+    return obs.get
 
 
-def _checkpoint_lazy(df: DataFrame, reliable: bool = False) -> DataFrame:
-    """Lazy checkpoint: the caller's next FULL-SCAN action (a count or a
-    1-row aggregate over every partition) materializes and caches all
-    partitions, completing the checkpoint inside that job — use when a
-    convergence probe immediately follows, so checkpoint + probe cost one
-    job instead of two."""
-    return df.checkpoint(eager=False) if reliable else df.localCheckpoint(eager=False)
+def _barrier(
+    df: DataFrame,
+    *scalars: Column,
+    checkpoint_dir: str | None = None,
+    scan=None,
+) -> tuple[DataFrame, dict]:
+    """The superstep barrier: truncate ``df``'s lineage and read the loop's
+    ``scalars`` (named aggregates, e.g. a convergence count) at it.
+    Returns (checkpointed df, {name: value}).
 
-
-def _checkpoint_nrows(
-    df: DataFrame, reliable: bool = False
-) -> tuple[DataFrame, int]:
-    """Checkpoint + total row count in ONE job — same lazy-checkpoint
-    fusion as :func:`_checkpoint_count` for loops whose convergence scalar
-    is the plain row count (the peel family) or that need the state size
-    for the broadcast/GC dispatch."""
-    ck = _checkpoint_lazy(df, reliable)
-    return ck, ck.count()
+    The checkpoint is local (blocks on the executors: fast, not
+    resilient), or reliable when ``checkpoint_dir`` is given, so a cluster
+    run survives executor loss mid-fixpoint (SURVEY.md §4.2 #1). With no
+    scalars the checkpoint is eager: one job beyond ``df``'s shuffle
+    stages, and measured faster than the lazy shape on a one-shuffle step
+    (medians of 15 interleaved reps on local[4], 4 cores: 150 vs 177 ms). With scalars it is lazy and :func:`_observe` reads
+    them: the observed write scans every partition, so it fills the
+    checkpoint and returns the scalars in the same one job. ``scan(ck)``
+    widens what that write reads (the seeded dispatch probe adds the
+    edges' ``src`` ids); it must read every row of ``ck``."""
+    reliable = _set_checkpoint_dir_once(df, checkpoint_dir)
+    eager = not scalars
+    ck = df.checkpoint(eager) if reliable else df.localCheckpoint(eager)
+    return ck, {} if eager else _observe(scan(ck) if scan else ck, *scalars)
 
 
 class Fixpoint:
@@ -406,22 +397,22 @@ class Fixpoint:
       released after the first in-loop barrier has filled it, leaving ONE
       copy at steady state. ``layout=None`` keeps the relation as given
       (already src-laid-out, or read on both orientations).
-    * **dispatch probe** (:meth:`start`) — ONE 1-row aggregate over state0,
-      whose full scan also completes state0's lazy checkpoint, yields the
-      vertex count ``n``, the broadcast decision (:func:`_broadcast_rule`
+    * **dispatch probe** (:meth:`start`) — the scalars of state0's
+      barrier (:func:`_barrier`, one job beyond state0's shuffle stages):
+      the vertex count ``n``, the broadcast decision (:func:`_broadcast_rule`
       on the measured id width), the salt decision (:func:`_salt_rule`;
       only ``salt="auto"`` reads the ``indeg`` column) and the caller's
       ``extras`` (``row``).
     * **state side** (:meth:`join`) — broadcast when the state fits, else
       shuffle-hash with the state as build side (:func:`_state_side`).
-    * **checkpointing** (:meth:`checkpoint`) — local, or reliable when a
-      ``checkpoint_dir`` is given; :meth:`run` places one after every
-      ``checkpoint_interval``-th superstep (0: the step places its own).
+    * **checkpointing** (:meth:`checkpoint`) — a :func:`_barrier`, local,
+      or reliable when a ``checkpoint_dir`` is given; :meth:`run` places
+      one after every ``checkpoint_interval``-th superstep (0: the step
+      places its own).
     * **convergence** (``run(converge=True)``, the min-relax loops: see
       :func:`min_relax`) — every superstep's barrier also counts the rows
-      its step flagged ``_changed``, in the same job
-      (:func:`_checkpoint_count`); the loop stops at the first superstep
-      that changes nothing, or at the caller's cap.
+      its step flagged ``_changed``, in the same job; the loop stops at
+      the first superstep that changes nothing, or at the caller's cap.
     * **hygiene** — one :func:`_gc_nudge` per superstep, and every cache
       the driver persisted is released when :meth:`run` returns. The
       relation is cached under :func:`giranking_spark.cache.cached`'s
@@ -439,7 +430,7 @@ class Fixpoint:
         checkpoint_interval: int = 1,
         caller_owned: bool = False,
     ):
-        self.reliable = _set_checkpoint_dir_once(edges, checkpoint_dir)
+        self.checkpoint_dir = checkpoint_dir
         self.interval = checkpoint_interval
         self._layout = layout
         # storageLevel is a driver-side cache-manager lookup: no Spark job
@@ -449,15 +440,15 @@ class Fixpoint:
         self._stale: DataFrame | None = None  # input copy of a layout swap
         self.changed = 0  # rows the last converge-mode barrier counted
 
-    def checkpoint(self, df: DataFrame) -> DataFrame:
-        """A superstep barrier in the run's checkpoint mode. Its full scan
-        of the edge relation fills a swapped layout copy, so the input copy
-        is released after the first one."""
-        df = _checkpoint(df, self.reliable)
+    def checkpoint(self, df: DataFrame, *scalars: Column) -> tuple[DataFrame, dict]:
+        """A superstep :func:`_barrier` in the run's checkpoint mode. Its
+        full scan of the edge relation fills a swapped layout copy, so the
+        input copy is released after the first one."""
+        out = _barrier(df, *scalars, checkpoint_dir=self.checkpoint_dir)
         if self._stale is not None:
             self._stale.unpersist()
             self._stale = None
-        return df
+        return out
 
     def start(
         self,
@@ -467,27 +458,29 @@ class Fixpoint:
         keys: tuple[str, ...] = ("id",),
         seeded: bool = False,
     ) -> DataFrame:
-        """Checkpoint state0 (must carry ``keys``, and ``indeg`` when
-        ``salt == "auto"``) and run the dispatch probe; returns the
-        checkpointed state and sets ``n``, ``bcast``, ``salt``, ``row``.
+        """Barrier state0 (must carry ``keys``, and ``indeg`` when
+        ``salt == "auto"``) with the dispatch probe as its scalars; returns
+        the checkpointed state and sets ``n``, ``bcast``, ``salt``, ``row``.
 
         ``n`` is state0's row count, unless ``seeded``: then state0 holds
         only seed rows and grows along the edges to every vertex they
         reach, so ``n`` bounds the grown state — the edges' distinct ``src``
-        ids (an HLL estimate read in the same job, inflated 5% so its ~2%
+        ids (an HLL estimate read in the same job: the barrier's write
+        scans state0 ∪ edges.src; inflated 5% so its ~2%
         error can only overcount and fall back to the always-safe
         shuffle-hash join), once per seed row when the state is keyed by
         more than ``id``. The row width is measured over ``keys``."""
-        # lazy: the probe's full scan fills the checkpoint in the same job
-        state = _checkpoint_lazy(state, self.reliable)
         self.keys = keys
         spark = state.sparkSession
-        rows, n_rows = state, F.count(F.lit(1))
+        scan, n_rows = None, F.count(F.lit(1))
         if seeded:
-            rows = state.withColumn("_s", F.lit(1)).unionByName(
-                self.edges.select(F.col("src").alias("_v")),
-                allowMissingColumns=True,
-            )
+
+            def scan(ck: DataFrame) -> DataFrame:
+                return ck.withColumn("_s", F.lit(1)).unionByName(
+                    self.edges.select(F.col("src").alias("_v")),
+                    allowMissingColumns=True,
+                )
+
             n_rows = F.count("_s")
         widths = [F.octet_length(F.col(k).cast("string")) for k in keys]
         probes = [
@@ -498,7 +491,10 @@ class Fixpoint:
             probes.append(F.approx_count_distinct("_v").alias("_nv"))
         if salt == "auto":
             probes += [F.max("indeg").alias("_mx"), F.sum("indeg").alias("_tot")]
-        self.row = row = rows.agg(*probes, *extras).first()
+        state, self.row = _barrier(
+            state, *probes, *extras, checkpoint_dir=self.checkpoint_dir, scan=scan
+        )
+        row = self.row
         self.n = int(row["_n"] or 0)
         if seeded:
             reach = int((row["_nv"] or 0) * 1.05)
@@ -549,11 +545,12 @@ class Fixpoint:
             for k in range(1, (iterations if self.n else 0) + 1):
                 state = step(state)
                 if converge:
-                    state, self.changed = _checkpoint_count(
-                        state, "_changed", self.reliable
+                    state, got = self.checkpoint(
+                        state, F.count_if("_changed").alias("changed")
                     )
+                    self.changed = got["changed"]
                 elif self.interval and k % self.interval == 0:
-                    state = self.checkpoint(state)
+                    state, _ = self.checkpoint(state)
                 # each barrier leaves the previous superstep's shuffle dead
                 _gc_nudge(state, self.n)
                 if observe is not None:
@@ -561,7 +558,7 @@ class Fixpoint:
                 if converge and not self.changed:
                     break
                 if then is not None:
-                    state = self.checkpoint(then(state))
+                    state, _ = self.checkpoint(then(state))
         finally:
             self.release()
         return state.drop("_changed") if converge else state

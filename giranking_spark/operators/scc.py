@@ -31,7 +31,8 @@ Scale posture (the 100 TB story):
   components, on the same fixpoint driver (operators/linkrank.py:
   min_relax, Fixpoint): edges ⋈ frontier → union self → min-aggregate,
   with per-round lineage truncation (localCheckpoint / reliable checkpoint)
-  and ONE scalar (changed count) to the driver.
+  and ONE scalar (changed count) to the driver, read in the barrier's own
+  job (linkrank.py:_barrier).
 - Peeling shrinks the live subgraph monotonically via semi-joins; the giant
   SCC (typically >25% of a web graph, Broder et al.) leaves in round one.
 - Adversarial long-chain DAGs degrade to O(V) rounds; the documented scale
@@ -41,15 +42,15 @@ Scale posture (the 100 TB story):
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from giranking_spark.cache import cached
 from giranking_spark.operators.linkrank import (
     Fixpoint,
-    _checkpoint,
-    _checkpoint_nrows,
-    _set_checkpoint_dir_once,
+    _barrier,
     min_relax,
     pointer_double,
 )
@@ -118,9 +119,11 @@ def strongly_connected_components(
         .unionByName(live_e.select(F.col("dst").alias("id")))
         .distinct()
     )
-    reliable = _set_checkpoint_dir_once(live_v, checkpoint_dir)
-    live_e = _checkpoint(live_e, reliable)
-    live_v, n_live = _checkpoint_nrows(live_v, reliable)
+
+    barrier = partial(_barrier, checkpoint_dir=checkpoint_dir)
+    rows = F.count(F.lit(1)).alias("n")  # a barrier scalar: {"n": row count}
+    live_e, _ = barrier(live_e)
+    live_v, live = barrier(live_v, rows)
     # assigned rows accumulate as a LIST of individually-checkpointed parts
     # (unioned lazily on return) — re-materializing the growing union every
     # round would copy O(rounds x V) rows
@@ -132,7 +135,7 @@ def strongly_connected_components(
         ).join(verts_df.select(F.col("id").alias("dst")), "dst", "left_semi")
 
     for _ in range(max_peel_rounds):
-        if n_live == 0:
+        if live["n"] == 0:
             break
         # Trim phase (FW-BW-Trim, Hong et al.): a vertex with no in-edge or
         # no out-edge in the live subgraph is a singleton SCC — assign it as
@@ -141,7 +144,7 @@ def strongly_connected_components(
         # fixpoints only the cyclic remainder. TWO trim steps fuse into one
         # materialization (chain peels from both ends two hops a job); a
         # batch with no change is the trim fixpoint.
-        while n_live > 0:
+        while live["n"] > 0:
             v1 = live_v.join(
                 live_e.select(F.col("src").alias("id")).distinct(),
                 "id",
@@ -152,7 +155,7 @@ def strongly_connected_components(
                 "left_semi",
             )
             e1 = _restrict(live_e, v1)
-            keep, n_keep = _checkpoint_nrows(
+            keep, kept = barrier(
                 v1.join(
                     e1.select(F.col("src").alias("id")).distinct(),
                     "id",
@@ -162,41 +165,35 @@ def strongly_connected_components(
                     "id",
                     "left_semi",
                 ),
-                reliable,
+                rows,
             )
-            if n_keep == n_live:
+            if kept == live:
                 break
-            parts.append(
-                _checkpoint(
-                    live_v.join(keep, "id", "left_anti").select(
-                        "id", F.col("id").alias("scc_id")
-                    ),
-                    reliable,
+            trimmed, _ = barrier(
+                live_v.join(keep, "id", "left_anti").select(
+                    "id", F.col("id").alias("scc_id")
                 )
             )
-            live_v = keep
-            live_e = _checkpoint(_restrict(live_e, live_v), reliable)
-            n_live = n_keep
-        if n_live == 0:
+            parts.append(trimmed)
+            live_v, live = keep, kept
+            live_e, _ = barrier(_restrict(live_e, live_v))
+        if live["n"] == 0:
             break
         fwd = min_reach_labels(live_e, live_v, checkpoint_dir)
         bwd = min_reach_labels(_reverse(live_e), live_v, checkpoint_dir)
-        done = _checkpoint(
+        done, _ = barrier(
             fwd.join(bwd.select("id", F.col("lbl").alias("_b")), "id")
             .filter(F.col("lbl") == F.col("_b"))
-            .select("id", F.col("lbl").alias("scc_id")),
-            reliable,
+            .select("id", F.col("lbl").alias("scc_id"))
         )
         parts.append(done)
-        live_v, n_live = _checkpoint_nrows(
-            live_v.join(done, "id", "left_anti"), reliable
-        )
-        live_e = _checkpoint(_restrict(live_e, live_v), reliable)
+        live_v, live = barrier(live_v.join(done, "id", "left_anti"), rows)
+        live_e, _ = barrier(_restrict(live_e, live_v))
     # checked AFTER the loop, not via for/else: a graph that converges on
     # exactly the last allowed round leaves the for without break (the
-    # n_live == 0 guard only runs at the top of the NEXT iteration) and a
-    # for/else would raise despite n_live == 0.
-    if n_live > 0:
+    # empty-live guard only runs at the top of the NEXT iteration) and a
+    # for/else would raise despite no live vertex.
+    if live["n"] > 0:
         raise ValueError(
             f"SCC peeling did not finish in {max_peel_rounds} rounds"
         )
@@ -264,8 +261,6 @@ def bowtie_classes(
     spark = edges.sparkSession
     width = int(spark.conf.get("spark.sql.shuffle.partitions"))
     e = edges.select("src", "dst").distinct().coalesce(width)
-    reliable = _set_checkpoint_dir_once(e, checkpoint_dir)
-
     def _flag(s: DataFrame, name: str) -> DataFrame:
         return s.select("id", F.lit(True).alias(name))
 
@@ -307,4 +302,6 @@ def bowtie_classes(
             .join(_flag(from_in, "_fi"), "id", "left")
             .join(_flag(to_out, "_to"), "id", "left")
         )
-        return _checkpoint(lab.select("id", cls.alias("cls")), reliable)
+        return _barrier(
+            lab.select("id", cls.alias("cls")), checkpoint_dir=checkpoint_dir
+        )[0]

@@ -1376,9 +1376,9 @@ def motif_census(e: DataFrame) -> DataFrame:
     see q_graph_motifs for semantics. The edge relation is materialized
     once (eager localCheckpoint) so the three motif branches share one
     derivation instead of recomputing it per branch."""
-    from giranking_spark.operators.linkrank import _checkpoint
+    from giranking_spark.operators.linkrank import _barrier
 
-    e = _checkpoint(e.select("src", "dst"))
+    e, _ = _barrier(e.select("src", "dst"))
     ab = e.select(F.col("src").alias("a"), F.col("dst").alias("b"))
     bc = e.select(F.col("src").alias("b"), F.col("dst").alias("c"))
     ca = e.select(F.col("src").alias("c"), F.col("dst").alias("a"))
@@ -1446,9 +1446,10 @@ def ktruss_edges(e: DataFrame, k: int = KTRUSS_K,
     a LEFT SEMI join keeps qualifying edges — all equi-joins off
     checkpointed state; one scalar (edge count) per round, early exit at
     the fixpoint."""
-    from giranking_spark.operators.linkrank import _checkpoint_nrows
+    from giranking_spark.operators.linkrank import _barrier
 
-    cur, n = _checkpoint_nrows(e.select("u", "v").distinct())
+    rows = F.count(F.lit(1)).alias("n")  # a barrier scalar: {"n": edge rows}
+    cur, size = _barrier(e.select("u", "v").distinct(), rows)
     for _ in range(rounds):
         e1, e2, e3 = cur.alias("e1"), cur.alias("e2"), cur.alias("e3")
         tri = (
@@ -1472,12 +1473,12 @@ def ktruss_edges(e: DataFrame, k: int = KTRUSS_K,
             .agg(F.count(F.lit(1)).alias("s"))
             .filter(F.col("s") >= k - 2)
         )
-        cur, n2 = _checkpoint_nrows(
-            cur.join(sup.select("u", "v"), ["u", "v"], "left_semi")
+        cur, kept = _barrier(
+            cur.join(sup.select("u", "v"), ["u", "v"], "left_semi"), rows
         )
-        if n2 == n:
+        if kept == size:
             break
-        n = n2
+        size = kept
     return cur
 
 

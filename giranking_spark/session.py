@@ -42,7 +42,7 @@ def get_spark(app_name: str = "giranking-spark", cpus: int | None = None) -> Spa
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # reclaim superseded reliable-checkpoint data inside long rank-loop
-        # runs (one setCheckpointDir call per run, see linkrank._checkpoint)
+        # runs (one setCheckpointDir call per run, see linkrank._barrier)
         .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
         # ContextCleaner only learns a localCheckpoint block is dead after a
         # JVM GC; the default periodic-GC interval (30min) lets hundreds of

@@ -88,6 +88,9 @@ QUERY_KEYS = [
     # the frontier loops on the same driver
     "graph_bowtie",
     "graph_betweenness",
+    # HyperBall's cached edge relation
+    "graph_hyperball",
+    "graph_harmonic",
     # every other query whose reuse cache is a cached() block
     "dedup_ngram_jaccard",
     "dedup_minhash_lsh",
@@ -187,10 +190,13 @@ def test_fixpoints_share_one_checkpoint_dir(spark, tmp_path):
     from giranking_spark.operators.linkrank import Fixpoint
 
     e = spark.createDataFrame([(1, 2), (2, 3)], "src long, dst long")
+    sc = spark.sparkContext
     for _ in range(2):
         fx = Fixpoint(e, layout=None, checkpoint_dir=str(tmp_path))
-        assert fx.reliable
+        assert fx.checkpoint_dir == str(tmp_path)
         state = fx.start(e.select(F.col("src").alias("id"), F.lit(1.0).alias("x")))
+        # the loop checkpoints reliably, into a subdirectory of tmp_path
+        assert sc.getCheckpointDir().startswith(f"file:{tmp_path}/")
         fx.run(state, lambda s: s.select("id", (F.col("x") * 2).alias("x")), 2)
     assert len([p for p in tmp_path.iterdir() if p.is_dir()]) == 1
 

@@ -328,39 +328,42 @@ def test_fused_rank_step_single_shuffle(spark):
     assert "BatchEvalPython" not in plan
 
 
-#: Spark jobs each fixpoint-loop query launched (build + noop write at
-#: SF_SMALL) at the commit before its loop moved onto the shared fixpoint
-#: driver (operators/linkrank.py:Fixpoint); the driver must add none.
+#: Spark jobs each loop query launches (build + noop write at SF_SMALL,
+#: under the harness below), pinned at the count measured once the loops
+#: read their scalars at the superstep barrier
+#: (operators/linkrank.py:_barrier); a change may lower them, never raise.
 FIXPOINT_JOBS_BEFORE = {
-    "linkrank_scores": 60,
-    "trustrank_scores": 29,
-    "rank_residuals": 37,
-    "graph_ppr": 38,
-    "graph_weighted_rank": 32,
-    "graph_katz": 33,
-    "crawl_opic_scores": 45,
-    "graph_hits": 32,
-    "graph_salsa": 47,
-    "graph_label_prop": 23,
+    # the rank loops on the fixpoint driver
+    "linkrank_scores": 57,
+    "trustrank_scores": 25,
+    "rank_residuals": 34,
+    "graph_ppr": 35,
+    "graph_weighted_rank": 24,
+    "graph_katz": 29,
+    "crawl_opic_scores": 37,
+    "graph_hits": 29,
+    "graph_salsa": 40,
+    "graph_label_prop": 20,
     # the min-relax loops (components, BFS, SSSP, per-seed BFS, SCC reach
-    # labels), measured the same way before their port
-    "graph_components": 27,
-    "graph_component_sizes": 28,
-    "graph_bfs_dist": 29,
-    "graph_sssp": 29,
-    "graph_diameter_est": 12,
-    "graph_ecc_sample": 28,
-    "graph_wcc_bfs_layers": 28,
+    # labels)
+    "graph_components": 21,
+    "graph_component_sizes": 22,
+    "graph_bfs_dist": 22,
+    "graph_sssp": 22,
+    "graph_diameter_est": 10,
+    "graph_ecc_sample": 23,
+    "graph_wcc_bfs_layers": 21,
     "graph_scc": 9,
-    "dedup_clusters": 26,
-    # k-truss, measured the same way before its checkpoint-then-count
-    # barriers were fused
+    "dedup_clusters": 21,
+    # the peel loops
     "graph_ktruss": 9,
+    "graph_coreness": 9,
     # the frontier loops (k-core peel, bow-tie closures, betweenness
-    # sweeps), measured the same way before their port
-    "graph_kcore": 15,
-    "graph_bowtie": 31,
-    "graph_betweenness": 14,
+    # sweeps) and HyperBall
+    "graph_kcore": 11,
+    "graph_bowtie": 25,
+    "graph_betweenness": 12,
+    "graph_hyperball": 10,
 }
 
 
